@@ -1557,7 +1557,7 @@ class KeyedTable:
             if st == "ok":
                 mapping, zones = sub
         if zones is None:
-            mapping, _, zones = log.snapshot_view(version)  # read-only
+            mapping, _, zones = log.snapshot_view(v)  # read-only
         if zones is None:
             return None
         # Encode each requested tuple's zone-mapped components once.  A
@@ -1679,8 +1679,9 @@ class KeyedTable:
                 "lookup_stats requires commit_protocol='manifest' or "
                 "a manifest-backed store"
             )
-        pm, ids, _, _ = self._lookup_plan(key_values, version)
+        # one listing: the plan and the totals describe the same snapshot
         v = version if version is not None else log.latest_version()
+        pm, ids, _, _ = self._lookup_plan(key_values, v)
         totals = log.snapshot_totals(v) if hasattr(log, "snapshot_totals") else None
         if totals is not None:
             _, buckets_total = totals
@@ -1690,11 +1691,11 @@ class KeyedTable:
                 else None
             )
             if sub is None:
-                full, _, _ = log.snapshot_view(version)
+                full, _, _ = log.snapshot_view(v)
                 sub = {b: full.get(b, []) for b in ids}
             cand = sum(len(fl) for fl in sub.values())
         else:
-            full, _, _ = log.snapshot_view(version)
+            full, _, _ = log.snapshot_view(v)
             buckets_total = len(full)
             cand = sum(len(full.get(b, [])) for b in ids)
         scanned = cand if pm is None else sum(len(fl) for fl in pm.values())
@@ -1712,25 +1713,46 @@ class KeyedTable:
         self, key_values: Sequence, version: int | None
     ) -> tuple:
         """Shared planning half of ``lookup()``/``lookup_stats()``:
-        ``(pruned_mapping_or_None, bucket_ids, key_df, schema)``.  One
-        bounded collect resolves each key's bucket id AND its bloom
-        hash (computed JVM-side so it matches the sidecar writer's bit
-        positions exactly); zone pruning and bloom pruning compose.
-        The schema and key DataFrame return to the caller so
-        ``lookup()`` doesn't re-read the sidecar or rebuild the keys
-        (ADVICE r11: two extra driver round-trips on a
-        latency-sensitive path)."""
-        from pyspark.sql.types import StructType
+        ``(pruned_mapping_or_None, bucket_ids, key_df, schema)``.
+        ``version`` is the snapshot the caller already resolved (None
+        only without a snapshot log or snapshot), so planning lists the
+        manifest log no further.
+
+        The key list is a ``LocalRelation``: an Arrow table typed by the
+        table's key schema, each value first checked and converted by
+        the same verifier and ``toInternal`` that ``createDataFrame``
+        applies to Python rows (a wrong-typed key still raises
+        ``TypeError``; a naive timestamp keeps its meaning).  Building
+        it and collecting each key's bucket id AND bloom hash (computed
+        JVM-side so it matches the sidecar writer's bit positions
+        exactly) runs no Spark job.  Zone pruning and bloom pruning compose.  The schema and key
+        DataFrame return to the caller so ``lookup()`` doesn't re-read
+        the sidecar or rebuild the keys."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+        from pyspark.sql.types import StructType, _make_type_verifier
 
         schema = self._read_schema_sidecar()
         if schema is None:
             raise FileNotFoundError(f"KeyedTable at {self.path} has no schema")
-        key_fields = [schema[k] for k in self.keys]
+        key_schema = StructType([schema[k] for k in self.keys])
         rows = [
             tuple(v) if isinstance(v, (tuple, list)) else (v,)
             for v in key_values
         ]
-        kdf = self.spark.createDataFrame(rows, StructType(key_fields))
+        verify = _make_type_verifier(key_schema)
+        for r in rows:
+            verify(r)
+        cols = [
+            pa.array(
+                [f.dataType.toInternal(r[i]) for r in rows],
+                type=to_arrow_type(f.dataType),
+            )
+            for i, f in enumerate(key_schema.fields)
+        ]
+        kdf = self.spark.createDataFrame(
+            pa.Table.from_arrays(cols, names=key_schema.names), key_schema
+        )
         sel = kdf.select(
             self._bucket_expr().alias("__b"),
             self._kbloom_hash_expr().alias("__h"),
@@ -1742,22 +1764,16 @@ class KeyedTable:
             # bloom-prune the candidate files: compose with zone
             # pruning when available, else fetch just the requested
             # buckets' file lists (bounded by the lookup)
-            if pm is None:
-                v = (
-                    version
-                    if version is not None
-                    else self._log.latest_version()
-                )
-                if v is not None:
-                    sub = self._log.bucket_mapping_distributed(ids, v)
-                    if sub is None:
-                        full, _, _ = self._log.snapshot_view(version)
-                        sub = {
-                            b: list(full.get(b, []))
-                            for b in ids
-                            if full.get(b)
-                        }
-                    pm = sub
+            if pm is None and version is not None:
+                sub = self._log.bucket_mapping_distributed(ids, version)
+                if sub is None:
+                    full, _, _ = self._log.snapshot_view(version)
+                    sub = {
+                        b: list(full.get(b, []))
+                        for b in ids
+                        if full.get(b)
+                    }
+                pm = sub
             if pm is not None:
                 pm = self._bloom_prune(pm, key_hashes)
         return pm, ids, kdf, schema
@@ -1776,6 +1792,11 @@ class KeyedTable:
         the direct layout).  ``key_values``: scalars for single-key
         tables, or tuples in ``self.keys`` order.  Only the bounded
         key list and its bucket ids cross the driver — never data.
+        The key list is a local relation (an Arrow table typed by the
+        key schema), so planning runs no Spark job; on an inline
+        manifest a lookup runs two, the key broadcast and the scan.
+        The snapshot version is resolved once, so every planning step
+        and the scan read the same snapshot.
 
         When key columns are zone-mapped, file-grain zone pruning
         COMPOSES with the hash pruning: inside each key's bucket only
@@ -1789,6 +1810,9 @@ class KeyedTable:
         UNSORTED case too: inside the key's bucket, rolled files whose
         bloom excludes every requested key never open.  Conservative
         as always: files without bounds or sidecars stay."""
+        log = self._snapshot_log()
+        if version is None and log is not None:
+            version = log.latest_version()
         pm, ids, kdf, schema = self._lookup_plan(key_values, version)
         if pm is not None and self._log is not None:
             df = self._read_manifest(
@@ -1799,10 +1823,9 @@ class KeyedTable:
             if active_only:
                 df = df.filter(F.col(self.soft_delete_col))
         elif self._log is not None:
-            v = version if version is not None else self._log.latest_version()
             sub = (
-                self._log.bucket_mapping_distributed(ids, v)
-                if v is not None
+                self._log.bucket_mapping_distributed(ids, version)
+                if version is not None
                 else None
             )
             if sub is not None:  # bounded fetch, no snapshot walk (r11)

@@ -61,7 +61,7 @@ class ChangeReplicator:
     ``sync()`` is resumable and idempotent at the commit level: it
     applies only source versions newer than the last applied one and
     returns how many commits it applied.  The watermark is persisted in
-    a ``_qss_applied.json`` sidecar next to the replica (written after
+    a ``_qss_applied-<v>.json`` sidecar next to the replica (written after
     each applied commit), so a restarted process resumes incrementally
     instead of re-running the snapshot bootstrap; the bootstrap itself
     is idempotent (row-image upserts), so a lost sidecar degrades to

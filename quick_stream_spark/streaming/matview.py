@@ -221,7 +221,7 @@ class CdcAggView:
     :class:`~quick_stream_spark.operators.replicate.ChangeReplicator`;
     the view's stored ``_src_version`` doubles as the transaction id,
     so a replayed commit is absorbed as a no-op.  The watermark is
-    persisted DURABLY (``_qss_applied.json`` sidecar next to the view,
+    persisted DURABLY (``_qss_applied-<v>.json`` sidecar next to the view,
     written after each apply) because signed deltas — unlike
     ChangeReplicator's idempotent row images — would double-count if a
     restarted process re-ran the bootstrap: a new instance loads the

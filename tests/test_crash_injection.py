@@ -516,3 +516,48 @@ def test_zone_maps_are_crash_atomic_with_their_snapshot(
            t.read_range("modified_date", lo=cut).collect()}
     assert got == {(2, "b2")}
     assert t.agg_fast("modified_date", "max") == datetime(2024, 1, 20)
+
+
+def test_applied_watermark_survives_crash_before_rename(
+    spark, tmp_table_dir, monkeypatch
+):
+    """The CDC watermark publish (operators/progress.py) must never pass
+    through a state with no watermark: with the rename into place made
+    to fail after the temp file is written, ``read_applied`` still
+    returns the previous watermark, and a retried publish lands and
+    prunes the older file."""
+    from quick_stream_spark.operators import progress
+
+    path = os.path.join(tmp_table_dir, "view")
+    progress.write_applied(spark, path, 3)
+    assert progress.read_applied(spark, path) == 3
+
+    real_fs = progress._fs
+
+    class _CrashOnRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            raise RuntimeError("injected crash before rename")
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def crashing_fs(spark_, p):
+        fs, jp, jvm = real_fs(spark_, p)
+        return _CrashOnRename(fs), jp, jvm
+
+    monkeypatch.setattr(progress, "_fs", crashing_fs)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        progress.write_applied(spark, path, 4)
+    monkeypatch.setattr(progress, "_fs", real_fs)
+    assert progress.read_applied(spark, path) == 3
+
+    progress.write_applied(spark, path, 4)
+    assert progress.read_applied(spark, path) == 4
+    names = sorted(n for n in os.listdir(path) if n.startswith("_qss_applied"))
+    assert names == ["_qss_applied-4.json"]
+    # re-publishing the current watermark (a retried apply) is a no-op
+    progress.write_applied(spark, path, 4)
+    assert progress.read_applied(spark, path) == 4
