@@ -132,6 +132,45 @@ def _fs(spark: SparkSession, path: str):
     return p.getFileSystem(hconf), p, jvm
 
 
+def put_if_absent(spark: SparkSession, dir_path: str, name: str, body: bytes) -> bool:
+    """Atomically create ``dir_path/name`` holding ``body`` unless it
+    already exists; True when this call created it.  Write-temp, then
+    claim the final name: on a LOCAL filesystem Hadoop's ``rename`` is
+    check-then-act (two concurrent renames can both succeed), so the
+    claim is a hard link (POSIX link(2) is atomic-exclusive); on
+    HDFS-like stores ``rename`` is atomic-no-overwrite by contract.
+    The temp file is dot-prefixed, so listings that glob published
+    names never see it."""
+    fs, _, jvm = _fs(spark, dir_path)
+    tmp = jvm.org.apache.hadoop.fs.Path(
+        os.path.join(dir_path, f".tmp-{uuid.uuid4().hex}-{name}")
+    )
+    out = fs.create(tmp, True)
+    out.write(bytearray(body))
+    out.close()
+    final = jvm.org.apache.hadoop.fs.Path(os.path.join(dir_path, name))
+    if fs.getScheme() == "file":
+        try:
+            jvm.java.nio.file.Files.createLink(
+                jvm.java.io.File(final.toUri().getPath()).toPath(),
+                jvm.java.io.File(tmp.toUri().getPath()).toPath(),
+            )
+            fs.delete(tmp, False)
+            return True
+        except Exception as exc:  # Py4JJavaError wrapping the Java exception
+            fs.delete(tmp, False)
+            java_exc = getattr(exc, "java_exception", None)
+            if java_exc is not None and "FileAlreadyExistsException" in (
+                java_exc.getClass().getName()
+            ):
+                return False
+            raise
+    if fs.rename(tmp, final):
+        return True
+    fs.delete(tmp, False)
+    return False
+
+
 def _vacuum_listing_row(abs_p: str, name: str, table_root: str) -> dict | None:
     """Classify one commits-tree entry for vacuum's reclaim join:
     data parquet (``pq``, rel = its own table-root-relative path) or a
@@ -1312,34 +1351,7 @@ class ManifestLog:
         return self._try_publish(mapping, stats, version, zones=zones, op=op)
 
     def _put_if_absent(self, body: bytes, version: int) -> bool:
-        fs, _, jvm = _fs(self.spark, self.dir)
-        tmp_name = os.path.join(self.dir, f".tmp-{uuid.uuid4().hex}.json")
-        tmp = jvm.org.apache.hadoop.fs.Path(tmp_name)
-        out = fs.create(tmp, True)
-        out.write(bytearray(body))
-        out.close()
-        final_name = os.path.join(self.dir, f"v{version}.json")
-        final = jvm.org.apache.hadoop.fs.Path(final_name)
-        if fs.getScheme() == "file":
-            try:
-                jvm.java.nio.file.Files.createLink(
-                    jvm.java.io.File(final.toUri().getPath()).toPath(),
-                    jvm.java.io.File(tmp.toUri().getPath()).toPath(),
-                )
-                fs.delete(tmp, False)
-                return True
-            except Exception as exc:  # Py4JJavaError wrapping the Java exception
-                fs.delete(tmp, False)
-                java_exc = getattr(exc, "java_exception", None)
-                if java_exc is not None and "FileAlreadyExistsException" in (
-                    java_exc.getClass().getName()
-                ):
-                    return False
-                raise
-        if fs.rename(tmp, final):
-            return True
-        fs.delete(tmp, False)
-        return False
+        return put_if_absent(self.spark, self.dir, f"v{version}.json", body)
 
     def commit(
         self,

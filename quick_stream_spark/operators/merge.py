@@ -9,9 +9,9 @@ the values of that key's winning record; soft-deleted keys keep their row
 with ``row_active = false``.
 
 This module implements those semantics on a **bucket-partitioned parquet
-table** (Delta Lake is not available in this environment; the interface
-is the same MERGE contract, so a Delta/Iceberg backend can be swapped in
-behind ``KeyedTable`` unchanged).
+table**, rewritten in place (``commit_protocol='direct'``) or published as
+atomic snapshots through the manifest commit log
+(``commit_protocol='manifest'``, operators/commitlog.py).
 
 Scale design (100 TB posture):
   - The table is hash-bucketed on the key columns into ``num_buckets``
@@ -116,9 +116,9 @@ def compute_commit_meta(
     """Per-bucket ``[rows, active_rows]`` stats plus PER-FILE zone-map
     ``{col: [min, max]}`` bounds for a commit's freshly-written files,
     in ONE footer-weight aggregation whose result is bounded by the
-    commit's file count, never data volume.  Shared by the inline
-    manifest layout and ``LogStructuredBucketStore`` so both publish
-    identical metadata.
+    commit's file count, never data volume — the manifest commit's
+    fallback when the write job's ``Observation`` cannot carry the
+    metadata (zone maps, or too many buckets to enumerate).
 
     Returns ``(stats, zones)``: ``stats`` is ``None`` when the schema
     has no liveness column (honest scan fallback for ``count_fast``);
@@ -229,7 +229,6 @@ class KeyedTable:
         num_buckets: int = 16,
         soft_delete_col: str = "row_active",
         commit_protocol: str = "direct",
-        store=None,
         zone_map_cols: Sequence[str] | None = None,
         manifest_checkpoint_interval: int = 16,
         manifest_parquet_threshold: int = 50_000,
@@ -240,13 +239,6 @@ class KeyedTable:
             raise ValueError(
                 f"commit_protocol must be 'direct' or 'manifest', got {commit_protocol!r}"
             )
-        # pluggable physical storage (operators/backends.py BucketStore):
-        # None = the inline bucket-partitioned parquet layout.  The
-        # manifest commit protocol is part of the parquet layout, not of
-        # the merge contract, so the two don't compose.
-        if store is not None and commit_protocol != "direct":
-            raise ValueError("a custom store implies commit_protocol='direct'")
-        self._store = store
         self.spark = spark
         self.path = path
         self.keys = list(keys)
@@ -255,21 +247,6 @@ class KeyedTable:
         self.tie_break = tie_break
         self.num_buckets = int(num_buckets)
         self.soft_delete_col = soft_delete_col
-        # A stats-publishing store must count the SAME liveness column
-        # this table maintains — a silently different column would make
-        # count_fast(active_only=True) return wrong counts.  Stores
-        # default their column to None (= adopt ours here); an explicit
-        # mismatch is a construction-time error, not a wrong answer.
-        if store is not None and hasattr(store, "_soft_delete_col"):
-            if store._soft_delete_col is None:
-                store._soft_delete_col = soft_delete_col
-            elif store._soft_delete_col != soft_delete_col:
-                raise ValueError(
-                    f"store counts soft-delete column "
-                    f"{store._soft_delete_col!r} but this table maintains "
-                    f"{soft_delete_col!r}; per-bucket active-row stats "
-                    "would be computed on the wrong column"
-                )
         # zone maps: PER-FILE min/max for these columns ride every
         # snapshot commit (the Delta add-file data-skipping stats
         # analog); read_range() opens only the files whose bounds
@@ -278,15 +255,6 @@ class KeyedTable:
         # "rows modified since T" scan opens ONLY the files the
         # commits since T actually wrote, instead of the whole table.
         self.zone_map_cols = tuple(zone_map_cols) if zone_map_cols else ()
-        if store is not None and hasattr(store, "_zone_map_cols"):
-            if store._zone_map_cols is None:
-                store._zone_map_cols = self.zone_map_cols
-            elif tuple(store._zone_map_cols) != self.zone_map_cols:
-                raise ValueError(
-                    f"store tracks zone-map columns "
-                    f"{tuple(store._zone_map_cols)!r} but this table asked "
-                    f"for {self.zone_map_cols!r}"
-                )
         # Bucketing-properties guard: bucket = hash(keys) % num_buckets
         # is BAKED INTO the physical layout, so reopening an existing
         # table with different keys or bucket count silently corrupts
@@ -294,10 +262,8 @@ class KeyedTable:
         # second row — reproduced in tests/test_table_properties.py).
         # First write persists the properties next to the data; every
         # construction over an existing table validates against them.
-        # A custom store owns its own layout and is exempt.
         self._props_written = False
-        if store is None:
-            self._check_table_properties()
+        self._check_table_properties()
         # "direct" = in-place dynamic partition overwrite (fast, but a
         # crash mid-write can mix old and new buckets); "manifest" =
         # append-only data files published by an atomic snapshot
@@ -369,9 +335,7 @@ class KeyedTable:
     def exists(self) -> bool:
         if self._exists_cache:
             return True
-        if self._store is not None:
-            found = self._store.exists()
-        elif self._log is not None:
+        if self._log is not None:
             found = self._log.latest_version() is not None
         else:
             fs, p, _ = _hadoop_fs(self.spark, self.path)
@@ -404,22 +368,11 @@ class KeyedTable:
             return self._read_manifest(
                 active_only=active_only, with_bucket=with_bucket, version=version
             )
-        if version is not None and not self._store_time_travel():
+        if version is not None:
             raise ValueError(
-                "version time travel requires commit_protocol='manifest' "
-                "or a manifest-backed store"
+                "version time travel requires commit_protocol='manifest'"
             )
         schema = self._read_schema_sidecar()
-        if self._store is not None:
-            if version is not None:
-                df = self._store.read_version(schema, version)
-            else:
-                df = self._store.read(schema)
-            if active_only:
-                df = df.filter(F.col(self.soft_delete_col))
-            if not with_bucket:
-                df = df.drop(BUCKET_COL)
-            return df
         try:
             reader = self.spark.read
             if schema is not None:
@@ -511,18 +464,11 @@ class KeyedTable:
 
     def _read_snapshot(self, version: int, bucket_ids: list[int]) -> DataFrame:
         """A historical snapshot restricted to ``bucket_ids``, WITHOUT
-        the bucket column — the change-data read, routed to the inline
-        manifest io or the store's versioned reader."""
-        if self._log is not None:
-            sub = self._log.bucket_mapping_distributed(bucket_ids, version)
-            if sub is not None:  # bounded fetch on parquet checkpoints
-                return self._read_manifest(
-                    version=version, mapping_override=sub
-                )
-            return self._read_manifest(version=version, bucket_ids=bucket_ids)
-        return self._store.read_version(
-            self._read_schema_sidecar(), version, bucket_ids
-        ).drop(BUCKET_COL)
+        the bucket column — the change-data read."""
+        sub = self._log.bucket_mapping_distributed(bucket_ids, version)
+        if sub is not None:  # bounded fetch on parquet checkpoints
+            return self._read_manifest(version=version, mapping_override=sub)
+        return self._read_manifest(version=version, bucket_ids=bucket_ids)
 
     def _write_manifest_commit(
         self,
@@ -955,15 +901,10 @@ class KeyedTable:
             self.last_merge_stats = None
 
     def vacuum(self, keep_versions: int = 1) -> int:
-        """Reclaim unreferenced data files (manifest protocol or a
-        manifest-backed store)."""
-        log = self._snapshot_log()
-        if log is None:
-            raise ValueError(
-                "vacuum requires commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
-        return log.vacuum(keep_versions)
+        """Reclaim unreferenced data files (manifest protocol only)."""
+        if self._log is None:
+            raise ValueError("vacuum requires commit_protocol='manifest'")
+        return self._log.vacuum(keep_versions)
 
     def erase(self, deletes: DataFrame) -> int:
         """Compliance erasure (GDPR right-to-be-forgotten flow): hard-
@@ -976,10 +917,9 @@ class KeyedTable:
         hard_delete already rewrites the touched buckets in place, so
         erase degenerates to hard_delete (returns 0)."""
         self.hard_delete(deletes)
-        log = self._snapshot_log()
-        if log is None:
+        if self._log is None:
             return 0
-        return log.vacuum(keep_versions=1)
+        return self._log.vacuum(keep_versions=1)
 
     def history(self) -> DataFrame:
         """Per-commit audit log, oldest first — the Delta DESCRIBE
@@ -999,12 +939,8 @@ class KeyedTable:
         coverage is absent, never a guess.  Vacuumed versions drop
         out; the collapse retains the oldest kept commit's own op and
         timestamp."""
-        log = self._snapshot_log()
-        if log is None:
-            raise ValueError(
-                "history requires commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
+        if self._log is None:
+            raise ValueError("history requires commit_protocol='manifest'")
         rows = [
             (
                 r["version"],
@@ -1018,7 +954,7 @@ class KeyedTable:
                 r["num_rows_removed"],
                 r["rows_total"],
             )
-            for r in log.history()
+            for r in self._log.history()
         ]
         return self.spark.createDataFrame(
             rows,
@@ -1037,21 +973,17 @@ class KeyedTable:
         copied or deleted (the republished files are still protected
         from vacuum because the newest manifest references them).
         Returns the new snapshot version."""
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
-            raise ValueError(
-                "restore requires commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
-        if hasattr(log, "restore_bounded"):
-            # pointer-layout (big) tables: the restored checkpoint is
-            # built distributedly from the target's own chain — the
-            # snapshot never materializes on the driver (r11 verdict
-            # ask #2); None = inline head, take the materialized path
-            # below (bounded by the parquet threshold by construction)
-            v = log.restore_bounded(version, op="restore")
-            if v is not None:
-                return v
+            raise ValueError("restore requires commit_protocol='manifest'")
+        # pointer-layout (big) tables: the restored checkpoint is built
+        # distributedly from the target's own chain — the snapshot
+        # never materializes on the driver (r11 verdict ask #2); None =
+        # inline head, take the materialized path below (bounded by the
+        # parquet threshold by construction)
+        v = log.restore_bounded(version, op="restore")
+        if v is not None:
+            return v
         mapping = log.read(version)  # raises on unknown version
         return log.commit(
             mapping,
@@ -1095,14 +1027,10 @@ class KeyedTable:
         skipped.  Rule of thumb: replicas hold versions and call
         read_changes; analytical consumers hold watermarks and call
         read_range."""
-        log = self._snapshot_log()
-        if log is None or (self._log is None and not self._store_time_travel()):
-            raise ValueError(
-                "read_changes requires commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
-        map_from = log.read(from_version)
-        map_to = log.read(to_version)
+        if self._log is None:
+            raise ValueError("read_changes requires commit_protocol='manifest'")
+        map_from = self._log.read(from_version)
+        map_to = self._log.read(to_version)
         changed = sorted(
             b
             for b in set(map_from) | set(map_to)
@@ -1165,14 +1093,10 @@ class KeyedTable:
         version-based and value-based catch-up (see
         :meth:`read_changes`) compares this against
         ``skipping_stats({version_col: (T, None)})``."""
-        log = self._snapshot_log()
-        if log is None:
-            raise ValueError(
-                "cdc_stats requires commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
-        map_from = log.read(from_version)
-        map_to = log.read(to_version)
+        if self._log is None:
+            raise ValueError("cdc_stats requires commit_protocol='manifest'")
+        map_from = self._log.read(from_version)
+        map_to = self._log.read(to_version)
         changed = {
             b
             for b in set(map_from) | set(map_to)
@@ -1192,42 +1116,21 @@ class KeyedTable:
             "opened_fraction": round(opened / total, 6) if total else 0.0,
         }
 
-    def _snapshot_log(self):
-        """The table's snapshot log: the inline manifest in manifest
-        mode, or the one owned by a manifest-backed store (the logstore
-        backend); None for the direct parquet layout."""
-        return self._log or getattr(self._store, "_log", None)
-
-    def _store_time_travel(self):
-        """True when snapshot ops should route through the store's
-        versioned reader instead of the inline manifest io."""
-        return self._log is None and hasattr(self._store, "read_version")
-
     def snapshot_versions(self) -> list[int]:
-        log = self._snapshot_log()
-        if log is None:
-            raise ValueError(
-                "snapshots require commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
-        return log.versions()
+        if self._log is None:
+            raise ValueError("snapshots require commit_protocol='manifest'")
+        return self._log.versions()
 
     def count_fast(self, active_only: bool = False, version: int | None = None) -> int:
         """COUNT(*) (or active-row count) answered from MANIFEST
         METADATA only — no data file is opened, no job runs (the Delta
         'aggregate pushdown to stats' analog).  Every commit publishes
         per-bucket row counts atomically with its snapshot, so the
-        answer is exact for any retained ``version``.  Works in
-        manifest mode AND on a manifest-backed custom store (the
-        logstore backend publishes the same per-bucket stats).  Falls
-        back to a real scan only for a manifest written before stats
-        existed."""
-        log = self._snapshot_log()
+        answer is exact for any retained ``version``.  Falls back to a
+        real scan only for a manifest written before stats existed."""
+        log = self._log
         if log is None:
-            raise ValueError(
-                "count_fast requires commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
+            raise ValueError("count_fast requires commit_protocol='manifest'")
         if version is None and log.latest_version() is None:
             # match read()'s behavior for a missing table instead of
             # reporting a nonexistent path as an empty (0-row) table
@@ -1300,7 +1203,7 @@ class KeyedTable:
         there), is always kept — skipping is strictly conservative."""
         from quick_stream_spark.operators.commitlog import zone_overlaps
 
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
             return None
         enc = {
@@ -1315,7 +1218,7 @@ class KeyedTable:
         # (small/legacy tables): the in-memory walk below is faster
         # there and stays the reference semantics.
         v = version if version is not None else log.latest_version()
-        if v is not None and hasattr(log, "pruned_mapping_distributed"):
+        if v is not None:
             status, pm = log.pruned_mapping_distributed(enc, v)
             if status == "ok":
                 return pm
@@ -1403,16 +1306,10 @@ class KeyedTable:
         pm = self._pruned_mapping(ranges, version=version)
         if pm is None:
             df = self.read(active_only=active_only, version=version)
-        elif self._log is not None:
+        else:
             df = self._read_manifest(
                 active_only=active_only, version=version, mapping_override=pm
             )
-        else:  # manifest-backed store
-            df = self._store.read_mapping(
-                self._read_schema_sidecar(), pm
-            ).drop(BUCKET_COL)
-            if active_only:
-                df = df.filter(F.col(self.soft_delete_col))
         for col, (lo, hi) in ranges.items():
             if lo is not None:
                 df = df.filter(F.col(col) >= F.lit(lo))
@@ -1465,7 +1362,7 @@ class KeyedTable:
         liveness does not move physical bounds."""
         if fn not in ("min", "max"):
             raise ValueError(f"agg_fast supports 'min'/'max', got {fn!r}")
-        log = self._snapshot_log()
+        log = self._log
         idx = 0 if fn == "min" else 1
         # Distributed fast path (r11): parquet-checkpointed snapshots
         # answer from a Spark aggregation over the checkpoint rows +
@@ -1475,11 +1372,7 @@ class KeyedTable:
         v = version if version is not None else (
             log.latest_version() if log is not None else None
         )
-        if (
-            log is not None
-            and v is not None
-            and hasattr(log, "agg_bounds_distributed")
-        ):
+        if log is not None and v is not None:
             st, mm = log.agg_bounds_distributed(col, v)
             if st == "ok":
                 return self._decode_zone_bound(col, mm[idx])
@@ -1541,7 +1434,7 @@ class KeyedTable:
         applicable (no key component zone-mapped, no zones)."""
         if not any(k in self.zone_map_cols for k in self.keys):
             return None
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
             return None
         # Distributed fast path (r11): parquet-checkpointed snapshots
@@ -1550,7 +1443,7 @@ class KeyedTable:
         # bounded by the lookup, never by table size.
         mapping = zones = None
         v = version if version is not None else log.latest_version()
-        if v is not None and hasattr(log, "bucket_zones_distributed"):
+        if v is not None:
             st, sub = log.bucket_zones_distributed(bucket_ids, v)
             if st == "no_zones":
                 return None
@@ -1622,15 +1515,12 @@ class KeyedTable:
         0.0 when no zones are available (everything scans) — the
         operational signal that a table needs ``zone_map_cols`` or a
         clustered compaction."""
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
-            raise ValueError(
-                "skipping_stats requires commit_protocol='manifest' or "
-                "a manifest-backed store"
-            )
+            raise ValueError("skipping_stats requires commit_protocol='manifest'")
         totals = None
         v = version if version is not None else log.latest_version()
-        if v is not None and hasattr(log, "snapshot_totals"):
+        if v is not None:
             # parquet-checkpointed snapshots count from one aggregation
             # instead of materializing the mapping driver-side (r11)
             totals = log.snapshot_totals(v)
@@ -1673,23 +1563,16 @@ class KeyedTable:
         (the hash pruning already bounded the search to them) — the
         operational signal that an unsorted hot-lookup table needs
         ``key_bloom_bits`` or a clustered compaction."""
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
-            raise ValueError(
-                "lookup_stats requires commit_protocol='manifest' or "
-                "a manifest-backed store"
-            )
+            raise ValueError("lookup_stats requires commit_protocol='manifest'")
         # one listing: the plan and the totals describe the same snapshot
         v = version if version is not None else log.latest_version()
-        pm, ids, _, _ = self._lookup_plan(key_values, v)
-        totals = log.snapshot_totals(v) if hasattr(log, "snapshot_totals") else None
+        pm, ids, _ = self._lookup_plan(key_values, v)
+        totals = log.snapshot_totals(v)
         if totals is not None:
             _, buckets_total = totals
-            sub = (
-                log.bucket_mapping_distributed(ids, v)
-                if hasattr(log, "bucket_mapping_distributed")
-                else None
-            )
+            sub = log.bucket_mapping_distributed(ids, v)
             if sub is None:
                 full, _, _ = log.snapshot_view(v)
                 sub = {b: full.get(b, []) for b in ids}
@@ -1713,7 +1596,7 @@ class KeyedTable:
         self, key_values: Sequence, version: int | None
     ) -> tuple:
         """Shared planning half of ``lookup()``/``lookup_stats()``:
-        ``(pruned_mapping_or_None, bucket_ids, key_df, schema)``.
+        ``(pruned_mapping_or_None, bucket_ids, key_df)``.
         ``version`` is the snapshot the caller already resolved (None
         only without a snapshot log or snapshot), so planning lists the
         manifest log no further.
@@ -1725,9 +1608,9 @@ class KeyedTable:
         ``TypeError``; a naive timestamp keeps its meaning).  Building
         it and collecting each key's bucket id AND bloom hash (computed
         JVM-side so it matches the sidecar writer's bit positions
-        exactly) runs no Spark job.  Zone pruning and bloom pruning compose.  The schema and key
-        DataFrame return to the caller so ``lookup()`` doesn't re-read
-        the sidecar or rebuild the keys."""
+        exactly) runs no Spark job.  Zone pruning and bloom pruning
+        compose.  The key DataFrame returns to the caller so
+        ``lookup()`` doesn't rebuild the keys."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
         from pyspark.sql.types import StructType, _make_type_verifier
@@ -1776,7 +1659,7 @@ class KeyedTable:
                 pm = sub
             if pm is not None:
                 pm = self._bloom_prune(pm, key_hashes)
-        return pm, ids, kdf, schema
+        return pm, ids, kdf
 
     def lookup(
         self,
@@ -1788,9 +1671,9 @@ class KeyedTable:
         ONLY their hash buckets — bucket = hash(keys) % N is the
         table's layout, so a lookup of k keys opens at most k buckets
         out of ``num_buckets`` on every layout (manifest file-list
-        pruning, store versioned reads, or partition-dir pruning on
-        the direct layout).  ``key_values``: scalars for single-key
-        tables, or tuples in ``self.keys`` order.  Only the bounded
+        pruning, or partition-dir pruning on the direct layout).
+        ``key_values``: scalars for single-key tables, or tuples in
+        ``self.keys`` order.  Only the bounded
         key list and its bucket ids cross the driver — never data.
         The key list is a local relation (an Arrow table typed by the
         key schema), so planning runs no Spark job; on an inline
@@ -1810,18 +1693,13 @@ class KeyedTable:
         UNSORTED case too: inside the key's bucket, rolled files whose
         bloom excludes every requested key never open.  Conservative
         as always: files without bounds or sidecars stay."""
-        log = self._snapshot_log()
-        if version is None and log is not None:
-            version = log.latest_version()
-        pm, ids, kdf, schema = self._lookup_plan(key_values, version)
-        if pm is not None and self._log is not None:
+        if version is None and self._log is not None:
+            version = self._log.latest_version()
+        pm, ids, kdf = self._lookup_plan(key_values, version)
+        if pm is not None:
             df = self._read_manifest(
                 active_only=active_only, version=version, mapping_override=pm
             )
-        elif pm is not None:  # manifest-backed store
-            df = self._store.read_mapping(schema, pm).drop(BUCKET_COL)
-            if active_only:
-                df = df.filter(F.col(self.soft_delete_col))
         elif self._log is not None:
             sub = (
                 self._log.bucket_mapping_distributed(ids, version)
@@ -1838,17 +1716,10 @@ class KeyedTable:
                 df = self._read_manifest(
                     active_only=active_only, version=version, bucket_ids=ids
                 )
-        elif self._store_time_travel():
-            df = self._store.read_version(
-                schema, version, ids
-            ).drop(BUCKET_COL)
-            if active_only:
-                df = df.filter(F.col(self.soft_delete_col))
         else:
             if version is not None:
                 raise ValueError(
-                    "version time travel requires commit_protocol="
-                    "'manifest' or a manifest-backed store"
+                    "version time travel requires commit_protocol='manifest'"
                 )
             df = (
                 self.read(active_only=active_only, with_bucket=True)
@@ -1879,14 +1750,9 @@ class KeyedTable:
         the same exposure per statement batch (no transaction around a
         cycle's statements).  The recovery story here is the streaming
         checkpoint: foreachBatch re-delivers the interrupted batch and
-        the merge is idempotent under ``newer_wins``; for stronger
-        guarantees swap the backend for Delta/Iceberg behind this same
-        interface (their commit protocol makes the overwrite atomic)."""
-        if self._store is not None:
-            self._store.write(df, mode)
-            self._exists_cache = True
-            self._write_schema_sidecar(df.schema)
-            return
+        the merge is idempotent under ``newer_wins``; for atomic commits
+        use ``commit_protocol='manifest'``, which publishes every write
+        as one snapshot."""
         if repartition:
             df = df.repartition(F.col(BUCKET_COL))
         writer = df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
@@ -1949,8 +1815,7 @@ class KeyedTable:
                 "or resize explicitly with rebucket()"
             )
         # zone_map_cols is PERSISTED and adopted-or-validated on open
-        # (ADVICE r9, mirroring the LogStructuredBucketStore contract):
-        # a second handle opened without it would otherwise publish its
+        # (ADVICE r9): a second handle opened without it would otherwise publish its
         # next commit with zones=None, silently dropping data-skipping
         # coverage table-wide.
         recorded = props.get("zone_map_cols")
@@ -1984,7 +1849,6 @@ class KeyedTable:
         protocol the switch is a single atomic snapshot.  Properties
         sidecar is updated so subsequent opens validate against the new
         count."""
-        self._require_parquet_layout("rebucket")
         new_n = int(new_num_buckets)
         if new_n < 1:
             raise ValueError("new_num_buckets must be >= 1")
@@ -2025,10 +1889,6 @@ class KeyedTable:
     def _write_schema_sidecar(self, schema) -> None:
         if self._schema_cache is not None and self._schema_cache.json() == schema.json():
             return  # unchanged since we last wrote it — skip the FS round-trip
-        if self._store is not None:
-            self._store.write_schema(schema)
-            self._schema_cache = schema
-            return
         fs, _, jvm = _hadoop_fs(self.spark, self.path)
         p = jvm.org.apache.hadoop.fs.Path(os.path.join(self.path, self._SCHEMA_SIDECAR))
         out = fs.create(p, True)
@@ -2043,9 +1903,6 @@ class KeyedTable:
         from pyspark.sql.types import StructType
 
         if self._schema_cache is not None:
-            return self._schema_cache
-        if self._store is not None:
-            self._schema_cache = self._store.read_schema()
             return self._schema_cache
         fs, _, jvm = _hadoop_fs(self.spark, self.path)
         p = jvm.org.apache.hadoop.fs.Path(os.path.join(self.path, self._SCHEMA_SIDECAR))
@@ -2065,9 +1922,6 @@ class KeyedTable:
     def _drop_bucket_dirs(self, bucket_ids: list[int]) -> None:
         """Remove partition directories that became empty (dynamic
         overwrite only replaces partitions present in the written data)."""
-        if self._store is not None:
-            self._store.drop_buckets(bucket_ids)
-            return
         fs, _, jvm = _hadoop_fs(self.spark, self.path)
         for b in bucket_ids:
             p = jvm.org.apache.hadoop.fs.Path(os.path.join(self.path, f"{BUCKET_COL}={b}"))
@@ -2266,25 +2120,10 @@ class KeyedTable:
         finally:
             up.unpersist()
 
-    def _require_parquet_layout(self, op: str) -> None:
-        """Layout-maintenance ops (compact/file_count) manage the
-        inline bucket-partitioned parquet directory; a custom
-        ``BucketStore`` owns its own physical layout, so these ops
-        have nothing to act on — fail with a contract error instead
-        of an opaque JVM path error on the never-created self.path."""
-        if self._store is not None:
-            raise ValueError(
-                f"{op}() is a parquet-layout maintenance op and does not "
-                "apply to a KeyedTable with a custom store= backend; "
-                "physical layout (file counts, compaction) is the "
-                "BucketStore implementation's responsibility"
-            )
-
     def total_bytes(self) -> int:
         """On-disk bytes of the table's live data files (manifest mode:
         only files referenced by the current snapshot).  Metadata-only:
         one FS listing (or manifest resolve + getFileStatus)."""
-        self._require_parquet_layout("total_bytes")
         if not self.exists():
             return 0
         fs, root, jvm = _hadoop_fs(self.spark, self.path)
@@ -2322,7 +2161,6 @@ class KeyedTable:
         target, via one :meth:`rebucket` rewrite.  The check is
         metadata-only; call it from the same maintenance cadence as
         :meth:`maybe_compact`.  Returns whether a resize ran."""
-        self._require_parquet_layout("maybe_rebucket")
         if not self.exists():
             return False
         total = self.total_bytes()
@@ -2434,7 +2272,6 @@ class KeyedTable:
         fine-grained ORTHOGONAL dimensions, where a hierarchical sort
         leaves the secondary bounds near-full-range (both layouts
         measured side by side in tests/test_zone_maps.py)."""
-        self._require_parquet_layout("compact")
         if method not in ("hierarchical", "zorder"):
             raise ValueError(
                 f"method must be 'hierarchical' or 'zorder', got {method!r}"
@@ -2533,7 +2370,6 @@ class KeyedTable:
         bucket otherwise.  ``sort_by`` forwards to :meth:`compact` —
         a long-lived streaming table then periodically re-clusters
         into range-sliced files and keeps its zone maps sharp."""
-        self._require_parquet_layout("maybe_compact")
         if not self.exists():
             return False
         if self._log is not None:
@@ -2568,7 +2404,6 @@ class KeyedTable:
 
     def file_count(self) -> int:
         """Parquet data files currently in the table (all buckets)."""
-        self._require_parquet_layout("file_count")
         if self._log is not None:
             return sum(len(fl) for fl in self._log.read().values())
         fs, root, jvm = _hadoop_fs(self.spark, self.path)

@@ -69,10 +69,10 @@ class ChangeReplicator:
     """
 
     def __init__(self, source: KeyedTable, replica: KeyedTable) -> None:
-        if source._snapshot_log() is None:
+        if source._log is None:
             raise ValueError(
                 "ChangeReplicator requires a snapshot-logged source "
-                "(commit_protocol='manifest' or a manifest-backed store)"
+                "(commit_protocol='manifest')"
             )
         from quick_stream_spark.operators.progress import read_applied
 

@@ -684,7 +684,7 @@ def r_maintenance_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         manifest_checkpoint_interval=3,
         manifest_parquet_threshold=0,
     )
-    log = target._snapshot_log()
+    log = target._log
     with _events_scope(spark, sf_dir):
         target.upsert(ev.filter(F.col("event_id") % 2 == 0), newer_wins=True)
         target.upsert(ev.filter(F.col("event_id") % 2 == 1), newer_wins=True)

@@ -236,10 +236,10 @@ class CdcAggView:
         value_col: str,
         num_buckets: int = 8,
     ) -> None:
-        if source._snapshot_log() is None:
+        if source._log is None:
             raise ValueError(
                 "CdcAggView requires a snapshot-logged source "
-                "(commit_protocol='manifest' or a manifest-backed store)"
+                "(commit_protocol='manifest')"
             )
         self.source = source
         self.spark = source.spark

@@ -35,13 +35,15 @@ class WriterFence:
     collides) and each prunes segments the other just appended.  The
     classic answer is a fencing token (the design ZooKeeper/HDFS leases
     and Delta's commit arbiter use): every writer, at its FIRST
-    MUTATION, TAKES OVER the directory by bumping an epoch in a small
-    ``_qss_writer.json`` marker; before every later mutation it
-    re-reads the marker and dies loudly (``RuntimeError``) if another
-    writer has taken over since.  No pid-liveness probing, so a
-    crashed writer never wedges the directory — the next writer simply
-    takes over — and a superseded writer discovers it at its next
-    batch instead of corrupting.
+    MUTATION, TAKES OVER the directory by claiming the next epoch's
+    ``_qss_writer-<epoch>.json`` marker through put-if-absent; before
+    every later mutation it re-reads the highest-epoch marker and dies
+    loudly (``RuntimeError``) if another writer has taken over since.
+    Two takeovers that read the same epoch race for the same marker
+    name, so exactly one claims it and the other raises.  No
+    pid-liveness probing, so a crashed writer never wedges the
+    directory — the next writer simply takes over — and a superseded
+    writer discovers it at its next batch instead of corrupting.
 
     Claiming is deliberately LAZY (``ensure``, not the constructor —
     ADVICE r8): instantiating an index merely to QUERY existing state
@@ -56,47 +58,83 @@ class WriterFence:
     stop two writers RUNNING compaction/append jobs side by side, and
     batch boundaries are where those jobs launch."""
 
-    MARKER = "_qss_writer.json"
+    PREFIX = "_qss_writer-"
 
     def __init__(self, spark, work_dir: str) -> None:
         self.spark = spark
-        self.marker_path = os.path.join(work_dir, self.MARKER)
+        self.work_dir = work_dir
         self.token: str | None = None
         self.epoch = 0
 
-    def _read(self) -> dict | None:
+    def _markers(self) -> dict[int, object]:
+        """``{epoch: hadoop Path}`` of every published marker."""
         from quick_stream_spark.operators.merge import _hadoop_fs
 
-        fs, p, jvm = _hadoop_fs(self.spark, self.marker_path)
+        fs, p, _ = _hadoop_fs(self.spark, self.work_dir)
         if not fs.exists(p):
-            return None
-        stream = fs.open(p)
-        try:
-            raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        finally:
-            stream.close()
-        try:
-            return json.loads(raw.decode("utf-8"))
-        except ValueError:
-            return None  # half-written marker: claimable
+            return {}
+        out = {}
+        for st in fs.listStatus(p):
+            name = st.getPath().getName()
+            if name.startswith(self.PREFIX) and name.endswith(".json"):
+                out[int(name[len(self.PREFIX):-len(".json")])] = st.getPath()
+        return out
+
+    def _read(self) -> dict | None:
+        """The highest-epoch marker (``epoch`` taken from its name), or
+        None when the directory was never claimed."""
+        from quick_stream_spark.operators.merge import _hadoop_fs
+
+        fs, _, jvm = _hadoop_fs(self.spark, self.work_dir)
+        while True:
+            markers = self._markers()
+            if not markers:
+                return None
+            epoch = max(markers)
+            try:
+                stream = fs.open(markers[epoch])
+            except Exception:
+                # a takeover prunes only markers below its own claim, so
+                # one that vanished since the listing means a higher
+                # epoch exists: list again
+                if max(self._markers(), default=0) > epoch:
+                    continue
+                raise
+            try:
+                raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+            finally:
+                stream.close()
+            return {**json.loads(raw.decode("utf-8")), "epoch": epoch}
 
     def takeover(self) -> None:
-        """Claim the directory: bump the epoch, install our token."""
+        """Claim the directory: put-if-absent the next epoch's marker
+        with our token, then prune the older markers."""
         import uuid as _uuid
 
+        from quick_stream_spark.operators.commitlog import put_if_absent
         from quick_stream_spark.operators.merge import _hadoop_fs
 
         current = self._read()
-        self.epoch = (current.get("epoch", 0) if current else 0) + 1
-        self.token = _uuid.uuid4().hex
-        fs, p, jvm = _hadoop_fs(self.spark, self.marker_path)
-        fs.mkdirs(p.getParent())
-        body = json.dumps(
-            {"token": self.token, "epoch": self.epoch, "pid": os.getpid()}
-        ).encode("utf-8")
-        out = fs.create(p, True)
-        out.write(bytearray(body))
-        out.close()
+        epoch = (current["epoch"] if current else 0) + 1
+        token = _uuid.uuid4().hex
+        fs, p, _ = _hadoop_fs(self.spark, self.work_dir)
+        fs.mkdirs(p)
+        body = json.dumps({"token": token, "pid": os.getpid()}).encode("utf-8")
+        if not put_if_absent(
+            self.spark, self.work_dir, f"{self.PREFIX}{epoch}.json", body
+        ):
+            raise RuntimeError(
+                f"writer fence: another writer claimed epoch {epoch} of "
+                f"{self.work_dir!r} concurrently with this one. One writer "
+                "per index directory."
+            )
+        self.token, self.epoch = token, epoch
+        # a takeover that read a stale epoch can claim a marker the
+        # newer holder already pruned: verify ours is the highest
+        self.check("claim")
+        for e, path in self._markers().items():
+            if e < epoch:
+                fs.delete(path, False)
 
     def ensure(self, op: str = "write") -> None:
         """Mutation-path gate: claim the directory on the first call
@@ -115,7 +153,7 @@ class WriterFence:
             other = current or {}
             raise RuntimeError(
                 f"writer fenced out: refusing to {op} "
-                f"{os.path.dirname(self.marker_path)!r} — another writer "
+                f"{self.work_dir!r} — another writer "
                 f"(pid {other.get('pid')}, epoch {other.get('epoch')}) took "
                 "over this state directory after this one claimed epoch "
                 f"{self.epoch}. One writer per index directory; construct "
@@ -237,13 +275,6 @@ class UpsertQuickStream(_StreamBase):
         self.quarantine = quarantine
         if auto_compact_every is not None and auto_compact_every < 1:
             raise ValueError("auto_compact_every must be >= 1")
-        if auto_compact_every is not None and getattr(target, "_store", None) is not None:
-            # surface the layout/store contract mismatch at build time,
-            # not as a mid-stream failure inside foreachBatch
-            raise ValueError(
-                "auto_compact_every requires the inline parquet layout; "
-                "a custom store= backend owns its own compaction"
-            )
         if auto_rebucket_target_bytes is not None and auto_compact_every is None:
             raise ValueError(
                 "auto_rebucket_target_bytes rides the auto_compact_every "

@@ -80,7 +80,6 @@ _SLOW_TEST_NAMES = {
     "test_replica_converges_after_each_commit",
     "test_bootstrap_mid_history",
     "test_auto_clustered_compaction_keeps_zone_maps_sharp",
-    "test_replica_converges_from_logstore_source",
     "test_lookup_composes_with_key_zone_slices",
     "test_stream_merge_half_bounded_under_real_stream",
     "test_hierarchical_clustering_improves_2dim_skipping",
@@ -92,17 +91,14 @@ _SLOW_TEST_NAMES = {
     "test_quality_filter_lag_cycle_accumulation_under_real_trigger",
     "test_history_row_count_deltas",
     "test_restore_is_distributed_on_pointer_layout",
-    "test_disjoint_bucket_race_re_points_and_both_commits_land",
     "test_composite_key_lookup_prunes_on_leading_key",
     "test_stream_soft_delete_pointer_layout",
     "test_overlap_race_with_identical_files_re_targets",
     "test_auto_compaction_bounds_streaming_file_growth",
-    "test_same_bucket_race_still_raises",
     "test_replayed_batches_cannot_shrink_the_distinct_reservoir",
     "test_writer_reader_process_tz_drift_stays_exact",
     "test_pairs_within_and_across_batches",
     "test_vacuum_retains_referenced_files",
-    "test_snapshot_ops_on_logstore_backend",
     "test_replicator_resumes_across_restart",
     "test_disjoint_race_on_parquet_pointer_layout",
     "test_lag_cycle_accumulation_under_real_trigger",
@@ -112,13 +108,11 @@ _SLOW_TEST_NAMES = {
     "test_zorder_compaction_prunes_orthogonal_dimensions",
     "test_end_state_is_chunking_independent",
     "test_bounded_disjoint_race_on_delta_layout",
-    "test_logstore_backend_survives_publish_crash",
     "test_delete_paths_skip_cosmetic_bucket_repartition",
     "test_manifest_scale_envelope_at_10k_files",
     # third measurement pass (plans/r15/default_tier_timing3.log)
     "test_cross_protocol_manifest_replica",
     "test_retried_batch_is_idempotent",
-    "test_count_fast_on_logstore_backend",
     "test_bounded_overlap_race_raises",
     "test_distinct_bitmap_merges_and_is_replay_safe",
     "test_accumulates_across_batches_and_admits_new_groups",

@@ -76,8 +76,8 @@ def test_bounded_layout_equals_inline_twin(spark, tmp_table_dir):
     vs_i = inline.snapshot_versions()
     vs_p = pointer.snapshot_versions()
     assert vs_i == vs_p and len(vs_i) == 7
-    log_p = pointer._snapshot_log()
-    log_i = inline._snapshot_log()
+    log_p = pointer._log
+    log_i = inline._log
     # the pointer table's non-cadence commits are DELTA documents; its
     # cadence commits are parquet pointers (never inline JSON bodies)
     for v in vs_p:
@@ -193,7 +193,7 @@ def test_bounded_disjoint_race_on_delta_layout(spark, tmp_table_dir, monkeypatch
     rows = {r.pkey: r.payload for r in reader.read().collect()}
     assert rows[1] == "a-A" and rows[other_key] == "x-B"
     assert reader.count_fast() == reader.read().count() == len(SEED)
-    log = reader._snapshot_log()
+    log = reader._log
     assert log.versions() == [1, 2, 3]
     assert "delta" in log._read_doc(2) and "delta" in log._read_doc(3)
 
@@ -373,14 +373,14 @@ def test_pointer_chain_vacuum_sweeps_bounded_checkpoints(spark, tmp_table_dir):
     collapsed exactly as on the materialized layout."""
     t = mk(spark, tmp_table_dir, "t")
     _run_sequence(spark, t)
-    log = t._snapshot_log()
+    log = t._log
     before = _state(t)
     removed = t.vacuum(keep_versions=2)
     assert removed >= 0
     reader = mk(spark, tmp_table_dir, "t")
     assert _state(reader) == before
     live = set()
-    rl = reader._snapshot_log()
+    rl = reader._log
     for v in rl.versions():
         raw = rl._read_doc(v)
         if "checkpoint_parquet" in raw:
@@ -474,7 +474,7 @@ def test_property_bounded_layout_equals_inline(spark, tmp_path_factory, ops):
         return
     vs_i, vs_p = inline.snapshot_versions(), pointer.snapshot_versions()
     assert vs_i == vs_p
-    li, lp = inline._snapshot_log(), pointer._snapshot_log()
+    li, lp = inline._log, pointer._log
     for v in vs_i:
         assert _state(inline, version=v) == _state(pointer, version=v)
         assert li.read_stats(v) == lp.read_stats(v)
@@ -552,7 +552,7 @@ def test_restore_is_distributed_on_pointer_layout(spark, tmp_table_dir, monkeypa
     assert calls == [], f"restore materialized a snapshot: {calls}"
     monkeypatch.undo()
 
-    rlog = reader._snapshot_log()
+    rlog = reader._log
     for v_new, v_old in ((v8, 2), (v9, 6)):
         raw = rlog._read_doc(v_new)
         assert "checkpoint_parquet" in raw and raw.get("op") == "restore"
@@ -573,7 +573,7 @@ def test_restore_bounded_equals_materialized_restore(spark, tmp_table_dir):
     vi, vp = ti.restore(3), tp.restore(3)
     assert vi == vp == 8
     assert _state(ti) == _state(tp)
-    li, lp = ti._snapshot_log(), tp._snapshot_log()
+    li, lp = ti._log, tp._log
     assert li.read_stats(vi) == lp.read_stats(vp)
     hi = {r.version: r.op for r in ti.history().collect()}
     hp = {r.version: r.op for r in tp.history().collect()}
@@ -591,7 +591,7 @@ def test_seed_checkpoint_on_first_crossing_is_bounded(spark, tmp_table_dir, monk
     t = mk(spark, tmp_table_dir, "ts", manifest_parquet_threshold=5)
     t.upsert(df(spark, SEED))                                      # v1 inline
     t.upsert(df(spark, [(1, datetime(2024, 3, 1), 20, "a2")]))     # v2 delta
-    log = t._snapshot_log()
+    log = t._log
     assert "buckets" in log._read_doc(1)  # inline full body below threshold
 
     flag = {"in_cb": False}
@@ -640,7 +640,7 @@ def test_overlap_race_with_identical_files_re_targets(spark, tmp_table_dir, monk
     (ADVICE r11 on commit_bounded's stricter-than-commit() check)."""
     t = mk(spark, tmp_table_dir, "t")
     _run_sequence(spark, t)  # pointer layout, 7 versions
-    log = t._snapshot_log()
+    log = t._log
     base_v = log.latest_version()
     bucket_of_1 = next(
         r["__qss_bucket"]
@@ -676,7 +676,7 @@ def test_overlap_race_with_identical_files_re_targets(spark, tmp_table_dir, monk
 
     reader = mk(spark, tmp_table_dir, "t")
     assert {r.pkey: r.payload for r in reader.read().collect()}[1] == "a-post"
-    rlog = reader._snapshot_log()
+    rlog = reader._log
     assert rlog.latest_version() == base_v + 2  # winner + re-targeted loser
 
 
@@ -742,7 +742,7 @@ def test_vacuum_is_distributed_on_pointer_layout(spark, tmp_table_dir, monkeypat
     assert rp == ri and rp > 0
 
     reader = mk(spark, tmp_table_dir, "vp")
-    log = reader._snapshot_log()
+    log = reader._log
     assert log.versions() == [5, 6, 7]
     for v in (5, 6, 7):
         assert _state(reader, version=v) == want[v]
@@ -828,10 +828,10 @@ def test_maybe_compact_check_is_bounded_on_pointer_layout(
     tp = mk(spark, tmp_table_dir, "cp")
     _run_sequence(spark, ti)
     _run_sequence(spark, tp)
-    li, lp = ti._snapshot_log(), tp._snapshot_log()
+    li, lp = ti._log, tp._log
     want = max(len(fl) for fl in li.read().values())
     fresh = mk(spark, tmp_table_dir, "cp")  # cold caches: honest pin
-    lf = fresh._snapshot_log()
+    lf = fresh._log
     got = lf.files_per_bucket_max(lf.latest_version())
     assert got == want, (got, want)
 
@@ -866,7 +866,7 @@ def test_total_bytes_bounded_on_pointer_layout(
     the snapshot's resolved files."""
     t = mk(spark, tmp_table_dir, "tb")
     _run_sequence(spark, t)
-    log = t._snapshot_log()
+    log = t._log
     want = sum(os.path.getsize(f) for f in log.resolve(log.read()))
 
     calls: list[str] = []
@@ -894,7 +894,7 @@ def test_total_bytes_bounded_on_pointer_layout(
     # identical content
     ti = mk(spark, tmp_table_dir, "tbi", manifest_parquet_threshold=10**9)
     _run_sequence(spark, ti)
-    li = ti._snapshot_log()
+    li = ti._log
     assert ti.total_bytes() == sum(
         os.path.getsize(f) for f in li.resolve(li.read())
     )
@@ -911,7 +911,7 @@ def test_rebucket_on_pointer_layout(spark, tmp_table_dir):
     t.upsert(df(spark, SEED))                                        # v1
     t.upsert(df(spark, [(1, datetime(2024, 1, 5), 10, "a2")]))       # v2
     t.rebucket(4)                                                    # v3
-    log = t._snapshot_log()
+    log = t._log
     assert "checkpoint_parquet" in log._read_doc(3)
     # bounded commits resume post-resize (deltas, then the v6 cadence)
     t.upsert(df(spark, [(9, datetime(2024, 2, 1), 11, "i1")]))       # v4

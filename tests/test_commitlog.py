@@ -158,38 +158,28 @@ _OCC_SEED = BATCH1 + [
 ]
 
 
-def _mk_occ(spark, root, backend):
-    """A fresh KeyedTable handle on the OCC backend under test:
-    ``manifest`` = the inline parquet layout in manifest mode;
-    ``logstore`` = the log-structured ACID BucketStore, whose write()
-    declares the same (touched, base_version) transaction to the shared
-    ManifestLog (r7 verdict ask #5: the race matrix must run on BOTH
-    protocols at the KeyedTable level)."""
-    if backend == "logstore":
-        from quick_stream_spark.operators.backends import (
-            LogStructuredBucketStore,
-        )
+def _seed_buckets(spark, root):
+    """pkey -> bucket id of the ``_OCC_SEED`` keys, from the table's own
+    bucket expression — no probe table is written."""
+    t = _mk_occ(spark, root)
+    rows = df(spark, _OCC_SEED).select("pkey", t._bucket_expr().alias("b"))
+    return {r.pkey: r.b for r in rows.collect()}
 
-        return mk(
-            spark, root, "t", protocol="direct",
-            store=LogStructuredBucketStore(spark, os.path.join(root, "t")),
-        )
+
+def _mk_occ(spark, root):
+    """A fresh KeyedTable handle (its own caches) on the shared
+    manifest-mode table the race tests contend for."""
     return mk(spark, root, "t")
 
 
-def _versions(table):
-    log = table._log if table._store is None else table._store._log
-    return log.versions()
-
-
-def _race(spark, tmp_table_dir, monkeypatch, other_batch, backend):
+def _race(spark, tmp_table_dir, monkeypatch, other_batch):
     """Writer A starts an upsert of pkey 1's bucket; just before A's
     manifest publish, writer B (a separate KeyedTable instance) lands
     ``other_batch``.  Returns (A's table, the exception A raised or
     None)."""
     from quick_stream_spark.operators.commitlog import ManifestLog
 
-    t = _mk_occ(spark, tmp_table_dir, backend)
+    t = _mk_occ(spark, tmp_table_dir)
     t.upsert(df(spark, _OCC_SEED))
 
     real_try = ManifestLog._try_publish
@@ -198,7 +188,7 @@ def _race(spark, tmp_table_dir, monkeypatch, other_batch, backend):
     def racing(self, mapping, stats, version, **kw):
         if not state["injected"]:
             state["injected"] = True
-            other = _mk_occ(spark, tmp_table_dir, backend)
+            other = _mk_occ(spark, tmp_table_dir)
             other.upsert(df(spark, other_batch))
         return real_try(self, mapping, stats, version, **kw)
 
@@ -212,92 +202,75 @@ def _race(spark, tmp_table_dir, monkeypatch, other_batch, backend):
     return t, err
 
 
-@pytest.mark.parametrize("backend", ["manifest", "logstore"])
 def test_disjoint_bucket_race_re_points_and_both_commits_land(
-    spark, tmp_table_dir, monkeypatch, backend
+    spark, tmp_table_dir, monkeypatch
 ):
-    """r6 verdict ask #3 (+ r7 ask #5, per-backend): two writers whose
-    commits touch DISJOINT bucket sets must BOTH land — the loser of the
-    publish race re-reads the winner's snapshot, re-points its untouched
-    buckets and retries (the reference gets this for free from Postgres
-    row locks, upsert.rs:287).  End state carries both updates with
-    honest metadata counts and checksum-stable content, on the inline
-    manifest protocol AND the logstore BucketStore."""
-    probe = _mk_occ(spark, tmp_table_dir, backend)
-    probe.upsert(df(spark, _OCC_SEED))
-    buckets = _bucket_of(probe)
+    """r6 verdict ask #3: two writers whose commits touch DISJOINT
+    bucket sets must BOTH land — the loser of the publish race re-reads
+    the winner's snapshot, re-points its untouched buckets and retries
+    (the reference gets this for free from Postgres row locks,
+    upsert.rs:287).  End state carries both updates with honest
+    metadata counts and checksum-stable content."""
+    buckets = _seed_buckets(spark, tmp_table_dir)
     other_key = next(k for k, b in buckets.items() if b != buckets[1])
-    import shutil
-
-    shutil.rmtree(os.path.join(tmp_table_dir, "t"))
-
     t, err = _race(
         spark,
         tmp_table_dir,
         monkeypatch,
         [(other_key, datetime(2024, 3, 1), 11, "x-B")],
-        backend,
     )
     assert err is None, f"disjoint race should auto-resolve, got {err}"
-    reader = _mk_occ(spark, tmp_table_dir, backend)
+    reader = _mk_occ(spark, tmp_table_dir)
     rows = {r.pkey: r.payload for r in reader.read().collect()}
     assert rows[1] == "a-A"  # writer A's update
     assert rows[other_key] == "x-B"  # writer B's update survived the re-point
     assert reader.count_fast() == reader.read().count() == len(_OCC_SEED)
     # both commits are distinct snapshots: seed, B, A(re-pointed)
-    assert len(_versions(reader)) == 3
+    assert len(reader.snapshot_versions()) == 3
 
 
-@pytest.mark.parametrize("backend", ["manifest", "logstore"])
-def test_same_bucket_race_still_raises(
-    spark, tmp_table_dir, monkeypatch, backend
-):
+def test_same_bucket_race_still_raises(spark, tmp_table_dir, monkeypatch):
     """Overlapping-bucket races must NOT be re-pointed: writer A's merge
     resolved MERGE semantics against a bucket state writer B has since
     replaced, so A must fail loudly and be re-run.  The table is left on
-    B's snapshot — on both OCC backends."""
+    B's snapshot."""
     from quick_stream_spark.operators.commitlog import ConcurrentCommitError
 
-    probe = _mk_occ(spark, tmp_table_dir, backend)
-    probe.upsert(df(spark, _OCC_SEED))
-    buckets = _bucket_of(probe)
+    buckets = _seed_buckets(spark, tmp_table_dir)
     same_key = next(
         (k for k, b in buckets.items() if b == buckets[1] and k != 1), 1
     )
-    import shutil
-
-    shutil.rmtree(os.path.join(tmp_table_dir, "t"))
-
     t, err = _race(
         spark,
         tmp_table_dir,
         monkeypatch,
         [(same_key, datetime(2024, 3, 1), 11, "x-B")],
-        backend,
     )
     assert isinstance(err, ConcurrentCommitError)
-    reader = _mk_occ(spark, tmp_table_dir, backend)
+    reader = _mk_occ(spark, tmp_table_dir)
     rows = {r.pkey: r.payload for r in reader.read().collect()}
     assert rows[same_key] == "x-B"  # B's committed snapshot is the state
     assert rows.get(1) != "a-A"  # A's crashed attempt is invisible
     assert reader.count_fast() == reader.read().count()
-    # A's orphaned commit files are reclaimable (through the store's
-    # shared log on the logstore backend)
-    vac = reader.vacuum if backend == "manifest" else reader._store.vacuum
-    assert vac(keep_versions=1) > 0
+    # A's orphaned commit files are reclaimable
+    assert reader.vacuum(keep_versions=1) > 0
 
 
-@pytest.mark.parametrize("backend", ["manifest", "logstore"])
-def test_threaded_disjoint_writers_all_land(spark, tmp_table_dir, backend):
+# the commit protocols that arbitrate concurrent writers optimistically
+@pytest.mark.parametrize("protocol", ["manifest"])
+def test_threaded_disjoint_writers_all_land(spark, tmp_table_dir, protocol):
     """True concurrency (not an injected interleaving): four threads,
     each a separate KeyedTable instance upserting ONE key in its own
-    bucket, racing the same snapshot log — on both OCC backends.  Every
+    bucket, racing the same snapshot log.  Every
     commit must land (rename-if-absent arbitrates; losers re-point
     through the optimistic retry), the end state must carry all four
     updates, and metadata counts must stay honest."""
     import threading
 
-    probe = _mk_occ(spark, tmp_table_dir, backend)
+    def _mk_occ(spark, root):
+        return mk(spark, root, "t", protocol=protocol)
+
+    probe = _mk_occ(spark, tmp_table_dir)
     probe.upsert(df(spark, _OCC_SEED))
     buckets = _bucket_of(probe)
     # one representative key per bucket (the seed covers all 4 buckets
@@ -312,7 +285,7 @@ def test_threaded_disjoint_writers_all_land(spark, tmp_table_dir, backend):
 
     def writer(k):
         try:
-            w = _mk_occ(spark, tmp_table_dir, backend)
+            w = _mk_occ(spark, tmp_table_dir)
             w.upsert(df(spark, [(k, datetime(2024, 3, 1), 100 + k, f"w{k}")]))
         except Exception as exc:  # noqa: BLE001
             errors.append((k, exc))
@@ -324,13 +297,13 @@ def test_threaded_disjoint_writers_all_land(spark, tmp_table_dir, backend):
         t.join()
     assert not errors, errors
 
-    reader = _mk_occ(spark, tmp_table_dir, backend)
+    reader = _mk_occ(spark, tmp_table_dir)
     rows = {r.pkey: r.payload for r in reader.read().collect()}
     for k in keys:
         assert rows[k] == f"w{k}", (k, rows)
     assert reader.count_fast() == reader.read().count() == len(_OCC_SEED)
     # every writer published its own snapshot: seed + one per thread
-    assert len(_versions(reader)) == 1 + len(keys)
+    assert len(reader.snapshot_versions()) == 1 + len(keys)
 
 
 def test_router_routes_through_manifest_tables(spark, tmp_table_dir):
@@ -481,69 +454,6 @@ def test_erase_removes_key_from_all_retained_history(spark, tmp_table_dir):
     assert survivors.filter(survivors.pkey == 2).count() == 0
 
 
-def test_snapshot_ops_on_logstore_backend(spark, tmp_table_dir):
-    """r8: the snapshot family — time travel reads, CDC
-    classification, atomic restore, erase/vacuum — works on the
-    manifest-backed logstore BucketStore exactly as in manifest mode
-    (the store shares the same ManifestLog protocol)."""
-    from quick_stream_spark.operators.backends import LogStructuredBucketStore
-
-    def mk_ls():
-        return KeyedTable(
-            spark,
-            os.path.join(tmp_table_dir, "cdc-ls"),
-            keys=("pkey",),
-            version_col="modified_date",
-            arrival_col="arrival",
-            num_buckets=4,
-            store=LogStructuredBucketStore(
-                spark, os.path.join(tmp_table_dir, "cdc-ls")
-            ),
-        )
-
-    t = mk_ls()
-    t.upsert(df(spark, BATCH1))
-    v1 = t.snapshot_versions()[-1]
-    t.upsert(df(spark, BATCH2))
-    t.soft_delete(df(spark, [(2, datetime(2024, 2, 1), 9, "x")]))
-    t.hard_delete(df(spark, [(3, datetime(2024, 2, 2), 10, "y")]))
-    v_last = t.snapshot_versions()[-1]
-
-    # time travel: v1 is BATCH1's end state
-    assert {r.pkey: r.payload for r in t.read(version=v1).collect()} == {
-        1: "a1", 2: "b1", 3: "c1"
-    }
-
-    # CDC classification between the snapshots
-    by_type = {}
-    for r in t.read_changes(v1, v_last).collect():
-        by_type.setdefault(r["_change_type"], []).append(r)
-        assert r["_commit_version"] == v_last
-    assert sorted(r.pkey for r in by_type["insert"]) == [4]
-    assert sorted(r.pkey for r in by_type["delete"]) == [3]
-    assert sorted(r.pkey for r in by_type["update_preimage"]) == [1, 2]
-    post = {r.pkey: (r.payload, r.row_active)
-            for r in by_type["update_postimage"]}
-    assert post[1] == ("a2", True) and post[2][1] is False
-
-    # atomic restore: back to v1 as a NEW commit; history intact
-    v_restored = t.restore(v1)
-    assert v_restored > v_last
-    assert {r.pkey: r.payload for r in t.read().collect()} == {
-        1: "a1", 2: "b1", 3: "c1"
-    }
-    assert t.count_fast() == 3  # restored stats republished atomically
-    assert v1 in t.snapshot_versions()  # time travel still sees history
-
-    # erase: drops history + reclaims files through the store's log
-    t.upsert(df(spark, BATCH2))
-    reclaimed = t.erase(df(spark, [(1, datetime(2024, 3, 1), 11, "z")]))
-    assert reclaimed > 0
-    reader = mk_ls()
-    assert 1 not in {r.pkey for r in reader.read().collect()}
-    assert len(reader.snapshot_versions()) == 1  # history gone
-
-
 def test_disjoint_race_on_parquet_pointer_layout(
     spark, tmp_table_dir, monkeypatch
 ):
@@ -587,7 +497,7 @@ def test_disjoint_race_on_parquet_pointer_layout(
     monkeypatch.setattr(ManifestLog, "_put_if_absent", real_put)
 
     reader = mk_pq(tmp_table_dir)
-    log = reader._snapshot_log()
+    log = reader._log
     rows = {r.pkey: r.payload for r in reader.read().collect()}
     assert rows[1] == "a-A" and rows[other_key] == "x-B"
     assert reader.count_fast() == reader.read().count() == len(_OCC_SEED)

@@ -204,60 +204,6 @@ def _run_stream(spark, target, src, schema, cfg):
     )
 
 
-def test_logstore_backend_survives_publish_crash(spark, tmp_table_dir, monkeypatch):
-    """The LogStructuredBucketStore (third backend) makes store-backed
-    tables crash-atomic via the same manifest publish: a crash between
-    its commit-dir write and the snapshot publish leaves a reader on the
-    pre-merge state; retry converges; vacuum reclaims the orphans."""
-    from quick_stream_spark.operators.backends import LogStructuredBucketStore
-
-    store = LogStructuredBucketStore(spark, os.path.join(tmp_table_dir, "log"))
-    t = KeyedTable(
-        spark,
-        os.path.join(tmp_table_dir, "t"),
-        keys=("pkey",),
-        version_col="modified_date",
-        arrival_col="arrival",
-        num_buckets=4,
-        store=store,
-    )
-    t.upsert(_batch(spark, [(1, 1, 1, "a1"), (2, 1, 2, "b1")]))
-    real_commit = ManifestLog.commit
-
-    def crash(self, mapping, stats=None, **kw):
-        raise _InjectedCrash("injected")
-
-    monkeypatch.setattr(ManifestLog, "commit", crash)
-    with pytest.raises(_InjectedCrash):
-        t.upsert(_batch(spark, [(2, 2, 3, "b2"), (3, 2, 4, "c1")]))
-    monkeypatch.setattr(ManifestLog, "commit", real_commit)
-
-    reader = KeyedTable(
-        spark,
-        os.path.join(tmp_table_dir, "t"),
-        keys=("pkey",),
-        version_col="modified_date",
-        arrival_col="arrival",
-        num_buckets=4,
-        store=LogStructuredBucketStore(spark, os.path.join(tmp_table_dir, "log")),
-    )
-    assert {r.pkey: r.payload for r in reader.read().collect()} == {1: "a1", 2: "b1"}
-
-    t2 = reader
-    t2.upsert(_batch(spark, [(2, 2, 3, "b2"), (3, 2, 4, "c1")]))
-    assert {r.pkey: r.payload for r in t2.read().collect()} == {
-        1: "a1",
-        2: "b2",
-        3: "c1",
-    }
-    assert store.vacuum(keep_versions=1) > 0
-    assert {r.pkey: r.payload for r in t2.read().collect()} == {
-        1: "a1",
-        2: "b2",
-        3: "c1",
-    }
-
-
 def test_register_log_append_crash_then_checkpoint_replay_converges(
     spark, tmp_table_dir, monkeypatch
 ):
@@ -489,7 +435,7 @@ def test_zone_maps_are_crash_atomic_with_their_snapshot(
         zone_map_cols=("modified_date",),
     )
     t.upsert(_batch(spark, [(1, 1, 1, "a1"), (2, 1, 2, "b1")]))
-    log = t._snapshot_log()
+    log = t._log
     z_before = log.read_zones()
     cut = datetime(2024, 1, 10)
 

@@ -77,14 +77,14 @@ def test_lookup_skips_rolled_files_and_never_misses(spark, tmp_table_dir):
         (k, datetime(2024, 1, 1), k, f"p{k}") for k in range(n)
     ]))
     t.compact(target_files_per_bucket=8)  # roll each bucket, no sort
-    files_total = len(t._snapshot_log().read()[0]) + len(
-        t._snapshot_log().read()[1]
+    files_total = len(t._log.read()[0]) + len(
+        t._log.read()[1]
     )
     assert files_total >= 12  # genuinely rolled
     assert len(_sidecars(t)) == len(_datafiles(t))
 
     # candidate files for one key = its bucket's roll set; bloom keeps ~1
-    full = t._snapshot_log().read()
+    full = t._log.read()
     probe_keys = [7, 1234, 3999]
     sel = spark.createDataFrame(
         [(k,) for k in probe_keys], "pkey long"

@@ -77,7 +77,7 @@ def test_planning_runs_no_job_and_lookup_at_most_two(spark, bigint_table):
     t = bigint_table
     keys = [3, 7, 11, 404]
     t.lookup(keys).collect()  # warm the snapshot cache and the sidecars
-    (_, ids, _, _), n_plan = _jobs(
+    (_, ids, _), n_plan = _jobs(
         spark, lambda: t._lookup_plan(keys, t._log.latest_version())
     )
     assert n_plan == 0

@@ -197,7 +197,7 @@ def test_vacuum_collapses_oldest_kept_delta(spark, tmp_table_dir):
         t.upsert(mk([(i, datetime(2024, 2, 1 + i), 100 + i)]), newer_wins=True)
     vs = t.snapshot_versions()
     assert len(vs) == 4
-    log = t._snapshot_log()
+    log = t._log
     assert "delta" in log._read_doc(vs[-1])
     before = {tuple(r) for r in t.read().collect()}
 
@@ -315,7 +315,7 @@ def test_restore_to_a_delta_version(spark, tmp_table_dir):
     t.upsert(mk([(i, datetime(2024, 1, 1), i) for i in range(8)]))
     t.upsert(mk([(1, datetime(2024, 2, 1), 100)]), newer_wins=True)  # delta v2
     v2 = t.snapshot_versions()[-1]
-    log = t._snapshot_log()
+    log = t._log
     assert "delta" in log._read_doc(v2)
     want = {tuple(r) for r in t.read().collect()}
     z2 = log.read_zones(v2)
@@ -361,7 +361,7 @@ def test_parquet_checkpoint_full_table_contract(spark, tmp_table_dir):
         t.soft_delete(mk([(5, datetime(2024, 3, 1), 200)]))
         t.compact(target_files_per_bucket=2, sort_by="ts")
     # every full document of the threshold-0 table is a pointer
-    log = a._snapshot_log()
+    log = a._log
     fulls = [v for v in log.versions() if "delta" not in log._read_doc(v)]
     assert fulls and all(
         "checkpoint_parquet" in log._read_doc(v) for v in fulls
@@ -413,7 +413,7 @@ def test_parquet_checkpoint_cdc_source_reads_pointer(spark, tmp_table_dir):
     mk = lambda rows: spark.createDataFrame(rows, "pkey long, ts timestamp, a long")
     t.upsert(mk([(i, datetime(2024, 1, 1), i) for i in range(8)]))
     t.upsert(mk([(1, datetime(2024, 2, 1), 100)]), newer_wins=True)
-    log = t._snapshot_log()
+    log = t._log
     for v in t.snapshot_versions():
         assert _cdc_mapping(t.path, v) == log.read(v)
 
@@ -587,7 +587,7 @@ def test_parquet_checkpoint_threshold_crossing_mid_history(
         states[t.snapshot_versions()[-1]] = {
             tuple(r) for r in t.read().collect()
         }
-    log = t._snapshot_log()
+    log = t._log
     kinds = []
     for v in log.versions():
         raw = log._read_doc(v)

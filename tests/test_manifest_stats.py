@@ -18,7 +18,7 @@ def df(spark, rows):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-def mk(spark, root, name="t", protocol="manifest"):
+def mk(spark, root, name="t", protocol="manifest", **kw):
     return KeyedTable(
         spark,
         os.path.join(root, name),
@@ -27,6 +27,7 @@ def mk(spark, root, name="t", protocol="manifest"):
         arrival_col="arrival",
         num_buckets=4,
         commit_protocol=protocol,
+        **kw,
     )
 
 
@@ -49,6 +50,10 @@ def test_count_fast_tracks_every_commit_kind(spark, tmp_table_dir):
     t.compact()  # layout-only: counts must not move
     assert t.count_fast() == 9
     assert t.count_fast(active_only=True) == 8
+    # a fresh handle reads the same metadata
+    fresh = mk(spark, tmp_table_dir)
+    assert fresh.count_fast() == 9
+    assert fresh.count_fast(active_only=True) == 8
 
 
 def test_count_fast_time_travel_and_restore(spark, tmp_table_dir):
@@ -136,131 +141,44 @@ def test_count_fast_missing_table_raises_like_read(spark, tmp_table_dir):
         t.count_fast()
 
 
-def test_count_fast_on_logstore_backend(spark, tmp_table_dir):
-    """r8: the logstore BucketStore publishes the same per-bucket
-    [rows, active_rows] stats with every commit, so count_fast answers
-    from pure manifest metadata on the store backend too — including
-    after soft deletes (active counts) and hard deletes (dropped
-    buckets leave the stats)."""
-    from quick_stream_spark.operators.backends import LogStructuredBucketStore
-
-    t = KeyedTable(
-        spark,
-        os.path.join(tmp_table_dir, "t-ls"),
-        keys=("pkey",),
-        version_col="modified_date",
-        arrival_col="arrival",
-        num_buckets=4,
-        store=LogStructuredBucketStore(
-            spark, os.path.join(tmp_table_dir, "t-ls")
-        ),
-    )
+def test_count_fast_counts_a_custom_soft_delete_col(spark, tmp_table_dir):
+    """The per-bucket active-row stats count the table's OWN liveness
+    column: with a non-default ``soft_delete_col``,
+    ``count_fast(active_only=True)`` follows soft deletes on that
+    column, not on ``row_active``."""
+    t = mk(spark, tmp_table_dir, soft_delete_col="is_live")
     t.upsert(df(spark, B1))
-    assert t.count_fast() == t.read().count()
-    assert t.count_fast(active_only=True) == t.read().count()
-
-    # soft delete one key: total count unchanged, active count drops
-    one = df(spark, B1[:1])
-    t.soft_delete(one)
-    assert t.count_fast() == t.read().count()
+    assert t.count_fast(active_only=True) == t.read().count() == 10
+    t.soft_delete(df(spark, B1[:2]))
     assert (
         t.count_fast(active_only=True)
         == t.read(active_only=True).count()
-        == t.read().count() - 1
+        == 8
     )
-
-    # hard delete: rows leave both the table and the metadata counts
-    t.hard_delete(one)
-    assert t.count_fast() == t.read().count()
-
-    # a fresh handle reads the same metadata
-    t2 = KeyedTable(
-        spark,
-        os.path.join(tmp_table_dir, "t-ls"),
-        keys=("pkey",),
-        version_col="modified_date",
-        arrival_col="arrival",
-        num_buckets=4,
-        store=LogStructuredBucketStore(
-            spark, os.path.join(tmp_table_dir, "t-ls")
-        ),
-    )
-    assert t2.count_fast() == t.read().count()
-
-
-def test_store_soft_delete_col_adopted_and_mismatch_rejected(
-    spark, tmp_table_dir
-):
-    """ADVICE r8: a store's stats pass must count the SAME liveness
-    column the owning table maintains.  The store defaults its column
-    to None and adopts the table's at attach time; an explicit mismatch
-    is a construction-time ValueError, never a wrong count_fast."""
-    from quick_stream_spark.operators.backends import LogStructuredBucketStore
-
-    store = LogStructuredBucketStore(spark, os.path.join(tmp_table_dir, "a"))
-    assert store._soft_delete_col is None
-    t = KeyedTable(
-        spark,
-        os.path.join(tmp_table_dir, "a"),
-        keys=("pkey",),
-        version_col="modified_date",
-        arrival_col="arrival",
-        num_buckets=4,
-        soft_delete_col="is_live",
-        store=store,
-    )
-    assert store._soft_delete_col == "is_live"
-    t.upsert(df(spark, B1))
-    assert t.count_fast(active_only=True) == t.read().count() == 10
-
-    with pytest.raises(ValueError, match="soft-delete column"):
-        KeyedTable(
-            spark,
-            os.path.join(tmp_table_dir, "b"),
-            keys=("pkey",),
-            soft_delete_col="is_live",
-            store=LogStructuredBucketStore(
-                spark,
-                os.path.join(tmp_table_dir, "b"),
-                soft_delete_col="row_active",
-            ),
-        )
+    assert t.count_fast() == 10
 
 
 def test_all_null_liveness_does_not_crash_the_stats_commit(
     spark, tmp_table_dir
 ):
     """ADVICE r8: F.sum over an all-NULL liveness column returns NULL;
-    int(None) crashed the commit mid-write.  Both stats passes (the
-    store's _next_stats and the inline _write_manifest_commit) must
-    coalesce to 0 — NULL liveness means not-active, and the commit
+    int(None) crashed the commit mid-write.  Both stats passes — the
+    write job's Observation and the footer aggregation
+    (``compute_commit_meta``, taken when zone maps are tracked) — must
+    coalesce to 0: NULL liveness means not-active, and the commit
     lands."""
     from pyspark.sql import functions as F
 
-    from quick_stream_spark.operators.backends import LogStructuredBucketStore
-    from quick_stream_spark.operators.merge import BUCKET_COL
-
-    # store path: write a bucket whose liveness is NULL for every row
-    store = LogStructuredBucketStore(
-        spark, os.path.join(tmp_table_dir, "s"), soft_delete_col="row_active"
-    )
-    frame = spark.createDataFrame(
-        [(1, None), (2, None)], "pkey long, row_active boolean"
-    ).withColumn(BUCKET_COL, F.lit(0))
-    store.write(frame, "overwrite")  # TypeError before the coalesce fix
-    stats = store._log.read_stats(store._log.latest_version())
-    assert stats == {0: [2, 0]}
-
-    # inline manifest path: an update batch carrying explicit NULLs
-    t = mk(spark, tmp_table_dir, name="m", protocol="manifest")
     rows = [(i, datetime(2024, 1, 1), i, f"p{i}") for i in range(4)]
-    null_live = df(spark, rows).withColumn(
-        "row_active", F.lit(None).cast("boolean")
-    )
-    t.upsert(null_live)
-    assert t.count_fast() == 4
-    assert t.count_fast(active_only=True) == 0
-    assert t.read(active_only=True).count() == 0
+    for name, kw in (("obs", {}), ("scan", {"zone_map_cols": ("pkey",)})):
+        t = mk(spark, tmp_table_dir, name=name, **kw)
+        null_live = df(spark, rows).withColumn(
+            "row_active", F.lit(None).cast("boolean")
+        )
+        t.upsert(null_live)
+        assert t.count_fast() == 4
+        assert t.count_fast(active_only=True) == 0
+        assert t.read(active_only=True).count() == 0
 
 
 def test_commit_meta_is_free_when_nothing_is_tracked():

@@ -13,30 +13,16 @@ from quick_stream_spark.operators.merge import BUCKET_COL, KeyedTable
 SCHEMA = "pkey long, modified_date timestamp, arrival long, payload string"
 
 
-def _store_kw(spark, backend: str, root: str = "") -> dict:
-    if backend == "memory":
-        from quick_stream_spark.operators.backends import InMemoryBucketStore
-
-        return {"store": InMemoryBucketStore(spark)}
-    if backend == "logstore":
-        from quick_stream_spark.operators.backends import LogStructuredBucketStore
-
-        return {"store": LogStructuredBucketStore(spark, os.path.join(root, "log"))}
-    return {}
-
-
-@pytest.fixture(params=["parquet", "memory", "logstore"])
-def store_kw(spark, tmp_table_dir, request):
-    """Storage-backend axis: the MERGE contract tests run against the
-    bucket-partitioned parquet layout, the in-memory dict-of-buckets
-    store, and the log-structured ACID store (operators/backends.py),
-    proving the KeyedTable storage seam — the merge semantics may not
-    depend on the physical layer."""
-    return _store_kw(spark, request.param, tmp_table_dir)
+@pytest.fixture(params=["direct", "manifest"])
+def commit_protocol(request):
+    """Commit-protocol axis: the MERGE contract tests run against the
+    in-place bucket overwrite and the manifest snapshot log — the merge
+    semantics may not depend on how a write is published."""
+    return request.param
 
 
 @pytest.fixture()
-def table(spark, tmp_table_dir, store_kw):
+def table(spark, tmp_table_dir, commit_protocol):
     return KeyedTable(
         spark,
         os.path.join(tmp_table_dir, "t"),
@@ -44,7 +30,7 @@ def table(spark, tmp_table_dir, store_kw):
         version_col="modified_date",
         arrival_col="arrival",
         num_buckets=4,
-        **store_kw,
+        commit_protocol=commit_protocol,
     )
 
 
@@ -139,6 +125,7 @@ def test_hard_delete_all_rows_empties_table(spark, table):
         if f.startswith(BUCKET_COL)
     ]
     assert remaining == []
+    assert table.read().count() == 0
 
 
 def test_merge_touches_only_affected_buckets(spark, ptable):
@@ -221,7 +208,7 @@ def test_compact_restores_one_file_per_bucket(spark, ptable):
     assert after_rows == before_rows
 
 
-def test_composite_keys(spark, tmp_table_dir, store_kw):
+def test_composite_keys(spark, tmp_table_dir, commit_protocol):
     t = KeyedTable(
         spark,
         os.path.join(tmp_table_dir, "ck"),
@@ -229,7 +216,7 @@ def test_composite_keys(spark, tmp_table_dir, store_kw):
         version_col="modified_date",
         arrival_col="arrival",
         num_buckets=2,
-        **store_kw,
+        commit_protocol=commit_protocol,
     )
     schema = "k1 long, k2 string, modified_date timestamp, arrival long, v string"
     t.upsert(spark.createDataFrame([(1, "x", datetime(2024, 1, 1), 1, "a")], schema))
@@ -278,7 +265,7 @@ def test_merge_scan_uses_dynamic_partition_pruning(spark, tmp_table_dir):
     assert BUCKET_COL in plan
 
 
-def test_schema_evolution_adds_column(spark, tmp_table_dir, store_kw):
+def test_schema_evolution_adds_column(spark, tmp_table_dir, commit_protocol):
     """A batch with a new column evolves the table; old winners read
     back NULL for it — including rows in buckets the evolving batch
     never rewrote (NULL-filled via the sidecar schema at read time)."""
@@ -291,7 +278,7 @@ def test_schema_evolution_adds_column(spark, tmp_table_dir, store_kw):
         version_col="modified_date",
         arrival_col="arrival",
         num_buckets=4,
-        **store_kw,
+        commit_protocol=commit_protocol,
     )
     base = df(spark, [(k, datetime(2024, 1, 1), k, f"v{k}") for k in range(16)])
     t.upsert(base, newer_wins=True)
@@ -306,7 +293,7 @@ def test_schema_evolution_adds_column(spark, tmp_table_dir, store_kw):
     assert len(rows) == 16
 
 
-def test_missing_columns_fail_fast_unless_allowed(spark, tmp_table_dir, store_kw):
+def test_missing_columns_fail_fast_unless_allowed(spark, tmp_table_dir, commit_protocol):
     import pytest as _pytest
 
     t = KeyedTable(
@@ -316,7 +303,7 @@ def test_missing_columns_fail_fast_unless_allowed(spark, tmp_table_dir, store_kw
         version_col="modified_date",
         arrival_col="arrival",
         num_buckets=2,
-        **store_kw,
+        commit_protocol=commit_protocol,
     )
     t.upsert(df(spark, [(1, datetime(2024, 1, 1), 1, "a")]))
     partial = spark.createDataFrame(
@@ -463,28 +450,3 @@ def test_delete_paths_skip_cosmetic_bucket_repartition(spark, ptable):
         assert "REPARTITION_BY_COL" not in plan, plan
     assert state(ptable)[1] == ("p1", False)
     assert 2 not in state(ptable)
-
-
-def test_layout_maintenance_ops_reject_custom_store(spark, tmp_table_dir):
-    """compact/maybe_compact/file_count manage the inline parquet
-    layout; on a store-backed KeyedTable they must fail with a clear
-    contract error (ADVICE r4), and composing a custom store with
-    streaming auto-compaction must fail at BUILD time, not mid-stream
-    inside foreachBatch."""
-    from quick_stream_spark.operators.backends import InMemoryBucketStore
-    from quick_stream_spark.streaming.stream import UpsertQuickStream
-
-    t = KeyedTable(
-        spark,
-        os.path.join(tmp_table_dir, "stored"),
-        keys=("pkey",),
-        version_col="modified_date",
-        arrival_col="arrival",
-        num_buckets=2,
-        store=InMemoryBucketStore(spark),
-    )
-    for op in (t.compact, t.maybe_compact, t.file_count):
-        with pytest.raises(ValueError, match="BucketStore"):
-            op()
-    with pytest.raises(ValueError, match="auto_compact_every"):
-        UpsertQuickStream(t, auto_compact_every=2)

@@ -75,7 +75,7 @@ class Model:
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("protocol", ["direct", "manifest", "logstore"])
+@pytest.mark.parametrize("protocol", ["direct", "manifest"])
 @settings(
     max_examples=12,
     deadline=None,
@@ -83,16 +83,10 @@ class Model:
 )
 @given(scenario=scenario)
 def test_end_state_matches_reference_model(spark, tmp_path_factory, protocol, scenario):
-    """Runs under both commit protocols AND the log-structured store
-    backend: every storage path must reproduce the reference end-state
-    semantics row for row."""
+    """Runs under both commit protocols: every storage path must
+    reproduce the reference end-state semantics row for row."""
     ops, newer_wins = scenario
     work = tmp_path_factory.mktemp("prop")
-    store_kw = {}
-    if protocol == "logstore":
-        from quick_stream_spark.operators.backends import LogStructuredBucketStore
-
-        store_kw = {"store": LogStructuredBucketStore(spark, str(work / "log"))}
     table = KeyedTable(
         spark,
         str(work / "t"),
@@ -100,8 +94,7 @@ def test_end_state_matches_reference_model(spark, tmp_path_factory, protocol, sc
         version_col="modified_date",
         arrival_col="arrival",
         num_buckets=2,
-        commit_protocol="direct" if protocol == "logstore" else protocol,
-        **store_kw,
+        commit_protocol=protocol,
     )
     model = Model(newer_wins)
     arrival_base = 0

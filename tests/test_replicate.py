@@ -241,38 +241,3 @@ def test_replicator_resumes_across_restart(spark, tmp_table_dir):
     src.soft_delete(df(spark, [(2, datetime(2024, 2, 1), 9, "x")]))
     assert rep2.sync() == 1
     assert state(rep2.replica) == state(src)
-
-
-def test_replica_converges_from_logstore_source(spark, tmp_table_dir):
-    """r8: the CDC family runs off a LOGSTORE-backed source — the store
-    shares the ManifestLog snapshot protocol, so read_changes /
-    snapshot_versions / checksums all generalize and the replica
-    converges exactly as from a manifest-mode source."""
-    from quick_stream_spark.operators.backends import LogStructuredBucketStore
-
-    src = KeyedTable(
-        spark,
-        os.path.join(tmp_table_dir, "src-ls"),
-        keys=("pkey",),
-        version_col="modified_date",
-        arrival_col="arrival",
-        num_buckets=4,
-        store=LogStructuredBucketStore(
-            spark, os.path.join(tmp_table_dir, "src-ls")
-        ),
-    )
-    rep = ChangeReplicator(
-        src, mk(spark, tmp_table_dir, "rep-ls", protocol="direct")
-    )
-    ops = [
-        lambda: src.upsert(df(spark, B1)),
-        lambda: src.upsert(df(spark, B2)),
-        lambda: src.soft_delete(df(spark, [(2, datetime(2024, 2, 1), 9, "x")])),
-        lambda: src.hard_delete(df(spark, [(3, datetime(2024, 2, 2), 10, "x")])),
-    ]
-    for op in ops:
-        op()
-        assert rep.sync() >= 1
-        assert state(rep.replica) == state(src)
-    assert rep.sync() == 0
-    assert src.content_checksum() == rep.replica.content_checksum()

@@ -584,7 +584,7 @@ def test_auto_clustered_compaction_keeps_zone_maps_sharp(spark, tmp_path):
     ).run(stream, available_now=True)
     assert not q.isActive
 
-    mapping = target._snapshot_log().read()
+    mapping = target._log.read()
     n_files = sum(len(fl) for fl in mapping.values())
     assert n_files <= 2 * 3  # compacted to <= target slices per bucket
     day = datetime(2024, 1, 2)

@@ -113,7 +113,7 @@ def test_stream_pointer_resume_across_cadence_crossing(spark, tmp_path):
 
     # cadence crossing spanned the restart: v3 is the checkpoint whose
     # base chain (v1, v2) was written across two query incarnations
-    log = reader._snapshot_log()
+    log = reader._log
     assert reader.snapshot_versions() == [1, 2, 3]
     docs = {v: log._read_doc(v) for v in (1, 2, 3)}
     assert "checkpoint_parquet" in docs[3]
@@ -183,7 +183,7 @@ def test_stream_merge_half_bounded_under_real_stream(
     assert got[3] == ("c2", True) and got[1] == ("a2", True)
     assert len(got) == 9
     # v3..v5 streamed; v3 was the cadence checkpoint, built distributed
-    log = fresh._snapshot_log()
+    log = fresh._log
     assert "checkpoint_parquet" in log._read_doc(3)
     assert "delta" in log._read_doc(4) and "delta" in log._read_doc(5)
 
@@ -215,7 +215,7 @@ def test_stream_soft_delete_pointer_layout(spark, tmp_path):
     full = _state(reader)
     assert full[2][1] is False and full[3][1] is False  # tombstoned
     assert sorted(_state(reader, active_only=True)) == [1, 4, 5, 6, 7, 8]
-    log = reader._snapshot_log()
+    log = reader._log
     assert reader.snapshot_versions() == [1, 2, 3]
     assert "delta" in log._read_doc(2)
     assert "checkpoint_parquet" in log._read_doc(3)
@@ -260,7 +260,7 @@ def test_stream_auto_rebucket_rides_pointer_cadence(spark, tmp_path):
     assert len(got) == 120 and all(v == ("x" * 64, True) for v in got.values())
     # log shape: merge deltas + at least one full checkpoint beyond the
     # cadence positions (the mid-stream resize)
-    log = reader._snapshot_log()
+    log = reader._log
     docs = {v: log._read_doc(v) for v in reader.snapshot_versions()}
     fulls = [v for v, d in docs.items() if "checkpoint_parquet" in d]
     cadence = [v for v in docs if v % 3 == 0]

@@ -81,14 +81,6 @@ def test_rebucket_preserves_content_and_future_merges(
         assert t2.count_fast() == 20
 
 
-def test_rebucket_rejected_for_store_backends(spark, tmp_table_dir):
-    from quick_stream_spark.operators.backends import InMemoryBucketStore
-
-    t = _t(spark, tmp_table_dir, store=InMemoryBucketStore(spark))
-    with pytest.raises(ValueError, match="BucketStore"):
-        t.rebucket(8)
-
-
 @pytest.mark.parametrize("protocol", ["direct", "manifest"])
 def test_maybe_rebucket_grows_with_volume(spark, tmp_table_dir, protocol):
     """The auto-resize policy: with a tiny per-bucket byte target the

@@ -134,3 +134,40 @@ def test_fence_epoch_survives_marker_and_is_claimable_when_absent(spark):
         f1.ensure()
     with pytest.raises(RuntimeError, match="fenced out"):
         f1.check()
+
+
+def test_simultaneous_takeovers_exactly_one_wins(spark):
+    """Two takeovers that both read the same epoch (the interleaving of
+    two writers starting at once) race for the same epoch marker; the
+    put-if-absent claim lets exactly one win and the other raises,
+    instead of both believing they hold epoch N+1."""
+    work = tempfile.mkdtemp(prefix="qss-fence-race-")
+    holder = WriterFence(spark, work)
+    holder.ensure()
+    seen = holder._read()
+
+    def reads_stale_epoch_first(fence):
+        # the first read (takeover's epoch probe) returns the marker as
+        # it stood before either claim; later reads are real
+        real = fence._read
+        calls = []
+
+        def read():
+            calls.append(1)
+            return seen if len(calls) == 1 else real()
+
+        fence._read = read
+        return fence
+
+    a = reads_stale_epoch_first(WriterFence(spark, work))
+    b = reads_stale_epoch_first(WriterFence(spark, work))
+    a.ensure()
+    with pytest.raises(RuntimeError, match=f"claimed epoch {holder.epoch + 1}"):
+        b.ensure()
+    assert a.epoch == holder.epoch + 1 and b.token is None
+    assert WriterFence(spark, work)._read()["token"] == a.token
+    a.check()  # the winner holds the directory
+    with pytest.raises(RuntimeError, match="fenced out"):
+        holder.check()
+    # older markers are pruned once the claim has landed
+    assert sorted(WriterFence(spark, work)._markers()) == [a.epoch]

@@ -19,7 +19,6 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from quick_stream_spark.operators.backends import LogStructuredBucketStore
 from quick_stream_spark.operators.commitlog import (
     ManifestLog,
     zone_overlaps,
@@ -46,10 +45,6 @@ def mk(spark, root, layout, name="t"):
     )
     if layout == "manifest":
         return KeyedTable(spark, path, commit_protocol="manifest", **kw)
-    if layout == "store":
-        return KeyedTable(
-            spark, path, store=LogStructuredBucketStore(spark, path), **kw
-        )
     return KeyedTable(spark, path, **kw)  # direct
 
 
@@ -62,7 +57,7 @@ def _files(frame):
     return set(frame.inputFiles())
 
 
-@pytest.mark.parametrize("layout", ["manifest", "store"])
+@pytest.mark.parametrize("layout", ["manifest"])
 def test_incremental_read_skips_untouched_buckets(spark, tmp_table_dir, layout):
     """Commit 1 spreads old rows over all buckets; commit 2 touches two
     keys.  'Rows modified since CUT' must (a) equal the full
@@ -93,7 +88,7 @@ def test_incremental_read_skips_untouched_buckets(spark, tmp_table_dir, layout):
     assert t.read_range("modified_date").count() == t.read().count()
 
 
-@pytest.mark.parametrize("layout", ["direct", "manifest", "store"])
+@pytest.mark.parametrize("layout", ["direct", "manifest"])
 def test_lookup_point_reads_every_layout(spark, tmp_table_dir, layout):
     t = mk(spark, tmp_table_dir, layout)
     t.upsert(df(spark, OLD))
@@ -119,7 +114,7 @@ def test_zones_ride_commits_and_carry_forward(spark, tmp_table_dir):
     verbatim; the second commit's new files carry the new bounds."""
     t = mk(spark, tmp_table_dir, "manifest")
     t.upsert(df(spark, OLD))
-    log = t._snapshot_log()
+    log = t._log
 
     def all_paths(mapping):
         return {p for fl in mapping.values() for p in fl}
@@ -145,10 +140,10 @@ def test_restore_preserves_zones(spark, tmp_table_dir):
     t = mk(spark, tmp_table_dir, "manifest")
     t.upsert(df(spark, OLD))
     v1 = t.snapshot_versions()[-1]
-    z1 = t._snapshot_log().read_zones(v1)
+    z1 = t._log.read_zones(v1)
     t.upsert(df(spark, NEW), newer_wins=True)
     t.restore(v1)
-    assert t._snapshot_log().read_zones() == z1
+    assert t._log.read_zones() == z1
     assert t.pruned_buckets("modified_date", lo=CUT) == []
 
 
@@ -166,13 +161,13 @@ def test_coverage_lost_then_restored_by_compaction(spark, tmp_table_dir):
 
     t = mk(spark, tmp_table_dir, "manifest")
     t.upsert(df(spark, NEW), newer_wins=True)  # touches 2 of 8+ buckets
-    assert t._snapshot_log().read_zones() is None  # coverage invariant
+    assert t._log.read_zones() is None  # coverage invariant
     assert t.pruned_buckets("modified_date", lo=CUT) is None
     got = {(r.pkey, r.payload) for r in t.read_range("modified_date", lo=CUT).collect()}
     assert got == {(1, "p1b"), (40, "fresh")}  # honest full-scan fallback
 
     t.compact()  # full rewrite → full coverage
-    assert t._snapshot_log().read_zones() is not None
+    assert t._log.read_zones() is not None
     ids = t.pruned_buckets("modified_date", lo=CUT)
     assert ids is not None and 0 < len(ids) <= 2
 
@@ -183,11 +178,11 @@ def test_all_null_zone_column_is_conservative(spark, tmp_table_dir):
         "modified_date", F.lit(None).cast("timestamp")
     )
     t.upsert(rows)
-    zones = t._snapshot_log().read_zones()
+    zones = t._log.read_zones()
     assert all(c["modified_date"] == [None, None] for c in zones.values())
     # NULL bounds: never skipped, result still exact (filter drops NULLs)
     assert set(t.pruned_buckets("modified_date", lo=CUT)) == set(
-        t._snapshot_log().read()
+        t._log.read()
     )
     assert t.read_range("modified_date", lo=CUT).count() == 0
     assert t.read_range("modified_date").count() == 4
@@ -294,7 +289,7 @@ def test_sorted_compaction_enables_within_bucket_skipping(spark, tmp_table_dir):
     t.upsert(df(spark, rows))
     t.compact(target_files_per_bucket=4, sort_by="modified_date")
 
-    log = t._snapshot_log()
+    log = t._log
     mapping = log.read()
     zones = log.read_zones()
     n_files = sum(len(fl) for fl in mapping.values())
@@ -392,7 +387,7 @@ def test_property_random_histories_prune_exactly(spark, tmp_path_factory):
         }
         assert got == want
 
-        log = t._snapshot_log()
+        log = t._log
         zones, mapping = log.read_zones(), log.read()
         if zones is not None:
             assert set(zones) == {p for fl in mapping.values() for p in fl}
@@ -451,12 +446,12 @@ def test_schema_evolution_adds_zone_column_conservatively(spark, tmp_table_dir):
         zone_map_cols=("modified_date", "score"),  # score doesn't exist yet
     )
     t.upsert(df(spark, OLD))  # schema has no 'score'
-    z1 = t._snapshot_log().read_zones()
+    z1 = t._log.read_zones()
     assert z1 and all("score" not in c for c in z1.values())
 
     evolved = df(spark, NEW).withColumn("score", F.lit(9).cast("long"))
     t.upsert(evolved, newer_wins=True)  # schema evolution adds 'score'
-    z2 = t._snapshot_log().read_zones()
+    z2 = t._log.read_zones()
     with_score = {p for p, c in z2.items() if "score" in c}
     assert with_score and all(z2[p]["score"] == [9, 9] for p in with_score)
 
@@ -529,7 +524,7 @@ def test_lookup_composes_with_key_zone_slices(spark, tmp_table_dir):
     rows = [(i, datetime(2024, 1, 1), i, f"p{i}") for i in range(256)]
     t.upsert(df(spark, rows))
     t.compact(target_files_per_bucket=8, sort_by="pkey")
-    n_files = sum(len(fl) for fl in t._snapshot_log().read().values())
+    n_files = sum(len(fl) for fl in t._log.read().values())
     assert n_files >= 12  # several key-sliced files per bucket
 
     got = {(r.pkey, r.payload) for r in t.lookup([7, 250]).collect()}
@@ -645,7 +640,7 @@ def test_unmarked_legacy_zones_are_not_trusted(spark, tmp_table_dir):
 
     t = mk(spark, tmp_table_dir, "manifest")
     t.upsert(df(spark, OLD))
-    log = t._snapshot_log()
+    log = t._log
     v = log.latest_version()
     # strip the marker in place, as a pre-r10 writer would have left it
     manifest = os.path.join(log.dir, f"v{v}.json")
@@ -689,7 +684,7 @@ def test_nan_bounds_fall_back_not_lie(spark, tmp_table_dir):
         )
     )
 
-    log = t._snapshot_log()
+    log = t._log
     manifest = os.path.join(log.dir, f"v{log.latest_version()}.json")
 
     def _reject(tok):
@@ -717,7 +712,7 @@ def test_zone_map_cols_persisted_and_adopted(spark, tmp_table_dir):
     an allowed upgrade that compaction completes."""
     t = mk(spark, tmp_table_dir, "manifest")
     t.upsert(df(spark, OLD))
-    assert t._snapshot_log().read_zones() is not None
+    assert t._log.read_zones() is not None
 
     # reopen with no zone_map_cols: adopts, and its commits keep zones
     t2 = KeyedTable(
@@ -726,7 +721,7 @@ def test_zone_map_cols_persisted_and_adopted(spark, tmp_table_dir):
     )
     assert t2.zone_map_cols == ZCOLS
     t2.upsert(df(spark, NEW), newer_wins=True)
-    assert t2._snapshot_log().read_zones() is not None  # coverage survives
+    assert t2._log.read_zones() is not None  # coverage survives
 
     # conflicting zone columns: loud construction-time error
     with pytest.raises(ValueError, match="zone-map columns"):
@@ -749,9 +744,9 @@ def test_zone_map_cols_persisted_and_adopted(spark, tmp_table_dir):
         zone_map_cols=ZCOLS,
     )
     up.upsert(df(spark, NEW), newer_wins=True)
-    assert up._snapshot_log().read_zones() is None  # carried files uncovered
+    assert up._log.read_zones() is None  # carried files uncovered
     up.compact()  # full rewrite re-establishes coverage
-    assert up._snapshot_log().read_zones() is not None
+    assert up._log.read_zones() is not None
     # and the upgrade is now recorded: a third open adopts it
     t3 = KeyedTable(
         spark, plain.path, keys=("pkey",), version_col="modified_date",
@@ -905,7 +900,7 @@ def test_property_composite_key_histories_prune_exactly(spark, tmp_path_factory)
         }
         assert got_r == want_r
 
-        log = t._snapshot_log()
+        log = t._log
         zones, mapping = log.read_zones(), log.read()
         if zones is not None:
             assert set(zones) == {p for fl in mapping.values() for p in fl}
@@ -984,7 +979,7 @@ def test_cdc_catchup_opens_only_delta_files(spark, tmp_table_dir):
         )
     vs = t.snapshot_versions()
     v_from, v_to = vs[-2], vs[-1]
-    log = t._snapshot_log()
+    log = t._log
     map_from, map_to = log.read(v_from), log.read(v_to)
     changed = {
         b
@@ -1156,7 +1151,7 @@ def test_composite_lookup_prunes_past_leading_prefix_on_zorder(
         .distinct()
         .collect()
     )
-    mapping, _, zones = t._snapshot_log().snapshot_view(None)
+    mapping, _, zones = t._log.snapshot_view(None)
     enc = sorted(t._encode_bound("pkey", r[0]) for r in rows_req)
     prefix_kept = sum(
         1
