@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 
 from pyspark.sql import SparkSession
@@ -292,11 +293,36 @@ class ManifestLog:
         # version -> resolved (mapping, stats, zones); bounded FIFO
         self._snap_cache: dict[int, tuple] = {}
         self._snap_cache_max = 4
+        # version -> parsed document, LRU-bounded to one reconstruction
+        # chain plus slack.  Published documents are immutable (put-if-
+        # absent) until vacuum collapses or deletes them, and vacuum
+        # clears both caches.
+        self._doc_cache: dict[int, dict] = {}
+        self._doc_cache_max = self.checkpoint_interval + 4
+        # evict-then-insert on either cache is check-then-act; readers
+        # may share one handle across threads
+        self._cache_lock = threading.Lock()
+        # (FileSystem, Path class) of the table's filesystem, resolved
+        # once: rebuilding it costs ~8 py4j round trips of reflection
+        self._hfs_handle = None
+
+    def _hfs(self):
+        """``(FileSystem, Path class)`` for every path under the table
+        root (manifest dir, commit dirs, checkpoints)."""
+        if self._hfs_handle is None:
+            fs, _, jvm = _fs(self.spark, self.table_path)
+            self._hfs_handle = (fs, jvm.org.apache.hadoop.fs.Path)
+        return self._hfs_handle
+
+    def _clear_caches(self) -> None:
+        self._doc_cache.clear()
+        self._snap_cache.clear()
 
     # ------------------------------------------------------------ read
 
     def versions(self) -> list[int]:
-        fs, p, jvm = _fs(self.spark, self.dir)
+        fs, Path = self._hfs()
+        p = Path(self.dir)
         if not fs.exists(p):
             return []
         out = []
@@ -313,18 +339,58 @@ class ManifestLog:
         vs = self.versions()
         return vs[-1] if vs else None
 
+    def _doc_path(self, version: int):
+        return self._hfs()[1](os.path.join(self.dir, f"v{version}.json"))
+
     def _read_doc(self, version: int) -> dict:
-        """Parse one manifest document (full or delta) as written."""
-        fs, _, jvm = _fs(self.spark, self.dir)
-        p = jvm.org.apache.hadoop.fs.Path(os.path.join(self.dir, f"v{version}.json"))
-        if not fs.exists(p):
-            raise FileNotFoundError(f"no manifest version {version} in {self.dir}")
-        stream = fs.open(p)
+        """Parse one manifest document (full or delta) as written;
+        cached by version.  A cache hit does not touch the filesystem:
+        :meth:`_walk` probes the version a walk starts from."""
+        doc = self._doc_cache.pop(version, None)
+        if doc is None:
+            fs, _ = self._hfs()
+            p = self._doc_path(version)
+            if not fs.exists(p):
+                raise FileNotFoundError(
+                    f"no manifest version {version} in {self.dir}"
+                )
+            stream = fs.open(p)
+            try:
+                data = bytes(
+                    self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(
+                        stream
+                    )
+                )
+            finally:
+                stream.close()
+            doc = json.loads(data.decode("utf-8"))
+        with self._cache_lock:
+            while len(self._doc_cache) >= self._doc_cache_max:
+                self._doc_cache.pop(next(iter(self._doc_cache)))
+            self._doc_cache[version] = doc
+        return doc
+
+    def _walk(self, fn, version: int):
+        """Run the chain walk ``fn(version)`` over the caches.  A walk
+        from a CACHED version first checks that its document exists, so
+        a version another handle vacuumed raises ``FileNotFoundError``
+        exactly as an uncached read does.  A walk that hits a missing
+        document retries once on empty caches: another handle's vacuum
+        may have collapsed a cached delta's chain into a full document
+        and deleted the versions behind it."""
+        if version in self._snap_cache or version in self._doc_cache:
+            if not self._hfs()[0].exists(self._doc_path(version)):
+                self._clear_caches()
+                raise FileNotFoundError(
+                    f"no manifest version {version} in {self.dir}"
+                )
         try:
-            data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        finally:
-            stream.close()
-        return json.loads(data.decode("utf-8"))
+            return fn(version)
+        except FileNotFoundError:
+            if not (self._doc_cache or self._snap_cache):
+                raise
+            self._clear_caches()
+            return fn(version)
 
     @staticmethod
     def _full_parts(raw: dict) -> tuple:
@@ -510,15 +576,18 @@ class ManifestLog:
         WITHOUT materializing it: ``(full_raw, deltas oldest-first)``.
         Every walked document is a small JSON (deltas are O(commit),
         pointer docs are O(1)); chains are bounded by the checkpoint
-        interval."""
-        deltas: list[dict] = []
-        v = version
-        while True:
-            raw = self._read_doc(v)
-            if "delta" not in raw:
-                return raw, list(reversed(deltas))
-            deltas.append(raw)
-            v -= 1
+        interval, and warm documents come from the cache."""
+
+        def walk(v):
+            deltas: list[dict] = []
+            while True:
+                raw = self._read_doc(v)
+                if "delta" not in raw:
+                    return raw, list(reversed(deltas))
+                deltas.append(raw)
+                v -= 1
+
+        return self._walk(walk, version)
 
     def _distributed_chain(self, version: int):
         """Shared front half of the distributed planning paths:
@@ -955,35 +1024,30 @@ class ManifestLog:
         an uncached read would (cached intermediate bases need no
         probe — vacuum collapses the oldest kept version to a full
         document, so a surviving document's whole chain survives)."""
-        if version in self._snap_cache:
-            fs, _, jvm = _fs(self.spark, self.dir)
-            p = jvm.org.apache.hadoop.fs.Path(
-                os.path.join(self.dir, f"v{version}.json")
-            )
-            if not fs.exists(p):
-                self._snap_cache.pop(version, None)
-                raise FileNotFoundError(
-                    f"no manifest version {version} in {self.dir}"
-                )
-            return self._snap_cache[version]
-        chain = []
-        v = version
-        while v not in self._snap_cache:
-            raw = self._read_doc(v)
-            if "delta" not in raw:
-                snap = self._resolve_full(raw)
-                break
-            chain.append(raw)
-            v -= 1
-        else:
-            snap = self._snap_cache[v]
-        for raw in reversed(chain):
-            snap = self._apply_delta(snap, raw)
-        if version not in self._snap_cache:
-            while len(self._snap_cache) >= self._snap_cache_max:
-                self._snap_cache.pop(next(iter(self._snap_cache)))
-            self._snap_cache[version] = snap
-        return snap
+
+        def walk(version):
+            if version in self._snap_cache:
+                return self._snap_cache[version]
+            chain = []
+            v = version
+            while v not in self._snap_cache:
+                raw = self._read_doc(v)
+                if "delta" not in raw:
+                    snap = self._resolve_full(raw)
+                    break
+                chain.append(raw)
+                v -= 1
+            else:
+                snap = self._snap_cache[v]
+            for raw in reversed(chain):
+                snap = self._apply_delta(snap, raw)
+            with self._cache_lock:
+                while len(self._snap_cache) >= self._snap_cache_max:
+                    self._snap_cache.pop(next(iter(self._snap_cache)))
+                self._snap_cache[version] = snap
+            return snap
+
+        return self._walk(walk, version)
 
     def snapshot_view(self, version: int | None = None) -> tuple:
         """The resolved ``(mapping, stats, zones)`` at ``version`` —
@@ -1208,8 +1272,8 @@ class ManifestLog:
         kernel makes atomic-exclusive (EEXIST).  On HDFS-like stores,
         ``rename`` is atomic-no-overwrite by contract and is used
         as-is."""
-        fs, _, jvm = _fs(self.spark, self.dir)
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(self.dir))
+        fs, Path = self._hfs()
+        fs.mkdirs(Path(self.dir))
         if delta is not None:
             doc = {"version": version, "delta": delta, **self._op_fields(op)}
             if delta.get("zones"):
@@ -1221,10 +1285,7 @@ class ManifestLog:
         if not ok and cp_name is not None:
             # lost the publish race: reclaim this attempt's checkpoint
             # directory immediately (vacuum would get it eventually)
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(os.path.join(self.dir, cp_name)),
-                True,
-            )
+            fs.delete(Path(os.path.join(self.dir, cp_name)), True)
         return ok
 
     def _full_body(
@@ -1782,11 +1843,8 @@ class ManifestLog:
             body = json.dumps(doc).encode("utf-8")
         if self._put_if_absent(body, new_version):
             return new_version
-        fs, _, jvm = _fs(self.spark, self.dir)
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(os.path.join(self.dir, cp_name)),
-            True,
-        )
+        fs, Path = self._hfs()
+        fs.delete(Path(os.path.join(self.dir, cp_name)), True)
         raise ConcurrentCommitError(
             f"concurrent commit detected: v{new_version} already exists in "
             f"{self.dir} (restore carries no transaction declaration, so "
@@ -1907,13 +1965,8 @@ class ManifestLog:
             if ok:
                 return version
             if cp_name is not None:
-                fs, _, jvm = _fs(self.spark, self.dir)
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(
-                        os.path.join(self.dir, cp_name)
-                    ),
-                    True,
-                )
+                fs, Path = self._hfs()
+                fs.delete(Path(os.path.join(self.dir, cp_name)), True)
             # lost the race: O(window) conflict check over delta docs
             cur_v = self.latest_version()
             if cur_v is None or cur_v < version:
@@ -1988,7 +2041,8 @@ class ManifestLog:
     def list_bucket_files(self, commit_dir: str) -> dict[int, list[str]]:
         """Map ``<commit_dir>/__qss_bucket=N/*.parquet`` to bucket ->
         table-relative paths (relative paths keep the table relocatable)."""
-        fs, p, jvm = _fs(self.spark, commit_dir)
+        fs, Path = self._hfs()
+        p = Path(commit_dir)
         mapping: dict[int, list[str]] = {}
         if not fs.exists(p):
             return mapping
@@ -2083,7 +2137,7 @@ class ManifestLog:
         paths = self._kept_paths_df([v])
         if paths is None:
             return None
-        table_uri = _fs(self.spark, self.table_path)[1].toUri().toString()
+        table_uri = self._hfs()[1](self.table_path).toUri().toString()
         u = urlparse(table_uri)
         if u.scheme in ("", "file"):
             base = unquote(u.path)
@@ -2212,12 +2266,11 @@ class ManifestLog:
         (bounded by the garbage)."""
         from urllib.parse import urlparse
 
-        fs, croot, jvm = _fs(
-            self.spark, os.path.join(self.table_path, COMMITS_DIR)
-        )
+        fs, Path = self._hfs()
+        croot = Path(os.path.join(self.table_path, COMMITS_DIR))
         if not fs.exists(croot):
             return None
-        table_jpath = _fs(self.spark, self.table_path)[1]
+        table_jpath = Path(self.table_path)
         table_root = table_jpath.toUri().getPath()
         table_uri = table_jpath.toUri().toString()
         cdir_uris = [
@@ -2243,7 +2296,7 @@ class ManifestLog:
                 )
             else:  # pragma: no cover - py4j-only FS not in this env
                 listing, spool_path = self._vacuum_listing_spool(
-                    fs, croot, jvm, table_root
+                    fs, croot, self.spark._jvm, table_root
                 )
                 if listing is None:
                     return 0
@@ -2254,7 +2307,7 @@ class ManifestLog:
             ).select("p", "k")
             removed = 0
             for r in doomed.toLocalIterator():
-                fs.delete(jvm.org.apache.hadoop.fs.Path(r.p), False)
+                fs.delete(Path(r.p), False)
                 if r.k == "pq":
                     removed += 1
         finally:
@@ -2284,6 +2337,7 @@ class ManifestLog:
         line with its retention-period guard).  A vacuumed-away BASE
         manifest makes a concurrent committer's conflict check fail
         loudly (FileNotFoundError), never silently."""
+        self._clear_caches()
         vs = self.versions()
         keep = vs[-keep_versions:] if vs else []
         # pointer-layout kept versions: referenced paths stay a
@@ -2325,11 +2379,9 @@ class ManifestLog:
                         if k in raw0:
                             doc0[k] = raw0[k]
                     body = json.dumps(doc0).encode("utf-8")
-                fs0, _, jvm0 = _fs(self.spark, self.dir)
-                final = jvm0.org.apache.hadoop.fs.Path(
-                    os.path.join(self.dir, f"v{v0}.json")
-                )
-                tmp = jvm0.org.apache.hadoop.fs.Path(
+                fs0, Path = self._hfs()
+                final = self._doc_path(v0)
+                tmp = Path(
                     os.path.join(self.dir, f".tmp-{uuid.uuid4().hex}.json")
                 )
                 out = fs0.create(tmp, True)
@@ -2350,11 +2402,15 @@ class ManifestLog:
                             f"vacuum could not replace v{v0}.json with "
                             "its collapsed checkpoint"
                         )
+        # the walks above cached pre-collapse documents, including the
+        # versions about to be deleted
+        self._clear_caches()
         if ref_df is not None:
             removed = self._vacuum_files_distributed(ref_df) or 0
             return removed + self._vacuum_metadata(vs, keep_versions)
-        fs, croot, jvm = _fs(self.spark, os.path.join(self.table_path, COMMITS_DIR))
-        table_root = _fs(self.spark, self.table_path)[1].toUri().getPath()
+        fs, Path = self._hfs()
+        croot = Path(os.path.join(self.table_path, COMMITS_DIR))
+        table_root = Path(self.table_path).toUri().getPath()
         removed = 0
         if fs.exists(croot):
             for cdir in fs.listStatus(croot):
@@ -2393,13 +2449,10 @@ class ManifestLog:
         race-losing publishes — vacuum already requires no commit in
         flight, so an unreferenced cp-* dir is never in use).  Returns
         0 (data-file counting happens in the reclaim paths)."""
+        fs3, Path = self._hfs()
         for v in vs[:-keep_versions] if keep_versions else vs:
-            fs2, _, jvm2 = _fs(self.spark, self.dir)
-            fs2.delete(
-                jvm2.org.apache.hadoop.fs.Path(os.path.join(self.dir, f"v{v}.json")),
-                False,
-            )
-        fs3, mdir_p, jvm3 = _fs(self.spark, self.dir)
+            fs3.delete(self._doc_path(v), False)
+        mdir_p = Path(self.dir)
         if fs3.exists(mdir_p):
             live_cps = set()
             for v in self.versions():

@@ -57,11 +57,16 @@ _SRC = "__qss_src"
 _RN = "__qss_rn"
 
 # Ceiling for the Observation-based per-commit stats fast path (r15):
-# each bucket contributes two global-aggregate expressions to the write
+# each bucket contributes two terms to the array aggregates on the write
 # job's CollectMetrics node, so enumerating stays cheap only while the
 # bucket count is modest; a maybe_rebucket'ed huge table falls back to
 # the bounded per-commit scan, which that scale amortizes anyway.
 _OBS_STATS_MAX_BUCKETS = 256
+
+
+def _sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -438,9 +443,16 @@ class KeyedTable:
             df = df.withColumn(BUCKET_COL, self._bucket_expr())
         return df
 
-    def _read_current_buckets(self, touched: list[int]) -> DataFrame:
+    def _read_current_buckets(
+        self, touched: list[int]
+    ) -> tuple[DataFrame, int | None]:
         """Current rows of ONLY the touched buckets — the merge half's
-        snapshot read.  On pointer-layout (parquet-checkpoint)
+        snapshot read — and the version they were read at, which the
+        commit then declares as its base: the log is listed once per
+        commit, and a writer that publishes after this read forces the
+        optimistic-concurrency check instead of becoming the base.
+
+        On pointer-layout (parquet-checkpoint)
         snapshots the bucket->files mapping comes from a bucket-
         pushdown fetch (``bucket_mapping_distributed``: one filtered
         checkpoint aggregation + the O(chain) delta replay) instead of
@@ -451,7 +463,9 @@ class KeyedTable:
         checkpoint read + toArrow — just to prune to its touched
         buckets).  Inline or cached snapshots return ``None`` from the
         pushdown and take the in-memory mapping, bounded by the
-        parquet threshold by construction."""
+        parquet threshold by construction.  The chain walk that tells
+        the two apart reads cached documents, so an inline head costs no
+        extra manifest read."""
         v = self._log.latest_version()
         sub = (
             self._log.bucket_mapping_distributed(touched, v)
@@ -459,8 +473,11 @@ class KeyedTable:
             else None
         )
         if sub is not None:
-            return self._read_manifest(with_bucket=True, mapping_override=sub)
-        return self._read_manifest(with_bucket=True, bucket_ids=touched)
+            return self._read_manifest(with_bucket=True, mapping_override=sub), v
+        return (
+            self._read_manifest(with_bucket=True, version=v, bucket_ids=touched),
+            v,
+        )
 
     def _read_snapshot(self, version: int, bucket_ids: list[int]) -> DataFrame:
         """A historical snapshot restricted to ``bucket_ids``, WITHOUT
@@ -474,29 +491,35 @@ class KeyedTable:
         self,
         df: DataFrame,
         replaced_buckets: list[int],
+        base_version: int | None,
         options: dict | None = None,
         op: str = "write",
     ) -> None:
         """Append-only commit: write ``df`` (with its bucket column)
         under a fresh commit dir, then publish a new manifest carrying
-        forward every bucket not in ``replaced_buckets``.  A replaced
-        bucket with no rows in ``df`` simply has no files in the new
-        snapshot — hard-delete emptying needs no directory surgery.
+        forward every bucket not in ``replaced_buckets`` from
+        ``base_version`` — the snapshot ``df`` was derived from (``None``
+        = no snapshot yet).  A writer that published since then sends
+        the publish through the optimistic-concurrency check.  A
+        replaced bucket with no rows in ``df`` simply has no files in
+        the new snapshot — hard-delete emptying needs no directory
+        surgery.
 
         Each commit also records per-bucket ``[rows, active_rows]`` in
         the manifest (the Delta add-file-stats analog).  When the table
         tracks NO zone-map columns and the bucket count is small enough
         to enumerate (r15, guide §2.4: remove whole passes), the stats
-        ride an ``Observation`` attached to the WRITE job itself —
-        per-bucket counts as 2x``num_buckets`` global aggregates
-        collected by the executors during the write, zero extra jobs
-        and zero re-reads of the fresh commit dir.  Otherwise (zone
-        maps need per-FILE min/max, unknowable before files exist; or
-        a rebucketed table with a huge bucket count) the previous
-        footer-weight aggregation over ONLY the commit's new files
-        runs as before.  Either way the artifact is
-        ``num_buckets``-bounded — so ``count_fast`` answers COUNT(*)
-        from pure metadata at any scale."""
+        ride an ``Observation`` attached to the WRITE job itself: two
+        array aggregates, ``r`` (rows per bucket) and ``a`` (active rows
+        per bucket), each built from one SQL expression, collected by
+        the executors during the write — zero extra jobs, zero re-reads
+        of the fresh commit dir, and a constant number of py4j calls
+        whatever the bucket count.  Otherwise (zone maps need per-FILE
+        min/max, unknowable before files exist; or a rebucketed table
+        with a huge bucket count) the footer-weight aggregation over
+        ONLY the commit's new files runs instead.  Either way the
+        artifact is ``num_buckets``-bounded — so ``count_fast`` answers
+        COUNT(*) from pure metadata at any scale."""
         commit_dir = self._log.new_commit_dir()
         names = df.schema.fieldNames()
         zcols = [c for c in self.zone_map_cols if c in names and c != BUCKET_COL]
@@ -509,32 +532,28 @@ class KeyedTable:
             from pyspark.sql import Observation
 
             obs = Observation()
-            aggs = []
-            for b in range(self.num_buckets):
-                hit = F.col(BUCKET_COL) == b
-                aggs.append(F.count(F.when(hit, 1)).alias(f"r{b}"))
-                aggs.append(
-                    F.coalesce(
-                        F.sum(
-                            F.when(hit, F.col(self.soft_delete_col).cast("long"))
-                        ),
-                        F.lit(0),
-                    ).alias(f"a{b}")
+            b, live = _sql_ident(BUCKET_COL), _sql_ident(self.soft_delete_col)
+            n = self.num_buckets
+
+            def per_bucket(cond):
+                terms = ", ".join(
+                    f"count_if({b} = {i}{cond})" for i in range(n)
                 )
-            # defensive: a bucket value outside [0, num_buckets) (no
-            # known writer produces one) falls back to the scan path
-            # below rather than publishing stats that miss rows
-            aggs.append(
-                F.count(
-                    F.when(
-                        F.col(BUCKET_COL).isNull()
-                        | (F.col(BUCKET_COL) < 0)
-                        | (F.col(BUCKET_COL) >= self.num_buckets),
-                        1,
-                    )
-                ).alias("oob")
+                return F.expr(f"array({terms})")
+
+            # count_if skips a NULL liveness flag, the same as the
+            # coalesced sum of its long cast.  oob is defensive: a
+            # bucket value outside [0, num_buckets) (no known writer
+            # produces one) falls back to the scan path below rather
+            # than publishing stats that miss rows
+            df = df.observe(
+                obs,
+                per_bucket("").alias("r"),
+                per_bucket(f" AND {live}").alias("a"),
+                F.expr(f"count_if({b} IS NULL OR {b} < 0 OR {b} >= {n})").alias(
+                    "oob"
+                ),
             )
-            df = df.observe(obs, *aggs)
         writer = df.write.mode("overwrite")
         for key, val in (options or {}).items():
             writer = writer.option(key, val)
@@ -542,11 +561,6 @@ class KeyedTable:
         new_files = self._log.list_bucket_files(commit_dir)
         if self.key_bloom_bits and new_files:
             self._write_kbloom_sidecars(commit_dir, df.schema)
-        # pin the base snapshot: the carried-forward entries and the
-        # optimistic-concurrency conflict check must describe the SAME
-        # version, or a writer publishing between the two reads would
-        # make the re-point silently drop its files
-        base_version = self._log.latest_version()
         # fresh per-commit metadata, bounded by the commit, never the
         # table (shared by both commit layouts below): from the write
         # job's Observation when armed, else one footer-weight
@@ -562,11 +576,11 @@ class KeyedTable:
                 if row is not None and int(row.get("oob") or 0) > 0:
                     row = None  # impossible bucket value: trust the scan
             if row is not None:
-                new_stats = {}
-                for b in range(self.num_buckets):
-                    r = int(row[f"r{b}"] or 0)
-                    if r:
-                        new_stats[b] = [r, int(row[f"a{b}"] or 0)]
+                new_stats = {
+                    i: [int(r), int(a)]
+                    for i, (r, a) in enumerate(zip(row["r"], row["a"]))
+                    if r
+                }
             else:
                 new_stats, new_zones = compute_commit_meta(
                     self.spark,
@@ -599,13 +613,15 @@ class KeyedTable:
             if v is not None:
                 self._exists_cache = True
                 return
-        mapping = self._log.read(base_version) if base_version is not None else {}
-        prev_stats = (
-            self._log.read_stats(base_version) if base_version is not None else {}
-        )  # {} = no snapshot, None = pre-stats
-        prev_zones = (
-            self._log.read_zones(base_version) if base_version is not None else {}
+        # {} = no snapshot; stats None = pre-stats.  The view is read-
+        # only: the mapping is copied, the metadata carry-forward builds
+        # new dicts
+        base_map, prev_stats, prev_zones = (
+            self._log.snapshot_view(base_version)
+            if base_version is not None
+            else ({}, {}, {})
         )
+        mapping = {b: list(fl) for b, fl in base_map.items()}
         for b in replaced_buckets:
             mapping.pop(b, None)
         for b, fl in new_files.items():
@@ -1865,7 +1881,10 @@ class KeyedTable:
             # every old bucket is replaced; the new snapshot holds only
             # the new assignment (atomic: readers see old or new, never
             # a mix)
-            self._write_manifest_commit(df, list(self._log.read().keys()), op="rebucket")
+            base = self._log.latest_version()
+            self._write_manifest_commit(
+                df, list(self._log.read(base).keys()), base, op="rebucket"
+            )
         else:
             df = df.persist()
             try:
@@ -1983,8 +2002,18 @@ class KeyedTable:
             )
 
     def _touched(self, updates_b: DataFrame) -> list[int]:
-        # bounded by num_buckets, never by data volume
-        return [r[0] for r in updates_b.select(BUCKET_COL).distinct().collect()]
+        """The batch's bucket ids, from ONE job: a ``collect_set``
+        observed on a ``noop`` write of the batch, which also fills the
+        batch's ``persist()`` for the merge that follows, where a
+        ``distinct().collect()`` runs 3 jobs under AQE.  Bounded by
+        ``num_buckets``, never by data volume."""
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        updates_b.observe(obs, F.collect_set(BUCKET_COL).alias("b")).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        return sorted(obs.get["b"])
 
     def _current_in(self, bucket_ids: list[int]) -> DataFrame:
         # partition-pruned scan: only the touched bucket directories are read
@@ -2083,7 +2112,7 @@ class KeyedTable:
         if not self.exists():
             first, obs = self._observe_merge(self._dedup(up))
             if self._log is not None:
-                self._write_manifest_commit(first, [], op="upsert")
+                self._write_manifest_commit(first, [], None, op="upsert")
             else:
                 self._write(first, "overwrite")
             self._record_merge_stats(obs)
@@ -2100,7 +2129,7 @@ class KeyedTable:
                 # pruning), so the touched-bucket list is collected
                 # explicitly — bounded by num_buckets
                 touched = self._touched(up)
-                current = self._read_current_buckets(touched)
+                current, base = self._read_current_buckets(touched)
             else:
                 current = self._pruned_current(up)
             merged = (
@@ -2113,7 +2142,7 @@ class KeyedTable:
             )
             merged, obs = self._observe_merge(merged)
             if self._log is not None:
-                self._write_manifest_commit(merged, touched, op="upsert")
+                self._write_manifest_commit(merged, touched, base, op="upsert")
             else:
                 self._write(merged, "overwrite", repartition=False)
             self._record_merge_stats(obs)
@@ -2320,9 +2349,10 @@ class KeyedTable:
             salt = F.pmod(F.xxhash64(*[F.col(k) for k in self.keys]), F.lit(target_files_per_bucket))
             compacted = current.repartition(F.col(BUCKET_COL), salt)
         if self._log is not None:
+            base = self._log.latest_version()
             self._write_manifest_commit(
-                compacted, list(self._log.read().keys()), options=options,
-                op="compact",
+                compacted, list(self._log.read(base).keys()), base,
+                options=options, op="compact",
             )
             return
         self._write(compacted, "overwrite", repartition=False, options=options)
@@ -2428,7 +2458,7 @@ class KeyedTable:
         try:
             if self._log is not None:
                 touched = self._touched(dk)
-                current = self._read_current_buckets(touched)
+                current, base = self._read_current_buckets(touched)
             else:
                 touched = None
                 current = self._pruned_current(dk)
@@ -2442,7 +2472,7 @@ class KeyedTable:
                 F.when(F.col("__qss_del"), F.lit(False)).otherwise(F.col(self.soft_delete_col)),
             ).drop("__qss_del")
             if self._log is not None:
-                self._write_manifest_commit(merged, touched, op="soft_delete")
+                self._write_manifest_commit(merged, touched, base, op="soft_delete")
             else:
                 # like the upsert path (repartition=False): the flag join
                 # keyed on the key columns leaves rows bucket-coherent, so
@@ -2463,15 +2493,15 @@ class KeyedTable:
         dk = self._dedup(deletes).select(*self.keys).withColumn(BUCKET_COL, self._bucket_expr())
         if not self.exists():
             return
-        dk = dk.persist()  # consumers: _touched collect + the anti-join
+        dk = dk.persist()  # consumers: the _touched job + the anti-join
         try:
             touched = self._touched(dk)
             if not touched:
                 return
             if self._log is not None:
-                current = self._read_current_buckets(touched)
+                current, base = self._read_current_buckets(touched)
                 remaining = current.join(dk.drop(BUCKET_COL), on=self.keys, how="left_anti")
-                self._write_manifest_commit(remaining, touched, op="hard_delete")
+                self._write_manifest_commit(remaining, touched, base, op="hard_delete")
                 return
             current = self._current_in(touched)
             # one materialization serves the emptied-bucket probe AND the

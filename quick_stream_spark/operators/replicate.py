@@ -135,7 +135,9 @@ class ChangeReplicator:
             .filter(F.col(BUCKET_COL).isin(bad))
         )
         if self.replica._log is not None:
-            self.replica._write_manifest_commit(rows, bad)
+            self.replica._write_manifest_commit(
+                rows, bad, self.replica._log.latest_version()
+            )
         else:
             self.replica._write(rows, "overwrite")
             # dynamic overwrite only touches buckets PRESENT in `rows`: a

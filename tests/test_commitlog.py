@@ -680,3 +680,109 @@ def test_vacuum_spool_cleaned_up_when_walk_raises(tmp_path):
         )
     assert fs.stream.closed
     assert len(fs.deleted) == 1 and "vacuum-spool-" in fs.deleted[0]
+
+
+def test_vacuumed_versions_raise_from_warm_caches(spark, tmp_table_dir):
+    """Each log caches parsed documents and resolved snapshots by
+    version.  ``vacuum()`` clears both, so a version it deleted raises
+    ``FileNotFoundError`` even when it was cached.  A version deleted by
+    ANOTHER handle's vacuum raises too (the head of every walk is
+    probed), and a cached delta whose chain that vacuum collapsed still
+    resolves (the walk retries uncached)."""
+    t = mk(spark, tmp_table_dir, "t", manifest_checkpoint_interval=8)
+    t.upsert(df(spark, BATCH1))
+    t.upsert(df(spark, BATCH2))
+    t.soft_delete(df(spark, BATCH1[1:2]))
+    vs = t.snapshot_versions()
+    assert vs == [1, 2, 3]
+    other, third = (
+        mk(spark, tmp_table_dir, "t", manifest_checkpoint_interval=8)
+        for _ in range(2)
+    )
+    for log in (t._log, other._log, third._log):
+        for v in vs:
+            log.read(v)  # warm: every document and snapshot cached
+    want = state(t)
+    t.vacuum(keep_versions=1)
+    for v in vs[:-1]:
+        with pytest.raises(FileNotFoundError):
+            t._log.read(v)
+        with pytest.raises(FileNotFoundError):
+            t.read(version=v).collect()
+        with pytest.raises(FileNotFoundError):
+            other._log.read_stats(v)
+    # the third handle still holds v3's pre-collapse delta document but
+    # not the deleted documents behind it
+    third._log._snap_cache.clear()
+    third._log._doc_cache.pop(2)
+    assert "delta" in third._log._doc_cache[3]
+    head, deltas = third._log._chain_to_checkpoint(3)
+    assert "delta" not in head and deltas == []
+    assert state(other) == state(third) == state(t) == want
+    other.upsert(df(spark, [(5, datetime(2024, 2, 1), 9, "e1")]))
+    assert state(t)[5] == ("e1", True)
+
+
+def test_publish_between_commits_is_seen_or_conflicts(
+    spark, tmp_table_dir, monkeypatch
+):
+    """Warm caches never hide another writer.  Writer B publishing
+    BETWEEN two commits of writer A is seen by A's next commit (it lists
+    the log once per commit), so both updates survive.  B publishing
+    after A's snapshot read but before A's publish sends A through the
+    optimistic-concurrency check, because A's base is the version it
+    read: a same-bucket update raises instead of silently dropping B's
+    row, and a disjoint one re-points so both land.  The publish-time
+    races are covered by test_disjoint_bucket_race_re_points_and_both_
+    commits_land, test_same_bucket_race_still_raises and
+    test_threaded_disjoint_writers_all_land (inline layout), and by
+    tests/test_bounded_commits.py's test_bounded_disjoint_race_on_delta_
+    layout, test_bounded_overlap_race_raises and
+    test_overlap_race_with_identical_files_re_targets."""
+    from quick_stream_spark.operators.commitlog import ConcurrentCommitError
+
+    buckets = _seed_buckets(spark, tmp_table_dir)
+    same = [k for k, b in buckets.items() if b == buckets[1] and k != 1]
+    other_key = next(k for k, b in buckets.items() if b != buckets[1])
+    a = _mk_occ(spark, tmp_table_dir)
+    a.upsert(df(spark, _OCC_SEED))
+    a.upsert(df(spark, [(1, datetime(2024, 2, 1), 20, "a-1")]))
+    # B between two commits of A, same bucket
+    b_key = same[0] if same else 1
+    _mk_occ(spark, tmp_table_dir).upsert(
+        df(spark, [(b_key, datetime(2024, 2, 2), 21, "b-1")])
+    )
+    a.upsert(df(spark, [(1, datetime(2024, 2, 3), 22, "a-2")]))
+    rows = {r.pkey: r.payload for r in _mk_occ(spark, tmp_table_dir).read().collect()}
+    assert rows[1] == "a-2"
+    assert rows[b_key] == ("a-2" if b_key == 1 else "b-1")
+
+    real_read = KeyedTable._read_current_buckets
+
+    def race_after_read(key, payload):
+        state_ = {"done": False}
+
+        def racing(self, touched):
+            out = real_read(self, touched)
+            if not state_["done"]:
+                state_["done"] = True
+                _mk_occ(spark, tmp_table_dir).upsert(
+                    df(spark, [(key, datetime(2024, 3, 1), 30, payload)])
+                )
+            return out
+
+        monkeypatch.setattr(KeyedTable, "_read_current_buckets", racing)
+
+    race_after_read(b_key, "b-2")
+    with pytest.raises(ConcurrentCommitError):
+        a.upsert(df(spark, [(1, datetime(2024, 3, 2), 31, "a-3")]))
+    rows = {r.pkey: r.payload for r in _mk_occ(spark, tmp_table_dir).read().collect()}
+    assert rows[b_key] == "b-2"  # B's row was not overwritten
+
+    race_after_read(other_key, "x-B")
+    a.upsert(df(spark, [(1, datetime(2024, 3, 3), 32, "a-4")]))
+    monkeypatch.setattr(KeyedTable, "_read_current_buckets", real_read)
+    reader = _mk_occ(spark, tmp_table_dir)
+    rows = {r.pkey: r.payload for r in reader.read().collect()}
+    assert rows[1] == "a-4" and rows[other_key] == "x-B"
+    assert reader.count_fast() == reader.read().count() == len(_OCC_SEED)

@@ -209,3 +209,38 @@ def test_commit_meta_is_free_when_nothing_is_tracked():
         None, "/nonexistent", schema, "bucket", "row_active", ("missing",)
     )
     assert stats is None and zones == {}
+
+
+def test_observed_stats_match_the_footer_scan(spark, tmp_table_dir):
+    """The write job's observed per-bucket stats (two array aggregates
+    built as SQL text) and the footer scan over the commit's files
+    (taken when zone maps are tracked) publish the same ``[rows,
+    active_rows]`` for every bucket after every commit kind.  The
+    liveness column's name needs quoting in SQL text, and the first
+    batch carries false and NULL flags."""
+    from pyspark.sql import functions as F
+
+    live = "row-active"
+    obs = mk(spark, tmp_table_dir, name="obs", soft_delete_col=live)
+    scan = mk(
+        spark, tmp_table_dir, name="scan", soft_delete_col=live,
+        zone_map_cols=("pkey",),
+    )
+    rows = [(i, datetime(2024, 1, 1), i, f"p{i}") for i in range(24)]
+    flags = F.when(F.col("pkey") % 5 == 0, F.lit(None).cast("boolean")).otherwise(
+        F.col("pkey") % 3 != 0
+    )
+    steps = [
+        ("upsert", df(spark, rows).withColumn(live, flags)),
+        ("upsert", df(spark, [(3, datetime(2024, 1, 2), 40, "u3"),
+                              (30, datetime(2024, 1, 2), 41, "new")])),
+        ("soft_delete", df(spark, rows[4:9])),
+        ("hard_delete", df(spark, rows[10:13])),
+    ]
+    for op, batch in steps:
+        for t in (obs, scan):
+            getattr(t, op)(batch)
+        got = obs._log.read_stats()
+        assert got is not None and got == scan._log.read_stats(), op
+        assert sum(r for r, _ in got.values()) == obs.read().count()
+        assert sum(a for _, a in got.values()) == obs.read(active_only=True).count()
