@@ -1,10 +1,9 @@
-"""Manifest-based snapshot commits for :class:`KeyedTable` — the
-crash-consistent alternative to in-place dynamic partition overwrite.
+"""Manifest-based snapshot commits for :class:`KeyedTable` — every
+table write is one crash-atomic snapshot.
 
 The reference applies each cycle's statements with no transaction around
 them (upsert.rs:271-303), so a crash mid-cycle leaves whatever subset
-committed; the plain-parquet ``direct`` protocol here has the same
-exposure (merge.py:_write documents it).  ``commit_protocol="manifest"``
+committed; in-place parquet overwrite has the same exposure.  This log
 removes it with the same two-phase design Delta Lake / Iceberg use:
 
 1. **Data files are immutable and append-only.**  Every commit writes
@@ -40,6 +39,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import threading
 import uuid
 
@@ -133,40 +133,37 @@ def _fs(spark: SparkSession, path: str):
     return p.getFileSystem(hconf), p, jvm
 
 
-def put_if_absent(spark: SparkSession, dir_path: str, name: str, body: bytes) -> bool:
+def put_if_absent(fs, Path, dir_path: str, name: str, body: bytes) -> bool:
     """Atomically create ``dir_path/name`` holding ``body`` unless it
-    already exists; True when this call created it.  Write-temp, then
+    already exists; True when this call created it.  ``fs`` is the
+    caller's Hadoop FileSystem handle for ``dir_path`` and ``Path`` the
+    Hadoop Path class, so a publish builds neither.  Write-temp, then
     claim the final name: on a LOCAL filesystem Hadoop's ``rename`` is
     check-then-act (two concurrent renames can both succeed), so the
     claim is a hard link (POSIX link(2) is atomic-exclusive); on
     HDFS-like stores ``rename`` is atomic-no-overwrite by contract.
     The temp file is dot-prefixed, so listings that glob published
     names never see it."""
-    fs, _, jvm = _fs(spark, dir_path)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        os.path.join(dir_path, f".tmp-{uuid.uuid4().hex}-{name}")
-    )
+    tmp_name = f".tmp-{uuid.uuid4().hex}-{name}"
+    if fs.getScheme() == "file":
+        # the driver shares the JVM's local filesystem: write and link
+        # from Python, resolving the directory the way Hadoop does
+        local = fs.pathToFile(Path(dir_path)).getPath()
+        tmp, final = os.path.join(local, tmp_name), os.path.join(local, name)
+        with open(tmp, "wb") as out:
+            out.write(body)
+        try:
+            os.link(tmp, final)
+            return True
+        except FileExistsError:
+            return False
+        finally:
+            os.unlink(tmp)
+    tmp = Path(os.path.join(dir_path, tmp_name))
     out = fs.create(tmp, True)
     out.write(bytearray(body))
     out.close()
-    final = jvm.org.apache.hadoop.fs.Path(os.path.join(dir_path, name))
-    if fs.getScheme() == "file":
-        try:
-            jvm.java.nio.file.Files.createLink(
-                jvm.java.io.File(final.toUri().getPath()).toPath(),
-                jvm.java.io.File(tmp.toUri().getPath()).toPath(),
-            )
-            fs.delete(tmp, False)
-            return True
-        except Exception as exc:  # Py4JJavaError wrapping the Java exception
-            fs.delete(tmp, False)
-            java_exc = getattr(exc, "java_exception", None)
-            if java_exc is not None and "FileAlreadyExistsException" in (
-                java_exc.getClass().getName()
-            ):
-                return False
-            raise
-    if fs.rename(tmp, final):
+    if fs.rename(tmp, Path(os.path.join(dir_path, name))):
         return True
     fs.delete(tmp, False)
     return False
@@ -303,8 +300,10 @@ class ManifestLog:
         # may share one handle across threads
         self._cache_lock = threading.Lock()
         # (FileSystem, Path class) of the table's filesystem, resolved
-        # once: rebuilding it costs ~8 py4j round trips of reflection
+        # once: rebuilding it costs ~8 py4j round trips of reflection;
+        # likewise the (FileUtil, ArraySeq) classes _glob joins with
         self._hfs_handle = None
+        self._glob_utils = None
 
     def _hfs(self):
         """``(FileSystem, Path class)`` for every path under the table
@@ -314,6 +313,30 @@ class ManifestLog:
             self._hfs_handle = (fs, jvm.org.apache.hadoop.fs.Path)
         return self._hfs_handle
 
+    def _glob(self, directory: str, pattern: str) -> list[str]:
+        """Paths under ``directory`` matching the Hadoop glob
+        ``pattern``, sorted.  The JVM joins them into one string, so a
+        listing costs a fixed handful of py4j round trips instead of
+        several per entry (walking a listing's FileStatus array from
+        Python costs ~5 per entry, and a never-vacuumed log lists one
+        more version at every commit).  Glob characters in
+        ``directory`` are escaped: it names one directory."""
+        fs, Path = self._hfs()
+        literal = re.sub(r"([\\*?\[\]{}])", r"\\\1", directory)
+        found = fs.globStatus(Path(os.path.join(literal, pattern)))
+        if found is None:
+            return []
+        if self._glob_utils is None:
+            jvm = self.spark._jvm
+            self._glob_utils = (
+                jvm.org.apache.hadoop.fs.FileUtil,
+                jvm.scala.collection.immutable.ArraySeq,
+            )
+        file_util, array_seq = self._glob_utils
+        paths = array_seq.unsafeWrapArray(file_util.stat2Paths(found))
+        joined = paths.mkString("\n")
+        return joined.split("\n") if joined else []
+
     def _clear_caches(self) -> None:
         self._doc_cache.clear()
         self._snap_cache.clear()
@@ -321,18 +344,12 @@ class ManifestLog:
     # ------------------------------------------------------------ read
 
     def versions(self) -> list[int]:
-        fs, Path = self._hfs()
-        p = Path(self.dir)
-        if not fs.exists(p):
-            return []
         out = []
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    out.append(int(name[1:-5]))
-                except ValueError:
-                    continue
+        for path in self._glob(self.dir, "v*.json"):
+            try:
+                out.append(int(path.rsplit("/", 1)[1][1:-5]))
+            except ValueError:
+                continue
         return sorted(out)
 
     def latest_version(self) -> int | None:
@@ -1268,8 +1285,8 @@ class ManifestLog:
         existing destination), so two truly concurrent renames to the
         same version can BOTH report success and silently drop a commit
         — caught by the threaded-writers test.  There the publish is a
-        hard link (``Files.createLink`` → POSIX link(2)), which the
-        kernel makes atomic-exclusive (EEXIST).  On HDFS-like stores,
+        hard link (POSIX link(2)), which the kernel makes
+        atomic-exclusive (EEXIST).  On HDFS-like stores,
         ``rename`` is atomic-no-overwrite by contract and is used
         as-is."""
         fs, Path = self._hfs()
@@ -1412,7 +1429,7 @@ class ManifestLog:
         return self._try_publish(mapping, stats, version, zones=zones, op=op)
 
     def _put_if_absent(self, body: bytes, version: int) -> bool:
-        return put_if_absent(self.spark, self.dir, f"v{version}.json", body)
+        return put_if_absent(*self._hfs(), self.dir, f"v{version}.json", body)
 
     def commit(
         self,
@@ -2041,23 +2058,12 @@ class ManifestLog:
     def list_bucket_files(self, commit_dir: str) -> dict[int, list[str]]:
         """Map ``<commit_dir>/__qss_bucket=N/*.parquet`` to bucket ->
         table-relative paths (relative paths keep the table relocatable)."""
-        fs, Path = self._hfs()
-        p = Path(commit_dir)
+        rel_dir = os.path.relpath(commit_dir, self.table_path)
         mapping: dict[int, list[str]] = {}
-        if not fs.exists(p):
-            return mapping
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith("__qss_bucket=")):
-                continue
-            b = int(name.split("=", 1)[1])
-            for f in fs.listStatus(st.getPath()):
-                fname = f.getPath().getName()
-                if fname.endswith(".parquet"):
-                    rel = os.path.relpath(
-                        os.path.join(commit_dir, name, fname), self.table_path
-                    )
-                    mapping.setdefault(b, []).append(rel)
+        for path in self._glob(commit_dir, "__qss_bucket=*/*.parquet"):
+            bdir, fname = path.rsplit("/", 2)[1:]
+            b = int(bdir.split("=", 1)[1])
+            mapping.setdefault(b, []).append(os.path.join(rel_dir, bdir, fname))
         return mapping
 
     def resolve(self, mapping: dict[int, list[str]]) -> list[str]:

@@ -8,17 +8,17 @@ after any sequence of batches the table holds one row per key, carrying
 the values of that key's winning record; soft-deleted keys keep their row
 with ``row_active = false``.
 
-This module implements those semantics on a **bucket-partitioned parquet
-table**, rewritten in place (``commit_protocol='direct'``) or published as
-atomic snapshots through the manifest commit log
-(``commit_protocol='manifest'``, operators/commitlog.py).
+This module implements those semantics on a **hash-bucketed parquet
+table** whose every write is one crash-atomic snapshot published through
+the manifest commit log (operators/commitlog.py): data files are
+append-only, and a commit becomes visible all at once or not at all.
 
 Scale design (100 TB posture):
-  - The table is hash-bucketed on the key columns into ``num_buckets``
-    partition directories.  A merge touches only the buckets present in
-    the incoming batch: we read *only* those partitions (partition
-    pruning on the bucket column) and rewrite *only* those partitions
-    (dynamic partition overwrite).  An incremental batch of B rows costs
+  - Rows are hash-bucketed on the key columns into ``num_buckets``
+    buckets.  A merge touches only the buckets present in the incoming
+    batch: it reads *only* those buckets' files (file-list pruning from
+    the snapshot mapping) and replaces *only* those buckets in the next
+    snapshot.  An incremental batch of B rows costs
     O(B + size-of-touched-buckets), never a full-table rewrite.
   - ``num_buckets`` should scale with table size (buckets of ~1 GB are a
     good target); at 100 TB use ~100k buckets so a micro-batch touches a
@@ -233,16 +233,20 @@ class KeyedTable:
         tie_break: str = "first_arrival",
         num_buckets: int = 16,
         soft_delete_col: str = "row_active",
-        commit_protocol: str = "direct",
+        commit_protocol: str = "manifest",
         zone_map_cols: Sequence[str] | None = None,
         manifest_checkpoint_interval: int = 16,
         manifest_parquet_threshold: int = 50_000,
         key_bloom_bits: int = 0,
         key_bloom_hashes: int = 6,
     ) -> None:
-        if commit_protocol not in ("direct", "manifest"):
+        # every write is a manifest commit; the keyword survives only for
+        # callers that still name the protocol explicitly
+        if commit_protocol != "manifest":
             raise ValueError(
-                f"commit_protocol must be 'direct' or 'manifest', got {commit_protocol!r}"
+                f"commit_protocol must be 'manifest', got {commit_protocol!r}: "
+                "the in-place 'direct' protocol was removed, and every "
+                "KeyedTable write is a crash-atomic manifest commit"
             )
         self.spark = spark
         self.path = path
@@ -268,27 +272,6 @@ class KeyedTable:
         # First write persists the properties next to the data; every
         # construction over an existing table validates against them.
         self._props_written = False
-        self._check_table_properties()
-        # "direct" = in-place dynamic partition overwrite (fast, but a
-        # crash mid-write can mix old and new buckets); "manifest" =
-        # append-only data files published by an atomic snapshot
-        # manifest (see operators/commitlog.py) with time travel +
-        # vacuum — the Delta-style crash-consistent mode.
-        self.commit_protocol = commit_protocol
-        if commit_protocol == "manifest":
-            from quick_stream_spark.operators.commitlog import ManifestLog
-
-            # segmented log: commits publish O(commit) delta documents;
-            # every Nth version (and restore) is a full checkpoint —
-            # see ManifestLog.  1 = a full document per commit.
-            self._log = ManifestLog(
-                spark,
-                path,
-                checkpoint_interval=manifest_checkpoint_interval,
-                parquet_checkpoint_threshold=manifest_parquet_threshold,
-            )
-        else:
-            self._log = None
         # Single-writer caches: a KeyedTable instance assumes it is the
         # only writer (the reference holds the same assumption — one
         # QuickStream owns its target table).  Existence flips to True
@@ -298,6 +281,22 @@ class KeyedTable:
         # a sidecar read per micro-batch.
         self._exists_cache: bool | None = None
         self._schema_cache = None
+        self._bucket_col: tuple | None = None
+        self.commit_protocol = commit_protocol
+        from quick_stream_spark.operators.commitlog import ManifestLog
+
+        # append-only data files published by an atomic snapshot
+        # manifest (see operators/commitlog.py) with time travel and
+        # vacuum.  Segmented log: commits publish O(commit) delta
+        # documents; every Nth version (and restore) is a full
+        # checkpoint.  1 = a full document per commit.
+        self._log = ManifestLog(
+            spark,
+            path,
+            checkpoint_interval=manifest_checkpoint_interval,
+            parquet_checkpoint_threshold=manifest_parquet_threshold,
+        )
+        self._check_table_properties()
         # per-merge Observation metrics (rows_written / rows_active),
         # refreshed by every upsert — the reference's cycle-count logs
         self.last_merge_stats: dict | None = None
@@ -324,12 +323,6 @@ class KeyedTable:
                 )
             if not 1 <= self.key_bloom_hashes <= 16:
                 raise ValueError("key_bloom_hashes must be in [1, 16]")
-            if self._log is None:
-                raise ValueError(
-                    "key_bloom_bits requires commit_protocol='manifest' "
-                    "(sidecars are written under the append-only commit "
-                    "protocol, before each snapshot publishes)"
-                )
             # round up to a whole number of bytes
             self.key_bloom_bits = (self.key_bloom_bits + 7) // 8 * 8
         self._kbloom_cache: dict[str, tuple | None] = {}
@@ -340,19 +333,23 @@ class KeyedTable:
     def exists(self) -> bool:
         if self._exists_cache:
             return True
-        if self._log is not None:
-            found = self._log.latest_version() is not None
-        else:
-            fs, p, _ = _hadoop_fs(self.spark, self.path)
-            found = fs.exists(p)
+        found = self._log.latest_version() is not None
         if found:
             self._exists_cache = True
         return found
 
     def _bucket_expr(self):
-        return F.pmod(F.xxhash64(*[F.col(k) for k in self.keys]), F.lit(self.num_buckets)).cast(
-            "int"
-        )
+        # built once per bucket count: every commit uses it at least
+        # twice, and each build is ~35 py4j round trips
+        if self._bucket_col is None or self._bucket_col[0] != self.num_buckets:
+            self._bucket_col = (
+                self.num_buckets,
+                F.pmod(
+                    F.xxhash64(*[F.col(k) for k in self.keys]),
+                    F.lit(self.num_buckets),
+                ).cast("int"),
+            )
+        return self._bucket_col[1]
 
     def read(
         self,
@@ -360,47 +357,21 @@ class KeyedTable:
         with_bucket: bool = False,
         version: int | None = None,
     ) -> DataFrame:
-        """Read the table.  The scan uses the sidecar schema (the
-        current evolved schema) rather than footer inference: buckets
-        untouched since a schema evolution still hold files without the
-        added columns, and an explicit schema NULL-fills them on read —
-        no mergeSchema footer sweep (which at 100 TB is a job in
-        itself).
-
-        ``version`` (manifest protocol only) reads a historical
-        snapshot — time travel over retained manifests."""
-        if self._log is not None:
-            return self._read_manifest(
-                active_only=active_only, with_bucket=with_bucket, version=version
-            )
-        if version is not None:
-            raise ValueError(
-                "version time travel requires commit_protocol='manifest'"
-            )
-        schema = self._read_schema_sidecar()
-        try:
-            reader = self.spark.read
-            if schema is not None:
-                reader = reader.schema(schema)
-            df = reader.parquet(self.path)
-        except Exception:
-            # a table whose every row was hard-deleted has no data files
-            # left; fall back to the schema sidecar for an empty frame
-            if schema is None:
-                raise
-            df = self.spark.createDataFrame([], schema)
-        if active_only:
-            df = df.filter(F.col(self.soft_delete_col))
-        if not with_bucket:
-            df = df.drop(BUCKET_COL)
-        return df
-
-    # --------------------------------------------- manifest protocol io
+        """Read the table: the files of the latest snapshot, or of the
+        historical snapshot ``version`` (time travel over retained
+        manifests).  The scan uses the sidecar schema (the current
+        evolved schema) rather than footer inference: buckets untouched
+        since a schema evolution still hold files without the added
+        columns, and an explicit schema NULL-fills them on read — no
+        mergeSchema footer sweep (which at 100 TB is a job in itself)."""
+        return self._read_manifest(
+            active_only=active_only, with_bucket=with_bucket, version=version
+        )
 
     def _data_schema(self):
-        """Sidecar schema without the bucket column: manifest-mode data
-        files don't store it (bucket = hash(keys) % N is recomputed on
-        read, and the partition dir name only organizes the files)."""
+        """Sidecar schema without the bucket column: data files don't
+        store it (bucket = hash(keys) % N is recomputed on read, and the
+        partition dir name only organizes the files)."""
         from pyspark.sql.types import StructType
 
         schema = self._read_schema_sidecar()
@@ -917,9 +888,7 @@ class KeyedTable:
             self.last_merge_stats = None
 
     def vacuum(self, keep_versions: int = 1) -> int:
-        """Reclaim unreferenced data files (manifest protocol only)."""
-        if self._log is None:
-            raise ValueError("vacuum requires commit_protocol='manifest'")
+        """Reclaim unreferenced data files."""
         return self._log.vacuum(keep_versions)
 
     def erase(self, deletes: DataFrame) -> int:
@@ -929,12 +898,8 @@ class KeyedTable:
         them.  This deliberately sacrifices time travel for the erased
         history — that is the point: ``restore``/``read(version=)``
         must not be able to resurrect an erased key.  Returns the
-        number of data files reclaimed.  Under the ``direct`` protocol
-        hard_delete already rewrites the touched buckets in place, so
-        erase degenerates to hard_delete (returns 0)."""
+        number of data files reclaimed."""
         self.hard_delete(deletes)
-        if self._log is None:
-            return 0
         return self._log.vacuum(keep_versions=1)
 
     def history(self) -> DataFrame:
@@ -955,8 +920,6 @@ class KeyedTable:
         coverage is absent, never a guess.  Vacuumed versions drop
         out; the collapse retains the oldest kept commit's own op and
         timestamp."""
-        if self._log is None:
-            raise ValueError("history requires commit_protocol='manifest'")
         rows = [
             (
                 r["version"],
@@ -980,9 +943,9 @@ class KeyedTable:
         )
 
     def restore(self, version: int) -> int:
-        """Roll the table back to an earlier snapshot (manifest protocol
-        only) — the Delta RESTORE analog.  The old snapshot's
-        bucket->files mapping is republished as a NEW commit, so the
+        """Roll the table back to an earlier snapshot — the Delta
+        RESTORE analog.  The old snapshot's bucket->files mapping is
+        republished as a NEW commit, so the
         rollback is itself atomic, time travel still sees the undone
         states, and ``read_changes(bad, restored)`` shows exactly what
         the rollback changed.  Pure metadata: no data files are read,
@@ -990,8 +953,6 @@ class KeyedTable:
         from vacuum because the newest manifest references them).
         Returns the new snapshot version."""
         log = self._log
-        if log is None:
-            raise ValueError("restore requires commit_protocol='manifest'")
         # pointer-layout (big) tables: the restored checkpoint is built
         # distributedly from the target's own chain — the snapshot
         # never materializes on the driver (r11 verdict ask #2); None =
@@ -1009,9 +970,9 @@ class KeyedTable:
         )
 
     def read_changes(self, from_version: int, to_version: int) -> DataFrame:
-        """Change data feed between two snapshots (manifest protocol
-        only) — the Delta-CDF analog: every row whose state differs
-        between ``from_version`` and ``to_version``, tagged with
+        """Change data feed between two snapshots — the Delta-CDF
+        analog: every row whose state differs between
+        ``from_version`` and ``to_version``, tagged with
         ``_change_type`` (``insert`` / ``update_preimage`` /
         ``update_postimage`` / ``delete``) and ``_commit_version`` =
         ``to_version``.  Soft deletes surface as updates (they ARE
@@ -1043,8 +1004,6 @@ class KeyedTable:
         skipped.  Rule of thumb: replicas hold versions and call
         read_changes; analytical consumers hold watermarks and call
         read_range."""
-        if self._log is None:
-            raise ValueError("read_changes requires commit_protocol='manifest'")
         map_from = self._log.read(from_version)
         map_to = self._log.read(to_version)
         changed = sorted(
@@ -1109,8 +1068,6 @@ class KeyedTable:
         version-based and value-based catch-up (see
         :meth:`read_changes`) compares this against
         ``skipping_stats({version_col: (T, None)})``."""
-        if self._log is None:
-            raise ValueError("cdc_stats requires commit_protocol='manifest'")
         map_from = self._log.read(from_version)
         map_to = self._log.read(to_version)
         changed = {
@@ -1133,8 +1090,6 @@ class KeyedTable:
         }
 
     def snapshot_versions(self) -> list[int]:
-        if self._log is None:
-            raise ValueError("snapshots require commit_protocol='manifest'")
         return self._log.versions()
 
     def count_fast(self, active_only: bool = False, version: int | None = None) -> int:
@@ -1145,8 +1100,6 @@ class KeyedTable:
         answer is exact for any retained ``version``.  Falls back to a
         real scan only for a manifest written before stats existed."""
         log = self._log
-        if log is None:
-            raise ValueError("count_fast requires commit_protocol='manifest'")
         if version is None and log.latest_version() is None:
             # match read()'s behavior for a missing table instead of
             # reporting a nonexistent path as an empty (0-row) table
@@ -1212,16 +1165,14 @@ class KeyedTable:
         """The snapshot's bucket->files mapping with every file whose
         committed ``[min, max]`` bounds exclude ANY of the conjunctive
         ``{col: (lo, hi)}`` ranges removed (buckets left with no files
-        drop out).  ``None`` when no zone maps are available (direct
-        layout, a snapshot written without ``zone_map_cols``, or
-        coverage lost) — callers must scan.  A file whose zone is
-        missing a column, or whose bounds are NULL (all-NULL column
-        there), is always kept — skipping is strictly conservative."""
+        drop out).  ``None`` when no zone maps are available (a snapshot
+        written without ``zone_map_cols``, or coverage lost) — callers
+        must scan.  A file whose zone is missing a column, or whose
+        bounds are NULL (all-NULL column there), is always kept —
+        skipping is strictly conservative."""
         from quick_stream_spark.operators.commitlog import zone_overlaps
 
         log = self._log
-        if log is None:
-            return None
         enc = {
             c: (self._encode_bound(c, lo), self._encode_bound(c, hi))
             for c, (lo, hi) in ranges.items()
@@ -1385,10 +1336,8 @@ class KeyedTable:
         # an O(deltas) driver merge — the driver never sweeps every
         # file's bounds.  'unavailable' = inline checkpoint (small
         # tables): the in-memory sweep below is faster there.
-        v = version if version is not None else (
-            log.latest_version() if log is not None else None
-        )
-        if log is not None and v is not None:
+        v = version if version is not None else log.latest_version()
+        if v is not None:
             st, mm = log.agg_bounds_distributed(col, v)
             if st == "ok":
                 return self._decode_zone_bound(col, mm[idx])
@@ -1400,9 +1349,7 @@ class KeyedTable:
         # zero-copy view (this sweep touches every file's bounds — the
         # r9 "agg_fast is O(total files) on the driver" hotspot; the
         # walk itself is inherent, the per-call copies are not)
-        mapping, _, zones = (
-            log.snapshot_view(version) if log is not None else ({}, {}, None)
-        )
+        mapping, _, zones = log.snapshot_view(version)
         if zones is not None:
             bounds = []
             covered = True
@@ -1451,8 +1398,6 @@ class KeyedTable:
         if not any(k in self.zone_map_cols for k in self.keys):
             return None
         log = self._log
-        if log is None:
-            return None
         # Distributed fast path (r11): parquet-checkpointed snapshots
         # fetch ONLY the requested buckets' file lists + zone entries
         # via a bucket-pushdown filter over the checkpoint rows —
@@ -1532,8 +1477,6 @@ class KeyedTable:
         operational signal that a table needs ``zone_map_cols`` or a
         clustered compaction."""
         log = self._log
-        if log is None:
-            raise ValueError("skipping_stats requires commit_protocol='manifest'")
         totals = None
         v = version if version is not None else log.latest_version()
         if v is not None:
@@ -1580,8 +1523,6 @@ class KeyedTable:
         operational signal that an unsorted hot-lookup table needs
         ``key_bloom_bits`` or a clustered compaction."""
         log = self._log
-        if log is None:
-            raise ValueError("lookup_stats requires commit_protocol='manifest'")
         # one listing: the plan and the totals describe the same snapshot
         v = version if version is not None else log.latest_version()
         pm, ids, _ = self._lookup_plan(key_values, v)
@@ -1614,7 +1555,7 @@ class KeyedTable:
         """Shared planning half of ``lookup()``/``lookup_stats()``:
         ``(pruned_mapping_or_None, bucket_ids, key_df)``.
         ``version`` is the snapshot the caller already resolved (None
-        only without a snapshot log or snapshot), so planning lists the
+        only when the table has no snapshot), so planning lists the
         manifest log no further.
 
         The key list is a ``LocalRelation``: an Arrow table typed by the
@@ -1659,7 +1600,7 @@ class KeyedTable:
         ids = sorted({r["__b"] for r in sel})
         key_hashes = sorted({int(r["__h"]) for r in sel})
         pm = self._key_pruned_mapping(rows, ids, version)
-        if self.key_bloom_bits and self._log is not None:
+        if self.key_bloom_bits:
             # bloom-prune the candidate files: compose with zone
             # pruning when available, else fetch just the requested
             # buckets' file lists (bounded by the lookup)
@@ -1686,8 +1627,8 @@ class KeyedTable:
         """Point reads: the current rows for the given keys, scanning
         ONLY their hash buckets — bucket = hash(keys) % N is the
         table's layout, so a lookup of k keys opens at most k buckets
-        out of ``num_buckets`` on every layout (manifest file-list
-        pruning, or partition-dir pruning on the direct layout).
+        out of ``num_buckets`` (file-list pruning from the snapshot
+        mapping).
         ``key_values``: scalars for single-key tables, or tuples in
         ``self.keys`` order.  Only the bounded
         key list and its bucket ids cross the driver — never data.
@@ -1709,74 +1650,21 @@ class KeyedTable:
         UNSORTED case too: inside the key's bucket, rolled files whose
         bloom excludes every requested key never open.  Conservative
         as always: files without bounds or sidecars stay."""
-        if version is None and self._log is not None:
+        if version is None:
             version = self._log.latest_version()
         pm, ids, kdf = self._lookup_plan(key_values, version)
+        if pm is None and version is not None:
+            # bounded fetch, no snapshot walk (r11); None = inline head
+            pm = self._log.bucket_mapping_distributed(ids, version)
         if pm is not None:
             df = self._read_manifest(
                 active_only=active_only, version=version, mapping_override=pm
             )
-        elif self._log is not None:
-            sub = (
-                self._log.bucket_mapping_distributed(ids, version)
-                if version is not None
-                else None
-            )
-            if sub is not None:  # bounded fetch, no snapshot walk (r11)
-                df = self._read_manifest(
-                    active_only=active_only,
-                    version=version,
-                    mapping_override=sub,
-                )
-            else:
-                df = self._read_manifest(
-                    active_only=active_only, version=version, bucket_ids=ids
-                )
         else:
-            if version is not None:
-                raise ValueError(
-                    "version time travel requires commit_protocol='manifest'"
-                )
-            df = (
-                self.read(active_only=active_only, with_bucket=True)
-                .filter(F.col(BUCKET_COL).isin(ids))
-                .drop(BUCKET_COL)
+            df = self._read_manifest(
+                active_only=active_only, version=version, bucket_ids=ids
             )
         return df.join(F.broadcast(kdf), on=list(self.keys), how="left_semi")
-
-    def _write(
-        self,
-        df: DataFrame,
-        mode: str,
-        repartition: bool = True,
-        options: dict | None = None,
-    ) -> None:
-        """``repartition=False`` skips the bucket repartition: the merge
-        path's window already hash-partitioned the data by key, and
-        bucket = hash(key) % N, so every task's rows land in coherent
-        buckets — re-shuffling the whole merged set again just to get
-        one file per bucket is a second full shuffle for cosmetics.
-        First writes keep it for a clean initial layout.
-
-        Crash consistency (documented limitation): dynamic partition
-        overwrite on plain parquet is NOT atomic across buckets — a
-        crash mid-write can leave some touched buckets rewritten and
-        others stale, with no rollback (and ``hard_delete``'s write +
-        directory cleanup are two separate steps).  The reference has
-        the same exposure per statement batch (no transaction around a
-        cycle's statements).  The recovery story here is the streaming
-        checkpoint: foreachBatch re-delivers the interrupted batch and
-        the merge is idempotent under ``newer_wins``; for atomic commits
-        use ``commit_protocol='manifest'``, which publishes every write
-        as one snapshot."""
-        if repartition:
-            df = df.repartition(F.col(BUCKET_COL))
-        writer = df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
-        for key, val in (options or {}).items():
-            writer = writer.option(key, val)
-        writer.partitionBy(BUCKET_COL).parquet(self.path)
-        self._exists_cache = True
-        self._write_schema_sidecar(df.schema)
 
     # underscore-prefixed => invisible to Spark's file listing
     _SCHEMA_SIDECAR = "_qss_schema.json"
@@ -1818,6 +1706,7 @@ class KeyedTable:
         if props is None:
             return  # fresh table (or pre-props layout): first write records
         self._props_written = True
+        self._reject_in_place_layout()
         if list(props.get("keys", [])) != self.keys or int(
             props.get("num_buckets", self.num_buckets)
         ) != self.num_buckets:
@@ -1857,52 +1746,52 @@ class KeyedTable:
             # file) — record the new setting at the next write
             self._props_written = False
 
+    def _reject_in_place_layout(self) -> None:
+        """Fail fast on a table that an older build wrote in place
+        (bucket partition directories at the root, no manifest): it
+        would read as empty, and its first commit would publish a
+        snapshot that silently drops every existing row."""
+        if self._log.latest_version() is not None:
+            self._exists_cache = True
+            return
+        fs, root, _ = _hadoop_fs(self.spark, self.path)
+        if any(
+            st.isDirectory() and st.getPath().getName().startswith(f"{BUCKET_COL}=")
+            for st in fs.listStatus(root)
+        ):
+            raise ValueError(
+                f"KeyedTable at {self.path} holds {BUCKET_COL}=* partition "
+                "directories but no manifest snapshot: it was written in "
+                "place by an older build, and this build reads and writes "
+                "only manifest snapshots.  Rewrite it into a new path "
+                "(spark.read.parquet on the old root, then upsert)"
+            )
+
     def rebucket(self, new_num_buckets: int) -> None:
         """Change the table's bucket count — the sanctioned resize for a
         growing table (bucket counts should track volume, ~1 GB/bucket).
         One full rewrite under the new ``hash(keys) % N`` assignment
-        (same maintenance class as :meth:`compact`); under the manifest
-        protocol the switch is a single atomic snapshot.  Properties
-        sidecar is updated so subsequent opens validate against the new
-        count."""
+        (same maintenance class as :meth:`compact`), published as a
+        single atomic snapshot: readers see the old or the new
+        assignment, never a mix.  Properties sidecar is updated so
+        subsequent opens validate against the new count."""
         new_n = int(new_num_buckets)
         if new_n < 1:
             raise ValueError("new_num_buckets must be >= 1")
         if not self.exists():
             self.num_buckets = new_n
             return
-        old_n = self.num_buckets
         current = self.read()
         self.num_buckets = new_n
         df = current.withColumn(BUCKET_COL, self._bucket_expr()).repartition(
             F.col(BUCKET_COL)
         )
-        if self._log is not None:
-            # every old bucket is replaced; the new snapshot holds only
-            # the new assignment (atomic: readers see old or new, never
-            # a mix)
-            base = self._log.latest_version()
-            self._write_manifest_commit(
-                df, list(self._log.read(base).keys()), base, op="rebucket"
-            )
-        else:
-            df = df.persist()
-            try:
-                # dynamic overwrite replaces only buckets PRESENT in the
-                # output: an old dir whose id receives no rows under the
-                # new assignment would silently keep its stale copies
-                # (shrink tail dirs always; grow dirs whenever the
-                # hash happens to skip an id) — drop every old dir the
-                # write didn't replace
-                kept = {
-                    int(r[0]) for r in df.select(BUCKET_COL).distinct().collect()
-                }
-                self._write(df, "overwrite", repartition=False)
-                self._drop_bucket_dirs(
-                    [b for b in range(old_n) if b not in kept]
-                )
-            finally:
-                df.unpersist()
+        # every old bucket is replaced; the new snapshot holds only the
+        # new assignment
+        base = self._log.latest_version()
+        self._write_manifest_commit(
+            df, list(self._log.read(base).keys()), base, op="rebucket"
+        )
         self._write_table_properties()
 
     def _write_schema_sidecar(self, schema) -> None:
@@ -1937,15 +1826,6 @@ class KeyedTable:
         schema = StructType.fromJson(__import__("json").loads(data.decode("utf-8")))
         self._schema_cache = schema
         return schema
-
-    def _drop_bucket_dirs(self, bucket_ids: list[int]) -> None:
-        """Remove partition directories that became empty (dynamic
-        overwrite only replaces partitions present in the written data)."""
-        fs, _, jvm = _hadoop_fs(self.spark, self.path)
-        for b in bucket_ids:
-            p = jvm.org.apache.hadoop.fs.Path(os.path.join(self.path, f"{BUCKET_COL}={b}"))
-            if fs.exists(p):
-                fs.delete(p, True)
 
     # ------------------------------------------------------------- dedup
 
@@ -2014,23 +1894,6 @@ class KeyedTable:
             "noop"
         ).mode("overwrite").save()
         return sorted(obs.get["b"])
-
-    def _current_in(self, bucket_ids: list[int]) -> DataFrame:
-        # partition-pruned scan: only the touched bucket directories are read
-        return self.read(with_bucket=True).filter(F.col(BUCKET_COL).isin(bucket_ids))
-
-    def _pruned_current(self, updates_b: DataFrame) -> DataFrame:
-        """Current rows in the batch's touched buckets, pruned by
-        **dynamic partition pruning**: the semi-join against the
-        broadcast of the batch's distinct buckets becomes a
-        ``dynamicpruningexpression`` partition filter on the scan
-        (verified by tests/test_merge.py), so only touched bucket
-        directories are read — with no driver round-trip and no separate
-        job, unlike the collect-then-isin variant (kept for hard_delete,
-        which needs the literal id list to clean emptied dirs)."""
-        return self.read(with_bucket=True).join(
-            F.broadcast(updates_b.select(BUCKET_COL).distinct()), BUCKET_COL, "left_semi"
-        )
 
     def _merge_window(self, newer_wins: bool) -> Window:
         """Total order picking the surviving row per key across
@@ -2111,27 +1974,19 @@ class KeyedTable:
         )
         if not self.exists():
             first, obs = self._observe_merge(self._dedup(up))
-            if self._log is not None:
-                self._write_manifest_commit(first, [], None, op="upsert")
-            else:
-                self._write(first, "overwrite")
+            self._write_manifest_commit(first, [], None, op="upsert")
             self._record_merge_stats(obs)
             return
-        # one materialization serves both the bucket broadcast (the DPP
-        # subquery) and the merge's union side; an empty batch writes
-        # zero partitions (dynamic overwrite touches nothing) so no
+        # one materialization serves both the touched-bucket job and the
+        # merge's union side; an empty batch touches no bucket, so no
         # separate emptiness probe is needed
         up = up.persist()
         try:
-            if self._log is not None:
-                # manifest pruning happens at FILE level from the
-                # snapshot mapping (the manifest twin of partition
-                # pruning), so the touched-bucket list is collected
-                # explicitly — bounded by num_buckets
-                touched = self._touched(up)
-                current, base = self._read_current_buckets(touched)
-            else:
-                current = self._pruned_current(up)
+            # pruning happens at FILE level from the snapshot mapping, so
+            # the touched-bucket list is collected explicitly — bounded
+            # by num_buckets
+            touched = self._touched(up)
+            current, base = self._read_current_buckets(touched)
             merged = (
                 current
                 .withColumn(_SRC, F.lit(0))
@@ -2141,42 +1996,29 @@ class KeyedTable:
                 .drop(_RN, _SRC)
             )
             merged, obs = self._observe_merge(merged)
-            if self._log is not None:
-                self._write_manifest_commit(merged, touched, base, op="upsert")
-            else:
-                self._write(merged, "overwrite", repartition=False)
+            self._write_manifest_commit(merged, touched, base, op="upsert")
             self._record_merge_stats(obs)
         finally:
             up.unpersist()
 
     def total_bytes(self) -> int:
-        """On-disk bytes of the table's live data files (manifest mode:
-        only files referenced by the current snapshot).  Metadata-only:
-        one FS listing (or manifest resolve + getFileStatus)."""
+        """On-disk bytes of the data files the current snapshot
+        references.  Metadata-only: one executor stat job on the pointer
+        layout, else manifest resolve + getFileStatus."""
         if not self.exists():
             return 0
-        fs, root, jvm = _hadoop_fs(self.spark, self.path)
-        total = 0
-        if self._log is not None:
-            # pointer layout: one executor stat job (O(1) driver);
-            # None = inline head (walk bounded by the threshold) or a
-            # py4j-only filesystem — fall back to the driver loop
-            dist = self._log.snapshot_bytes()
-            if dist is not None:
-                return dist
-            for f in self._log.resolve(self._log.read()):
-                total += fs.getFileStatus(
-                    jvm.org.apache.hadoop.fs.Path(f)
-                ).getLen()
-            return total
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if not status.isDirectory() or not name.startswith(BUCKET_COL):
-                continue
-            for f in fs.listStatus(status.getPath()):
-                if f.getPath().getName().endswith(".parquet"):
-                    total += f.getLen()
-        return total
+        # pointer layout: one executor stat job (O(1) driver); None =
+        # inline head (walk bounded by the threshold) or a py4j-only
+        # filesystem — fall back to the driver loop
+        dist = self._log.snapshot_bytes()
+        if dist is not None:
+            return dist
+        fs, _, jvm = _hadoop_fs(self.spark, self.path)
+        Path = jvm.org.apache.hadoop.fs.Path
+        return sum(
+            fs.getFileStatus(Path(f)).getLen()
+            for f in self._log.resolve(self._log.read())
+        )
 
     def maybe_rebucket(
         self,
@@ -2274,7 +2116,7 @@ class KeyedTable:
         efficiency — the parquet analog of Delta OPTIMIZE.  Values are
         untouched; only layout changes.
 
-        ``sort_by`` (manifest protocol + ``zone_map_cols`` synergy):
+        ``sort_by`` (``zone_map_cols`` synergy):
         CLUSTER each bucket by the given column(s) and cut it into
         ``target_files_per_bucket`` equal-height RANGE slices, one file
         per slice — the OPTIMIZE ZORDER analog.  Each file then covers
@@ -2348,21 +2190,18 @@ class KeyedTable:
         else:
             salt = F.pmod(F.xxhash64(*[F.col(k) for k in self.keys]), F.lit(target_files_per_bucket))
             compacted = current.repartition(F.col(BUCKET_COL), salt)
-        if self._log is not None:
-            base = self._log.latest_version()
-            self._write_manifest_commit(
-                compacted, list(self._log.read(base).keys()), base,
-                options=options, op="compact",
-            )
-            return
-        self._write(compacted, "overwrite", repartition=False, options=options)
+        base = self._log.latest_version()
+        self._write_manifest_commit(
+            compacted, list(self._log.read(base).keys()), base,
+            options=options, op="compact",
+        )
 
     def content_checksum(self, version: int | None = None) -> int:
         """Order-independent checksum of the table's logical content:
         the exact integer SUM of one xxhash64 per row over the data
         columns in schema order.  Identical content gives an identical
-        checksum regardless of partitioning, file layout, commit
-        protocol or row order — the anti-entropy primitive for
+        checksum regardless of partitioning, file layout or row
+        order — the anti-entropy primitive for
         verifying a CDC replica (or a restored snapshot) without
         shipping data: compare two longs.  One map-combinable
         aggregation; the hash runs JVM-side."""
@@ -2395,38 +2234,20 @@ class KeyedTable:
         counts grow with merge frequency; calling this after every N
         merges (or from a maintenance cron) bounds read amplification
         without paying a rewrite on every batch.  Returns whether a
-        compaction ran.  The check is metadata-only: the manifest
-        mapping under the manifest protocol, one directory listing per
-        bucket otherwise.  ``sort_by`` forwards to :meth:`compact` —
+        compaction ran.  The check is metadata-only: the snapshot
+        mapping, or one pruned aggregation on the pointer layout.
+        ``sort_by`` forwards to :meth:`compact` —
         a long-lived streaming table then periodically re-clusters
         into range-sliced files and keeps its zone maps sharp."""
         if not self.exists():
             return False
-        if self._log is not None:
-            # pointer-layout tables answer the worst-bucket question
-            # with one pruned aggregation (r13); inline/cached
-            # snapshots take the in-memory mapping (free there)
-            v = self._log.latest_version()
-            worst = (
-                self._log.files_per_bucket_max(v) if v is not None else None
-            )
-            if worst is None:
-                worst = max(
-                    (len(fl) for fl in self._log.read().values()), default=0
-                )
-        else:
-            fs, root, jvm = _hadoop_fs(self.spark, self.path)
-            worst = 0
-            for status in fs.listStatus(root):
-                name = status.getPath().getName()
-                if not status.isDirectory() or not name.startswith(BUCKET_COL):
-                    continue
-                n = sum(
-                    1
-                    for f in fs.listStatus(status.getPath())
-                    if f.getPath().getName().endswith(".parquet")
-                )
-                worst = max(worst, n)
+        # pointer-layout tables answer the worst-bucket question with
+        # one pruned aggregation (r13); inline/cached snapshots take the
+        # in-memory mapping (free there)
+        v = self._log.latest_version()
+        worst = self._log.files_per_bucket_max(v) if v is not None else None
+        if worst is None:
+            worst = max((len(fl) for fl in self._log.read().values()), default=0)
         if worst <= max_files_per_bucket:
             return False
         self.compact(target_files_per_bucket, sort_by=sort_by, method=method)
@@ -2434,18 +2255,7 @@ class KeyedTable:
 
     def file_count(self) -> int:
         """Parquet data files currently in the table (all buckets)."""
-        if self._log is not None:
-            return sum(len(fl) for fl in self._log.read().values())
-        fs, root, jvm = _hadoop_fs(self.spark, self.path)
-        count = 0
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if not status.isDirectory() or not name.startswith(BUCKET_COL):
-                continue
-            for f in fs.listStatus(status.getPath()):
-                if f.getPath().getName().endswith(".parquet"):
-                    count += 1
-        return count
+        return sum(len(fl) for fl in self._log.read().values())
 
     def soft_delete(self, deletes: DataFrame) -> None:
         """Mark matching keys inactive, keeping their row (reference's
@@ -2454,14 +2264,10 @@ class KeyedTable:
         dk = self._dedup(deletes).select(*self.keys).withColumn(BUCKET_COL, self._bucket_expr())
         if not self.exists():
             return
-        dk = dk.persist()  # two consumers: the DPP broadcast + the flag join
+        dk = dk.persist()  # two consumers: the _touched job + the flag join
         try:
-            if self._log is not None:
-                touched = self._touched(dk)
-                current, base = self._read_current_buckets(touched)
-            else:
-                touched = None
-                current = self._pruned_current(dk)
+            touched = self._touched(dk)
+            current, base = self._read_current_buckets(touched)
             flagged = current.join(
                 dk.withColumn("__qss_del", F.lit(True)).drop(BUCKET_COL),
                 on=self.keys,
@@ -2471,25 +2277,14 @@ class KeyedTable:
                 self.soft_delete_col,
                 F.when(F.col("__qss_del"), F.lit(False)).otherwise(F.col(self.soft_delete_col)),
             ).drop("__qss_del")
-            if self._log is not None:
-                self._write_manifest_commit(merged, touched, base, op="soft_delete")
-            else:
-                # like the upsert path (repartition=False): the flag join
-                # keyed on the key columns leaves rows bucket-coherent, so
-                # re-shuffling by bucket before the write would be a full
-                # extra exchange per delete batch purely for file layout
-                self._write(merged, "overwrite", repartition=False)
+            self._write_manifest_commit(merged, touched, base, op="soft_delete")
         finally:
             dk.unpersist()
 
     def hard_delete(self, deletes: DataFrame) -> None:
-        """Physically remove matching keys (WHEN MATCHED THEN DELETE).
-
-        Under the manifest protocol this is one atomic commit: replaced
-        buckets with no surviving rows simply have no files in the new
-        snapshot.  The direct protocol needs a second, non-atomic step
-        (dropping emptied partition dirs) — the crash-consistency gap
-        the manifest mode exists to close."""
+        """Physically remove matching keys (WHEN MATCHED THEN DELETE)
+        in one atomic commit: replaced buckets with no surviving rows
+        simply have no files in the new snapshot."""
         dk = self._dedup(deletes).select(*self.keys).withColumn(BUCKET_COL, self._bucket_expr())
         if not self.exists():
             return
@@ -2498,29 +2293,8 @@ class KeyedTable:
             touched = self._touched(dk)
             if not touched:
                 return
-            if self._log is not None:
-                current, base = self._read_current_buckets(touched)
-                remaining = current.join(dk.drop(BUCKET_COL), on=self.keys, how="left_anti")
-                self._write_manifest_commit(remaining, touched, base, op="hard_delete")
-                return
-            current = self._current_in(touched)
-            # one materialization serves the emptied-bucket probe AND the
-            # rewrite — without it the touched buckets are scanned and
-            # anti-joined twice (once for the distinct-bucket collect,
-            # once for the write)
-            remaining = current.join(
-                dk.drop(BUCKET_COL), on=self.keys, how="left_anti"
-            ).persist()
-            try:
-                kept = [r[0] for r in remaining.select(BUCKET_COL).distinct().collect()]
-                emptied = [b for b in touched if b not in kept]
-                if kept:
-                    # anti-join on the key columns keeps rows bucket-coherent —
-                    # skip the cosmetic bucket re-shuffle (mirrors upsert)
-                    self._write(remaining, "overwrite", repartition=False)
-                if emptied:
-                    self._drop_bucket_dirs(emptied)
-            finally:
-                remaining.unpersist()
+            current, base = self._read_current_buckets(touched)
+            remaining = current.join(dk.drop(BUCKET_COL), on=self.keys, how="left_anti")
+            self._write_manifest_commit(remaining, touched, base, op="hard_delete")
         finally:
             dk.unpersist()

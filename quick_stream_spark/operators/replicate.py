@@ -54,9 +54,8 @@ def apply_changes(replica: KeyedTable, changes: DataFrame) -> None:
 
 
 class ChangeReplicator:
-    """Incrementally replicates ``source`` (manifest protocol) into
-    ``replica`` (either protocol — cross-protocol replication works
-    because CDC rows are plain row images).
+    """Incrementally replicates ``source`` into ``replica`` by
+    applying the source's change data feed (plain row images).
 
     ``sync()`` is resumable and idempotent at the commit level: it
     applies only source versions newer than the last applied one and
@@ -69,11 +68,6 @@ class ChangeReplicator:
     """
 
     def __init__(self, source: KeyedTable, replica: KeyedTable) -> None:
-        if source._log is None:
-            raise ValueError(
-                "ChangeReplicator requires a snapshot-logged source "
-                "(commit_protocol='manifest')"
-            )
         from quick_stream_spark.operators.progress import read_applied
 
         self.source = source
@@ -134,20 +128,9 @@ class ChangeReplicator:
             .withColumn(BUCKET_COL, self.replica._bucket_expr())
             .filter(F.col(BUCKET_COL).isin(bad))
         )
-        if self.replica._log is not None:
-            self.replica._write_manifest_commit(
-                rows, bad, self.replica._log.latest_version()
-            )
-        else:
-            self.replica._write(rows, "overwrite")
-            # dynamic overwrite only touches buckets PRESENT in `rows`: a
-            # divergent bucket that is empty on the source side (replica
-            # holds spurious rows) would otherwise survive untouched and
-            # be re-reported by every repair — drop those dirs explicitly
-            # (mirrors hard_delete's emptied-bucket cleanup).  src_sums
-            # already names exactly the buckets with source rows, so no
-            # second snapshot scan is needed
-            empty_on_source = [b for b in bad if b not in src_sums]
-            if empty_on_source:
-                self.replica._drop_bucket_dirs(empty_on_source)
+        # one atomic commit replaces every divergent bucket; a bucket
+        # empty on the source side simply has no files afterwards
+        self.replica._write_manifest_commit(
+            rows, bad, self.replica._log.latest_version()
+        )
         return bad

@@ -45,7 +45,6 @@ class MultiTableRouter:
         tie_break: str = "first_arrival",
         num_buckets: int = 16,
         soft_delete_col: str = "row_active",
-        commit_protocol: str = "direct",
         max_concurrency: int | None = None,
     ) -> None:
         self.spark = spark
@@ -66,7 +65,6 @@ class MultiTableRouter:
             tie_break=tie_break,
             num_buckets=num_buckets,
             soft_delete_col=soft_delete_col,
-            commit_protocol=commit_protocol,
         )
 
     def target(self, table: str) -> KeyedTable:

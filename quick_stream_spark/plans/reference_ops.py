@@ -176,13 +176,15 @@ def r_upsert_endstate_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reference", "merge", "manifest"),
 )
 def r_upsert_endstate_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r_upsert_endstate replayed through the MANIFEST commit protocol
-    (operators/commitlog.py): append-only data files published by
-    atomic snapshot manifests — the crash-consistent mode.  The oracle
-    is identical to the direct protocol's by construction; protocol
-    choice is purely physical."""
+    """r_upsert_endstate replayed once more: append-only data files
+    published by atomic snapshot manifests (operators/commitlog.py),
+    the single commit path every KeyedTable write takes, so this query
+    and r_upsert_endstate run the same code.  It stays registered
+    because the default-tier oracle smoke subset takes every 10th
+    sorted query name; dropping one name would reshuffle which queries
+    that subset runs."""
     ev = _events(spark, sf_dir)
-    target = _table(spark, commit_protocol="manifest")
+    target = _table(spark)
     with _events_scope(spark, sf_dir):
         target.upsert(ev.filter(F.col("event_id") % 2 == 0))
         target.upsert(ev.filter(F.col("event_id") % 2 == 1))
@@ -218,7 +220,6 @@ def r_upsert_endstate_pointer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
     target = _table(
         spark,
-        commit_protocol="manifest",
         manifest_checkpoint_interval=3,
         manifest_parquet_threshold=0,
     )
@@ -257,7 +258,7 @@ def r_incremental_read_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
     cycle (upsert.rs:271-303 has no read pruning); this is the
     capability a 100 TB downstream consumer needs instead of CDC."""
     ev = _events(spark, sf_dir)
-    target = _table(spark, commit_protocol="manifest", zone_map_cols=("ts",))
+    target = _table(spark, zone_map_cols=("ts",))
     with _events_scope(spark, sf_dir):
         target.upsert(ev.filter(F.col("event_id") % 2 == 0), newer_wins=True)
         target.upsert(ev.filter(F.col("event_id") % 2 == 1), newer_wins=True)
@@ -289,7 +290,7 @@ def r_point_lookup_endstate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle restates the batch-wins end state restricted to the same
     keys."""
     ev = _events(spark, sf_dir)
-    target = _table(spark, commit_protocol="manifest")
+    target = _table(spark)
     with _events_scope(spark, sf_dir):
         target.upsert(ev.filter(F.col("event_id") % 2 == 0))
         target.upsert(ev.filter(F.col("event_id") % 2 == 1))
@@ -336,7 +337,6 @@ def r_lookup_composite_endstate(spark: SparkSession, sf_dir: str) -> DataFrame:
         version_col="ts",
         arrival_col="event_id",
         num_buckets=8,
-        commit_protocol="manifest",
         zone_map_cols=("user_id",),
     )
     with _events_scope(spark, sf_dir):
@@ -386,7 +386,7 @@ def r_read_where_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     only cost speed, never correctness."""
     ev = _events(spark, sf_dir)
     target = _table(
-        spark, commit_protocol="manifest", zone_map_cols=("ts", "user_id")
+        spark, zone_map_cols=("ts", "user_id")
     )
     with _events_scope(spark, sf_dir):
         target.upsert(ev.filter(F.col("event_id") % 2 == 0), newer_wins=True)
@@ -434,7 +434,6 @@ def r_read_where_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         version_col="ts",
         arrival_col="event_id",
         num_buckets=8,
-        commit_protocol="manifest",
         zone_map_cols=("user_id", "value"),
     )
     with _events_scope(spark, sf_dir):
@@ -485,7 +484,6 @@ def r_lookup_bloom_endstate(spark: SparkSession, sf_dir: str) -> DataFrame:
         version_col="ts",
         arrival_col="event_id",
         num_buckets=8,
-        commit_protocol="manifest",
         key_bloom_bits=1 << 14,
     )
     with _events_scope(spark, sf_dir):
@@ -558,7 +556,6 @@ def r_pruning_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
         version_col="ts",
         arrival_col="event_id",
         num_buckets=8,
-        commit_protocol="manifest",
         zone_map_cols=("user_id", "value"),
         key_bloom_bits=1 << 17,
     )
@@ -680,7 +677,6 @@ def r_maintenance_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         version_col="ts",
         arrival_col="event_id",
         num_buckets=8,
-        commit_protocol="manifest",
         manifest_checkpoint_interval=3,
         manifest_parquet_threshold=0,
     )
@@ -1202,7 +1198,6 @@ def r_stream_upsert_endstate_pointer(spark: SparkSession, sf_dir: str) -> DataFr
     write_split_as_files(ev, F.col("event_id") % 4, 4, work + "/in")
     target = _table(
         spark,
-        commit_protocol="manifest",
         manifest_checkpoint_interval=3,
         manifest_parquet_threshold=0,
     )
@@ -1275,7 +1270,7 @@ def r_cdc_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets commit 2 rewrote are scanned (see KeyedTable.read_changes).
     """
     ev = _events(spark, sf_dir)
-    target = _table(spark, commit_protocol="manifest")
+    target = _table(spark)
     with _events_scope(spark, sf_dir):
         target.upsert(ev.filter(F.col("event_id") % 2 == 0))
         v1 = target.snapshot_versions()[-1]
@@ -1312,14 +1307,13 @@ def r_cdc_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     hard-delete of ``user_id % 7 == 0`` — with a mid-history ``sync()``
     after commit 2 and a final one after commit 4, so the replica
     exercises bootstrap (snapshot read of v1), incremental deltas, and
-    resume.  The replica uses the DIRECT protocol (cross-protocol
-    replication: CDC rows are plain row images).  The oracle states the
+    resume.  The oracle states the
     source's end state; returning the REPLICA's rows is the point — the
     feed alone reconstructs the table."""
     from quick_stream_spark.operators.replicate import ChangeReplicator
 
     ev = _events(spark, sf_dir)
-    source = _table(spark, commit_protocol="manifest")
+    source = _table(spark)
     replicator = ChangeReplicator(source, _table(spark))
     with _events_scope(spark, sf_dir):
         source.upsert(ev.filter(F.col("event_id") % 2 == 0))
@@ -1369,7 +1363,7 @@ def r_cdc_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quick_stream_spark.streaming.matview import CdcAggView
 
     ev = _events(spark, sf_dir)
-    source = _table(spark, commit_protocol="manifest")
+    source = _table(spark)
     work = tempfile.mkdtemp(prefix="qss-q-")
     view = CdcAggView(source, work + "/view", ["event_type"], "value")
     with _events_scope(spark, sf_dir):
@@ -1423,7 +1417,7 @@ def r_cdc_stream_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quick_stream_spark.sources.pyds import register_cdc
 
     ev = _events(spark, sf_dir)
-    source = _table(spark, commit_protocol="manifest")
+    source = _table(spark)
     with _events_scope(spark, sf_dir):
         source.upsert(ev.filter(F.col("event_id") % 2 == 0))
         source.upsert(ev.filter(F.col("event_id") % 2 == 1))

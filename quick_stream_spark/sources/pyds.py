@@ -223,7 +223,7 @@ def _cdc_mapping(path: str, version: int) -> dict[int, list[str]]:
 
 
 class CdcStreamReader(DataSourceStreamReader):
-    """Tails a manifest-protocol KeyedTable and emits its change feed
+    """Tails a KeyedTable's manifest log and emits its change feed
     as a stream — the Delta-CDF-as-stream analog, speaking the same
     offset protocol as any micro-batch connector: offsets are manifest
     VERSIONS, a batch covers the commits in (start, end], and

@@ -5,9 +5,9 @@ incremental view maintenance), built on the same KeyedTable machinery
 as the ingestion paths.
 
 Per batch: partial-aggregate the batch (map-side combinable), read the
-CURRENT values of only the touched groups (KeyedTable prunes to
-touched buckets via dynamic partition pruning), add, and upsert the
-summed rows.  Work per batch is O(batch + touched groups) — never a
+CURRENT values of only the touched groups (the view table reads only
+the files of the batch's touched buckets), add, and upsert the summed
+rows.  Work per batch is O(batch + touched groups) — never a
 view rebuild — and because SUM/COUNT are additive over exact decimal
 sums, the end state is independent of how deliveries were chunked,
 which is what makes the drained view equal the one-shot batch
@@ -21,7 +21,15 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from quick_stream_spark.operators.merge import KeyedTable
+from quick_stream_spark.operators.merge import BUCKET_COL, KeyedTable
+
+
+def _touched_current(table: KeyedTable, part: DataFrame) -> DataFrame:
+    """Current rows of ``table`` in the buckets ``part``'s keys hash
+    to: the touched-bucket read ``KeyedTable.upsert`` uses, so the scan
+    opens only those buckets' files."""
+    touched = table._touched(part.withColumn(BUCKET_COL, table._bucket_expr()))
+    return table._read_current_buckets(touched)[0]
 
 
 class IncrementalAggView:
@@ -51,7 +59,6 @@ class IncrementalAggView:
         distinct_col: str | None = None,
         bitmap_m: int = 1024,
         num_buckets: int = 8,
-        commit_protocol: str = "direct",
         value_type: str = "decimal",
     ) -> None:
         self.spark = spark
@@ -65,16 +72,15 @@ class IncrementalAggView:
         self._sum_t = "decimal(18,2)" if value_type == "decimal" else "long"
         # version = batch id: the additive merge writes each touched
         # group exactly once per batch, so batch-wins LWW is correct.
-        # commit_protocol="manifest" makes each batch's merge one atomic
-        # snapshot (crash mid-merge leaves the previous snapshot intact,
-        # and the retried epoch is then absorbed idempotently).
+        # Each batch's merge is one atomic snapshot (crash mid-merge
+        # leaves the previous snapshot intact, and the retried epoch is
+        # then absorbed idempotently).
         self.table = KeyedTable(
             spark,
             path,
             keys=self.group_cols,
             version_col="_batch_id",
             num_buckets=num_buckets,
-            commit_protocol=commit_protocol,
         )
 
     def _bit_pos(self) -> F.Column:
@@ -99,7 +105,7 @@ class IncrementalAggView:
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         # one materialization of the (touched-groups-bounded) partial
-        # serves every downstream consumer — the DPP bucket broadcast,
+        # serves every downstream consumer — the touched-bucket job,
         # the touched-group join and the merge write each re-executed
         # the batch's SOURCE SCAN otherwise (~3 reads of every input
         # file per micro-batch, and inflated numInputRows metrics)
@@ -118,16 +124,11 @@ class IncrementalAggView:
             ]
             if self.distinct_col is not None:
                 cur_cols.append(F.col("_bits").alias("_bits_cur"))
-            # touched-group read: the partial's bucket set prunes the
-            # view scan via dynamic partition pruning (KeyedTable's
-            # merge machinery) — per-batch read cost follows the
+            # touched-group read: only the files of the partial's
+            # buckets are scanned — per-batch read cost follows the
             # batch's group spread, not the view size
-            from quick_stream_spark.operators.merge import BUCKET_COL
-
-            part_b = part.withColumn(BUCKET_COL, self.table._bucket_expr())
-            cur = (
-                self.table._pruned_current(part_b)
-                .select(*self.group_cols, *cur_cols)
+            cur = _touched_current(self.table, part).select(
+                *self.group_cols, *cur_cols
             )
             # left join: only groups touched by THIS batch are read,
             # merged and rewritten; untouched groups keep their rows
@@ -236,11 +237,6 @@ class CdcAggView:
         value_col: str,
         num_buckets: int = 8,
     ) -> None:
-        if source._log is None:
-            raise ValueError(
-                "CdcAggView requires a snapshot-logged source "
-                "(commit_protocol='manifest')"
-            )
         self.source = source
         self.spark = source.spark
         self.group_cols = list(group_cols)
@@ -296,10 +292,7 @@ class CdcAggView:
             "_sum_dec", F.col("_sum_dec").cast("decimal(18,2)")
         )
         if self.view.exists():
-            from quick_stream_spark.operators.merge import BUCKET_COL
-
-            part_b = part.withColumn(BUCKET_COL, self.view._bucket_expr())
-            cur = self.view._pruned_current(part_b).select(
+            cur = _touched_current(self.view, part).select(
                 *self.group_cols,
                 F.col("n").alias("_n_cur"),
                 F.col("_sum_dec").alias("_sum_cur"),

@@ -117,11 +117,12 @@ class WriterFence:
         current = self._read()
         epoch = (current["epoch"] if current else 0) + 1
         token = _uuid.uuid4().hex
-        fs, p, _ = _hadoop_fs(self.spark, self.work_dir)
+        fs, p, jvm = _hadoop_fs(self.spark, self.work_dir)
         fs.mkdirs(p)
         body = json.dumps({"token": token, "pid": os.getpid()}).encode("utf-8")
         if not put_if_absent(
-            self.spark, self.work_dir, f"{self.PREFIX}{epoch}.json", body
+            fs, jvm.org.apache.hadoop.fs.Path, self.work_dir,
+            f"{self.PREFIX}{epoch}.json", body,
         ):
             raise RuntimeError(
                 f"writer fence: another writer claimed epoch {epoch} of "

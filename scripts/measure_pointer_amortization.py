@@ -80,7 +80,6 @@ def main() -> None:
             version_col="ts",
             arrival_col="event_id",
             num_buckets=8,
-            commit_protocol="manifest",
             manifest_checkpoint_interval=3,
             manifest_parquet_threshold=0,
         )

@@ -116,7 +116,6 @@ _SLOW_TEST_NAMES = {
     "test_bounded_overlap_race_raises",
     "test_distinct_bitmap_merges_and_is_replay_safe",
     "test_accumulates_across_batches_and_admits_new_groups",
-    "test_manifest_protocol_matches_direct",
 }
 
 

@@ -97,15 +97,6 @@ def test_bootstrap_mid_history(spark, tmp_table_dir):
     assert view_state(view) == direct_agg(src)
 
 
-def test_requires_manifest_source(spark, tmp_table_dir):
-    direct = KeyedTable(
-        spark, os.path.join(tmp_table_dir, "d"), keys=("pkey",),
-        version_col="modified_date", arrival_col="arrival", num_buckets=4,
-    )
-    with pytest.raises(ValueError, match="manifest"):
-        CdcAggView(direct, os.path.join(tmp_table_dir, "v"), ["grp"], "amount")
-
-
 def test_view_survives_process_restart_without_double_count(spark, tmp_table_dir):
     """A NEW CdcAggView instance over an existing view (process
     restart) must resume from the durable watermark.  Before the fix it

@@ -1,6 +1,6 @@
-"""Manifest commit protocol: atomic snapshots, parity with the direct
-protocol, hard-delete emptying, time travel, crash-orphan isolation,
-vacuum, and schema evolution (operators/commitlog.py)."""
+"""Manifest commit protocol: atomic snapshots, hard-delete emptying,
+time travel, crash-orphan isolation, vacuum, and schema evolution
+(operators/commitlog.py)."""
 
 import json
 import os
@@ -19,7 +19,7 @@ def df(spark, rows):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-def mk(spark, root, name, protocol="manifest", **kw):
+def mk(spark, root, name, **kw):
     return KeyedTable(
         spark,
         os.path.join(root, name),
@@ -27,7 +27,6 @@ def mk(spark, root, name, protocol="manifest", **kw):
         version_col="modified_date",
         arrival_col="arrival",
         num_buckets=4,
-        commit_protocol=protocol,
         **kw,
     )
 
@@ -47,18 +46,6 @@ def state(table, **kw):
     return {
         r.pkey: (r.payload, r.row_active) for r in table.read(**kw).collect()
     }
-
-
-def test_manifest_matches_direct_endstate(spark, tmp_table_dir):
-    m = mk(spark, tmp_table_dir, "m")
-    d = mk(spark, tmp_table_dir, "d", protocol="direct")
-    for t in (m, d):
-        t.upsert(df(spark, BATCH1))
-        t.upsert(df(spark, BATCH2))
-        t.soft_delete(df(spark, [(2, datetime(2024, 2, 1), 9, "x")]))
-    assert state(m) == state(d)
-    assert state(m)[1] == ("a2", True)
-    assert state(m)[2][1] is False
 
 
 def test_every_commit_is_a_snapshot(spark, tmp_table_dir):
@@ -268,7 +255,7 @@ def test_threaded_disjoint_writers_all_land(spark, tmp_table_dir, protocol):
     import threading
 
     def _mk_occ(spark, root):
-        return mk(spark, root, "t", protocol=protocol)
+        return mk(spark, root, "t", commit_protocol=protocol)
 
     probe = _mk_occ(spark, tmp_table_dir)
     probe.upsert(df(spark, _OCC_SEED))
@@ -307,8 +294,8 @@ def test_threaded_disjoint_writers_all_land(spark, tmp_table_dir, protocol):
 
 
 def test_router_routes_through_manifest_tables(spark, tmp_table_dir):
-    """MultiTableRouter forwards the commit protocol: every routed
-    table commits atomic snapshots."""
+    """Every table MultiTableRouter routes to commits atomic
+    snapshots."""
     from quick_stream_spark.operators.router import MultiTableRouter
 
     router = MultiTableRouter(
@@ -319,7 +306,6 @@ def test_router_routes_through_manifest_tables(spark, tmp_table_dir):
         version_col="modified_date",
         arrival_col="arrival",
         num_buckets=2,
-        commit_protocol="manifest",
     )
     batch = spark.createDataFrame(
         [
@@ -395,13 +381,6 @@ def test_read_changes_adjacent_and_empty_diff(spark, tmp_table_dir):
     }
     # self-diff is empty
     assert t.read_changes(v2, v2).count() == 0
-
-
-def test_read_changes_requires_manifest_protocol(spark, tmp_table_dir):
-    t = mk(spark, tmp_table_dir, "cdc3", protocol="direct")
-    t.upsert(df(spark, BATCH1))
-    with pytest.raises(ValueError, match="manifest"):
-        t.read_changes(1, 2)
 
 
 def test_restore_rolls_back_as_a_new_atomic_commit(spark, tmp_table_dir):

@@ -381,7 +381,6 @@ def test_matview_publish_crash_then_epoch_retry_does_not_double_count(
         os.path.join(tmp_table_dir, "v"),
         group_cols=["g"],
         value_col="value",
-        commit_protocol="manifest",
     )
 
     def b(rows):

@@ -194,16 +194,7 @@ def test_bloom_on_pointer_layout_and_vacuum(spark, tmp_table_dir):
         assert {r.pkey for r in t.lookup([k]).collect()} == {k}
 
 
-def test_bloom_requires_manifest_protocol(spark, tmp_table_dir):
-    with pytest.raises(ValueError, match="commit_protocol"):
-        KeyedTable(
-            spark,
-            os.path.join(tmp_table_dir, "d"),
-            keys=("pkey",),
-            version_col="modified_date",
-            commit_protocol="direct",
-            key_bloom_bits=4096,
-        )
+def test_bloom_sizing_is_validated(spark, tmp_table_dir):
     with pytest.raises(ValueError, match="key_bloom_bits"):
         KeyedTable(
             spark,

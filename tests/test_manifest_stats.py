@@ -83,12 +83,6 @@ def test_count_fast_is_metadata_only(spark, tmp_table_dir):
         t.read().count()
 
 
-def test_count_fast_requires_manifest(spark, tmp_table_dir):
-    d = mk(spark, tmp_table_dir, protocol="direct")
-    with pytest.raises(ValueError, match="manifest"):
-        d.count_fast()
-
-
 def test_pre_stats_manifest_falls_back_to_scan(spark, tmp_table_dir):
     t = mk(spark, tmp_table_dir)
     t.upsert(df(spark, B1))

@@ -109,25 +109,6 @@ def test_retried_batch_is_idempotent(spark):
     assert before == after == {"a": (2, 5.0), "b": (1, 2.0)}
 
 
-def test_manifest_protocol_matches_direct(spark):
-    """The matview under the crash-consistent manifest protocol must
-    produce the identical end state as the direct protocol."""
-    rows1 = [("a", 1.0), ("b", 2.0)]
-    rows2 = [("a", 3.5), ("c", 1.25)]
-    states = {}
-    for proto in ("direct", "manifest"):
-        work = tempfile.mkdtemp(prefix=f"qss-mv-{proto}-")
-        v = IncrementalAggView(
-            spark, work + "/v", group_cols=["g"], value_col="value",
-            commit_protocol=proto,
-        )
-        v.apply_batch(_batch(spark, rows1), 0)
-        v.apply_batch(_batch(spark, rows2), 1)
-        states[proto] = {r.g: (r.n, r.sum_value) for r in v.read().collect()}
-    assert states["direct"] == states["manifest"]
-    assert states["direct"] == {"a": (2, 4.5), "b": (1, 2.0), "c": (1, 1.25)}
-
-
 # ---------------------------------------------------- property-based
 
 from hypothesis import HealthCheck, given, settings  # noqa: E402

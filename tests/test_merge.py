@@ -13,11 +13,10 @@ from quick_stream_spark.operators.merge import BUCKET_COL, KeyedTable
 SCHEMA = "pkey long, modified_date timestamp, arrival long, payload string"
 
 
-@pytest.fixture(params=["direct", "manifest"])
+@pytest.fixture(params=["manifest"])
 def commit_protocol(request):
-    """Commit-protocol axis: the MERGE contract tests run against the
-    in-place bucket overwrite and the manifest snapshot log — the merge
-    semantics may not depend on how a write is published."""
+    """Commit-protocol axis of the MERGE contract tests: one value, the
+    manifest snapshot log every write publishes through."""
     return request.param
 
 
@@ -36,8 +35,8 @@ def table(spark, tmp_table_dir, commit_protocol):
 
 @pytest.fixture()
 def ptable(spark, tmp_table_dir):
-    """Parquet-only table, for tests of the physical layout itself
-    (partition pruning, file mtimes, compaction, write-plan shape)."""
+    """Table for tests of the physical layout itself (bucket pruning,
+    per-bucket file lists, compaction, write-plan shape)."""
     return KeyedTable(
         spark,
         os.path.join(tmp_table_dir, "t"),
@@ -118,22 +117,23 @@ def test_hard_delete_removes_rows(spark, table):
 def test_hard_delete_all_rows_empties_table(spark, table):
     table.upsert(df(spark, [(1, datetime(2024, 1, 1), 1, "a")]))
     table.hard_delete(df(spark, [(1, datetime(2024, 1, 2), 2, None)]))
-    # table dir may still exist but hold no rows in any bucket
-    remaining = [
-        f
-        for f in (os.listdir(table.path) if os.path.exists(table.path) else [])
-        if f.startswith(BUCKET_COL)
-    ]
-    assert remaining == []
+    # the emptied bucket has no files in the new snapshot
+    assert table.file_count() == 0
     assert table.read().count() == 0
 
 
 def test_merge_touches_only_affected_buckets(spark, ptable):
-    """Scale contract: a batch rewrites only the bucket partitions its
-    keys hash into — untouched partition files must be byte-identical."""
+    """Scale contract: a batch replaces only the buckets its keys hash
+    into — every untouched bucket keeps its exact file list, and those
+    files are not rewritten."""
     ptable.upsert(df(spark, [(k, datetime(2024, 1, 1), k, f"p{k}") for k in range(64)]))
-    before = _partition_mtimes(ptable.path)
+    before = ptable._log.read()
     assert len(before) == 4  # all buckets populated
+    mtimes = {
+        p: os.path.getmtime(os.path.join(ptable.path, p))
+        for files in before.values()
+        for p in files
+    }
 
     one_key = df(spark, [(0, datetime(2024, 1, 2), 999, "upd")])
     bucket_of_0 = one_key.select(
@@ -141,46 +141,27 @@ def test_merge_touches_only_affected_buckets(spark, ptable):
     ).collect()[0][0]
     ptable.upsert(one_key)
 
-    after = _partition_mtimes(ptable.path)
-    for part, files in before.items():
-        if part == f"{BUCKET_COL}={bucket_of_0}":
+    after = ptable._log.read()
+    assert after[bucket_of_0] != before[bucket_of_0]
+    for b, files in before.items():
+        if b == bucket_of_0:
             continue
-        assert after[part] == files, f"untouched partition {part} was rewritten"
+        assert after[b] == files, f"untouched bucket {b} was rewritten"
+        for p in files:
+            assert os.path.getmtime(os.path.join(ptable.path, p)) == mtimes[p]
 
 
 def test_merge_read_is_partition_pruned(spark, ptable):
-    """The touched-bucket read must prune at the partition level — the
-    scan's PartitionFilters must carry the bucket predicate, so a merge
-    never lists or reads untouched bucket directories."""
-    import contextlib
-    import io
+    """The touched-bucket read must prune to the bucket's own files:
+    the scan opens only files under the touched ``__qss_bucket=1``
+    partition directories, so a merge never reads untouched buckets."""
     from datetime import datetime as dt
 
     ptable.upsert(df(spark, [(k, dt(2024, 1, 1), k, f"p{k}") for k in range(64)]))
-    pruned = ptable._current_in([1])
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    import re
-
-    pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
-    assert "__qss_bucket" in pf and "1" in pf, plan
-
-
-def _partition_mtimes(path):
-    out = {}
-    for d in os.listdir(path):
-        if not d.startswith(BUCKET_COL):
-            continue
-        full = os.path.join(path, d)
-        out[d] = sorted(
-            (f, os.path.getmtime(os.path.join(full, f)))
-            for f in os.listdir(full)
-            if f.endswith(".parquet")
-        )
-    return out
+    pruned, _ = ptable._read_current_buckets([1])
+    files = pruned.inputFiles()
+    assert files
+    assert all(f"/{BUCKET_COL}=1/" in f for f in files), files
 
 
 def test_compact_restores_one_file_per_bucket(spark, ptable):
@@ -224,45 +205,6 @@ def test_composite_keys(spark, tmp_table_dir, commit_protocol):
     t.upsert(spark.createDataFrame([(1, "x", datetime(2024, 1, 2), 3, "a2")], schema))
     got = {(r.k1, r.k2): r.v for r in t.read().collect()}
     assert got == {(1, "x"): "a2", (1, "y"): "b"}
-
-
-def test_merge_scan_uses_dynamic_partition_pruning(spark, tmp_table_dir):
-    """The incremental-merge read of current state must carry a
-    dynamicpruningexpression partition filter on the bucket column —
-    only the batch's touched bucket directories are read, with no
-    driver-side bucket collect (the 100 TB incremental-merge contract)."""
-    import contextlib
-    import io
-
-    from quick_stream_spark.operators.merge import BUCKET_COL
-
-    from pyspark.sql import functions as F
-
-    from quick_stream_spark.sources.readers import load_table
-
-    # DPP's benefit heuristic skips tiny tables (where a full scan is
-    # cheaper than the pruning subquery — the semi-join still filters
-    # correctly there, just without partition pruning).  Use the sf0.01
-    # events table, a realistic incremental-merge target that engages it.
-    sf_dir = "/root/testdata/sf0.01"
-    ev = load_table(spark, sf_dir, "events")
-    t = KeyedTable(
-        spark,
-        os.path.join(tmp_table_dir, "dpp"),
-        keys=("user_id",),
-        version_col="ts",
-        arrival_col="event_id",
-        num_buckets=8,
-    )
-    t.upsert(ev.filter(F.col("event_id") % 4 == 0), newer_wins=True)
-    up = t._prepare_updates(ev.filter(F.col("event_id") % 1000 == 1), dedup=False)
-    pruned = t._pruned_current(up)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.explain("formatted")
-    plan = buf.getvalue()
-    assert "dynamicpruningexpression" in plan.lower(), plan
-    assert BUCKET_COL in plan
 
 
 def test_schema_evolution_adds_column(spark, tmp_table_dir, commit_protocol):
@@ -383,70 +325,66 @@ def test_maybe_compact_policy(spark, tmp_table_dir):
 
     from quick_stream_spark.operators.merge import KeyedTable
 
-    for protocol in ("direct", "manifest"):
-        t = KeyedTable(
-            spark,
-            os.path.join(tmp_table_dir, f"mc_{protocol}"),
-            keys=("pkey",),
-            version_col="modified_date",
-            arrival_col="arrival",
-            num_buckets=1,  # every merge appends files to the same bucket
-            commit_protocol=protocol,
+    t = KeyedTable(
+        spark,
+        os.path.join(tmp_table_dir, "mc"),
+        keys=("pkey",),
+        version_col="modified_date",
+        arrival_col="arrival",
+        num_buckets=1,  # every merge appends files to the same bucket
+    )
+    schema = "pkey long, modified_date timestamp, arrival long, payload string"
+    # AQE coalescing collapses tiny merges to one task file; disable
+    # it so the merge writes several task-aligned files per bucket
+    prev = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        t.upsert(
+            spark.createDataFrame(
+                [(k, datetime(2024, 1, 1), k, f"p{k}") for k in range(64)],
+                schema,
+            ).repartition(8)
         )
-        schema = "pkey long, modified_date timestamp, arrival long, payload string"
-        # AQE coalescing collapses tiny merges to one task file; disable
-        # it so the merge writes several task-aligned files per bucket
-        prev = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        try:
-            t.upsert(
-                spark.createDataFrame(
-                    [(k, datetime(2024, 1, 1), k, f"p{k}") for k in range(64)],
-                    schema,
-                ).repartition(8)
-            )
-            t.upsert(
-                spark.createDataFrame(
-                    [(k, datetime(2024, 1, 2), 100 + k, f"q{k}") for k in range(64)],
-                    schema,
-                ).repartition(8)
-            )
-        finally:
-            spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
-        assert t.file_count() > 1
-        before = {r.pkey: r.payload for r in t.read().collect()}
-        assert t.maybe_compact(max_files_per_bucket=100) is False  # under threshold
-        assert t.maybe_compact(max_files_per_bucket=1) is True
-        assert {r.pkey: r.payload for r in t.read().collect()} == before
+        t.upsert(
+            spark.createDataFrame(
+                [(k, datetime(2024, 1, 2), 100 + k, f"q{k}") for k in range(64)],
+                schema,
+            ).repartition(8)
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
+    assert t.file_count() > 1
+    before = {r.pkey: r.payload for r in t.read().collect()}
+    assert t.maybe_compact(max_files_per_bucket=100) is False  # under threshold
+    assert t.maybe_compact(max_files_per_bucket=1) is True
+    assert {r.pkey: r.payload for r in t.read().collect()} == before
 
 
 def test_delete_paths_skip_cosmetic_bucket_repartition(spark, ptable):
-    """soft_delete / hard_delete must write with repartition=False like
-    the upsert path: their key-joins already leave rows bucket-coherent,
-    so a bucket re-shuffle before the write is a full extra exchange per
-    delete batch.  Pinned two ways: the _write call's flag, and the
-    absence of a RoundRobin/bucket repartition exchange in the plan
-    actually handed to the writer."""
+    """soft_delete / hard_delete must commit without a bucket
+    repartition, like the upsert path: their key-joins already leave
+    rows bucket-coherent, so a bucket re-shuffle before the write is a
+    full extra exchange per delete batch.  Pinned on the plan actually
+    handed to the commit: no RoundRobin/bucket repartition exchange."""
     ptable.upsert(df(spark, [(k, datetime(2024, 1, 1), k, f"p{k}") for k in range(20)]))
     seen = []
-    orig = ptable._write
+    orig = ptable._write_manifest_commit
 
-    def spy(frame, mode, repartition=True):
-        plan = frame._jdf.queryExecution().executedPlan().toString()
-        seen.append((repartition, plan))
-        return orig(frame, mode, repartition=repartition)
+    def spy(frame, *args, **kwargs):
+        seen.append(frame._jdf.queryExecution().executedPlan().toString())
+        return orig(frame, *args, **kwargs)
 
-    ptable._write = spy
+    ptable._write_manifest_commit = spy
     try:
         ptable.soft_delete(df(spark, [(1, datetime(2024, 2, 1), 30, "x")]))
         ptable.hard_delete(df(spark, [(2, datetime(2024, 2, 2), 31, "x")]))
     finally:
-        ptable._write = orig
-    assert [flag for flag, _ in seen] == [False, False]
-    for _, plan in seen:
+        ptable._write_manifest_commit = orig
+    assert len(seen) == 2
+    for plan in seen:
         # an explicit .repartition(bucket) shuffle would print with the
         # REPARTITION_BY_COL origin; join-required ENSURE_REQUIREMENTS
-        # exchanges (e.g. the DPP distinct) are legitimate and ignored
+        # exchanges are legitimate and ignored
         assert "REPARTITION_BY_COL" not in plan, plan
     assert state(ptable)[1] == ("p1", False)
     assert 2 not in state(ptable)

@@ -75,7 +75,7 @@ class Model:
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("protocol", ["direct", "manifest"])
+@pytest.mark.parametrize("protocol", ["manifest"])
 @settings(
     max_examples=12,
     deadline=None,
@@ -83,8 +83,8 @@ class Model:
 )
 @given(scenario=scenario)
 def test_end_state_matches_reference_model(spark, tmp_path_factory, protocol, scenario):
-    """Runs under both commit protocols: every storage path must
-    reproduce the reference end-state semantics row for row."""
+    """The storage path must reproduce the reference end-state
+    semantics row for row."""
     ops, newer_wins = scenario
     work = tmp_path_factory.mktemp("prop")
     table = KeyedTable(

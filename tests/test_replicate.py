@@ -1,12 +1,12 @@
 """CDC replication (operators/replicate.py): a replica fed only by the
 source's change feed must converge to the source's exact state —
 including soft-delete flags, reactivations, and hard deletes — from any
-bootstrap point, idempotently, across commit protocols."""
+bootstrap point, idempotently."""
 
 import os
 from datetime import datetime
 
-import pytest
+from pyspark.sql import functions as F
 
 from quick_stream_spark.operators.merge import KeyedTable
 from quick_stream_spark.operators.replicate import ChangeReplicator
@@ -18,7 +18,7 @@ def df(spark, rows):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-def mk(spark, root, name, protocol="manifest"):
+def mk(spark, root, name):
     return KeyedTable(
         spark,
         os.path.join(root, name),
@@ -26,12 +26,21 @@ def mk(spark, root, name, protocol="manifest"):
         version_col="modified_date",
         arrival_col="arrival",
         num_buckets=4,
-        commit_protocol=protocol,
     )
 
 
 def state(table):
     return {r.pkey: (r.payload, r.row_active) for r in table.read().collect()}
+
+
+def tamper(table, key):
+    """Silently change one row's payload: a batch-wins upsert of the
+    row itself with only the payload replaced."""
+    table.upsert(
+        table.read()
+        .filter(F.col("pkey") == key)
+        .withColumn("payload", F.lit("TAMPERED"))
+    )
 
 
 B1 = [(1, datetime(2024, 1, 1), 1, "a1"), (2, datetime(2024, 1, 1), 2, "b1"),
@@ -41,7 +50,7 @@ B2 = [(1, datetime(2024, 1, 5), 4, "a2"), (4, datetime(2024, 1, 2), 5, "d1")]
 
 def test_replica_converges_after_each_commit(spark, tmp_table_dir):
     src = mk(spark, tmp_table_dir, "src")
-    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep", protocol="direct"))
+    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep"))
     ops = [
         lambda: src.upsert(df(spark, B1)),
         lambda: src.upsert(df(spark, B2)),
@@ -65,7 +74,7 @@ def test_bootstrap_mid_history(spark, tmp_table_dir):
     src.upsert(df(spark, B2))
     src.soft_delete(df(spark, [(2, datetime(2024, 2, 1), 9, "x")]))
     # replica created only now: bootstrap snapshot + CDC forward
-    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep", protocol="direct"))
+    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep"))
     assert rep.sync() == 3  # bootstrap(v1) + deltas 1->2, 2->3
     assert state(rep.replica) == state(src)
     src.hard_delete(df(spark, [(1, datetime(2024, 2, 5), 12, "x")]))
@@ -75,7 +84,7 @@ def test_bootstrap_mid_history(spark, tmp_table_dir):
 
 def test_cross_protocol_manifest_replica(spark, tmp_table_dir):
     src = mk(spark, tmp_table_dir, "src")
-    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep", protocol="manifest"))
+    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep"))
     src.upsert(df(spark, B1))
     src.upsert(df(spark, B2))
     rep.sync()
@@ -86,7 +95,7 @@ def test_cross_protocol_manifest_replica(spark, tmp_table_dir):
 
 def test_compaction_commit_is_a_noop_delta(spark, tmp_table_dir):
     src = mk(spark, tmp_table_dir, "src")
-    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep", protocol="direct"))
+    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep"))
     src.upsert(df(spark, B1))
     rep.sync()
     before = state(rep.replica)
@@ -95,19 +104,12 @@ def test_compaction_commit_is_a_noop_delta(spark, tmp_table_dir):
     assert state(rep.replica) == before == state(src)
 
 
-def test_requires_manifest_source(spark, tmp_table_dir):
-    direct = mk(spark, tmp_table_dir, "d", protocol="direct")
-    with pytest.raises(ValueError, match="manifest"):
-        ChangeReplicator(direct, mk(spark, tmp_table_dir, "r"))
-
-
 def test_checksums_verify_replica_and_locate_divergence(spark, tmp_table_dir):
     """The anti-entropy flow: after sync the replica's checksum equals
-    the source's (across commit protocols and different layouts); after
-    tampering with one replica bucket, the full checksums differ and
+    the source's (across different file layouts); after tampering with one replica bucket, the full checksums differ and
     the per-bucket maps pinpoint exactly the divergent bucket."""
     src = mk(spark, tmp_table_dir, "src")
-    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep", protocol="direct"))
+    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep"))
     src.upsert(df(spark, B1))
     src.upsert(df(spark, B2))
     src.compact()  # different physical layout than the replica
@@ -115,17 +117,8 @@ def test_checksums_verify_replica_and_locate_divergence(spark, tmp_table_dir):
     assert rep.replica.content_checksum() == src.content_checksum()
     assert rep.replica.bucket_checksums() == src.bucket_checksums()
 
-    # tamper: silently change one row's payload in the replica
-    from pyspark.sql import functions as F
-
     replica = rep.replica
-    tampered = replica.read(with_bucket=True).withColumn(
-        "payload",
-        F.when(F.col("pkey") == 1, "TAMPERED").otherwise(F.col("payload")),
-    ).localCheckpoint(eager=True)  # sever lineage from the files we overwrite
-    tampered.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("__qss_bucket").parquet(replica.path)
+    tamper(replica, 1)
 
     assert replica.content_checksum() != src.content_checksum()
     src_sums, rep_sums = src.bucket_checksums(), replica.bucket_checksums()
@@ -145,21 +138,14 @@ def test_repair_rewrites_only_divergent_buckets(spark, tmp_table_dir):
     checksum maps and restores it from the source snapshot at the
     APPLIED version — even though the source has since moved ahead,
     no future state leaks into the repaired replica."""
-    from pyspark.sql import functions as F
-
     src = mk(spark, tmp_table_dir, "src")
-    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep", protocol="direct"))
+    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep"))
     src.upsert(df(spark, B1))
     rep.sync()
     synced_state = state(rep.replica)
 
     # tamper one row, then advance the SOURCE past the synced version
-    tampered = rep.replica.read(with_bucket=True).withColumn(
-        "payload", F.when(F.col("pkey") == 1, "TAMPERED").otherwise(F.col("payload"))
-    ).localCheckpoint(eager=True)
-    tampered.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("__qss_bucket").parquet(rep.replica.path)
+    tamper(rep.replica, 1)
     src.upsert(df(spark, B2))  # future state the repair must NOT pull
 
     repaired = rep.repair()
@@ -175,10 +161,8 @@ def test_replication_follows_schema_evolution(spark, tmp_table_dir):
     replicate: the CDC rows carry the evolved schema, the replica
     evolves on apply, and pre-evolution keys read NULL for the new
     column on both sides."""
-    from pyspark.sql import functions as F
-
     src = mk(spark, tmp_table_dir, "src")
-    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep", protocol="direct"))
+    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep"))
     src.upsert(df(spark, B1))
     rep.sync()
     evolved = df(spark, [(4, datetime(2024, 2, 1), 10, "d1")]).withColumn(
@@ -199,15 +183,13 @@ def test_replication_follows_schema_evolution(spark, tmp_table_dir):
 
 def test_repair_converges_on_spurious_replica_bucket(spark, tmp_table_dir):
     """A divergent bucket whose source side is EMPTY (replica holds
-    spurious extra rows) must actually be cleaned by repair() on a
-    direct-protocol replica — dynamic overwrite alone never touches a
-    bucket with no rows to write, so the fix drops those bucket dirs
-    explicitly; before it, the bucket was re-reported forever."""
-    from pyspark.sql import functions as F
-
+    spurious extra rows) must actually be cleaned by repair(): the
+    repair commit replaces the bucket with no files, rather than
+    leaving it untouched for lack of rows to write and re-reporting it
+    forever."""
     src = mk(spark, tmp_table_dir, "src")
     src.upsert(df(spark, [(1, datetime(2024, 1, 1), 1, "a1")]))
-    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep", protocol="direct"))
+    rep = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep"))
     rep.sync()
 
     def bucket_of(k):
@@ -229,13 +211,13 @@ def test_replicator_resumes_across_restart(spark, tmp_table_dir):
     """A new ChangeReplicator over an existing replica must resume from
     the persisted watermark (incremental), not re-bootstrap."""
     src = mk(spark, tmp_table_dir, "src")
-    rep_table = mk(spark, tmp_table_dir, "rep", protocol="direct")
+    rep_table = mk(spark, tmp_table_dir, "rep")
     rep = ChangeReplicator(src, rep_table)
     src.upsert(df(spark, B1))
     src.upsert(df(spark, B2))
     assert rep.sync() == 2
     # process restart
-    rep2 = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep", protocol="direct"))
+    rep2 = ChangeReplicator(src, mk(spark, tmp_table_dir, "rep"))
     assert rep2.applied_version == rep.applied_version
     assert rep2.sync() == 0
     src.soft_delete(df(spark, [(2, datetime(2024, 2, 1), 9, "x")]))

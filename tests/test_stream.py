@@ -68,8 +68,9 @@ def test_streaming_upsert_manifest_protocol(spark, tmp_path):
     micro-batch merge publishes one atomic snapshot, so the combination
     gives exactly-once TABLE states — the streaming checkpoint replays
     an interrupted batch and its re-merge lands as a new snapshot, never
-    a half-written directory.  End state matches the direct protocol;
-    one snapshot per delivery is visible in the log."""
+    a half-written directory.  End state matches batch-wins-with-
+    newer-guard semantics; one snapshot per delivery is visible in the
+    log."""
     batches = [
         df(spark, [(1, datetime(2024, 1, 1), 1, "a"), (2, datetime(2024, 1, 1), 2, "b")]),
         df(spark, [(1, datetime(2024, 1, 2), 3, "a2"), (3, datetime(2024, 1, 1), 4, "c")]),

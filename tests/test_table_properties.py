@@ -32,7 +32,7 @@ def _t(spark, root, **kw):
     return KeyedTable(spark, os.path.join(root, "t"), **args)
 
 
-@pytest.mark.parametrize("protocol", ["direct", "manifest"])
+@pytest.mark.parametrize("protocol", ["manifest"])
 def test_reopening_with_different_bucketing_fails_fast(
     spark, tmp_table_dir, protocol
 ):
@@ -50,7 +50,7 @@ def test_reopening_with_different_bucketing_fails_fast(
     assert again.read().count() == 20
 
 
-@pytest.mark.parametrize("protocol", ["direct", "manifest"])
+@pytest.mark.parametrize("protocol", ["manifest"])
 @pytest.mark.parametrize("new_n", [8, 2])
 def test_rebucket_preserves_content_and_future_merges(
     spark, tmp_table_dir, protocol, new_n
@@ -77,17 +77,16 @@ def test_rebucket_preserves_content_and_future_merges(
     assert got == {
         k: (f"v2-{k}" if k % 2 == 0 else f"v1-{k}") for k in range(20)
     }
-    if protocol == "manifest":
-        assert t2.count_fast() == 20
+    assert t2.count_fast() == 20
 
 
-@pytest.mark.parametrize("protocol", ["direct", "manifest"])
+@pytest.mark.parametrize("protocol", ["manifest"])
 def test_maybe_rebucket_grows_with_volume(spark, tmp_table_dir, protocol):
     """The auto-resize policy: with a tiny per-bucket byte target the
     table must grow its bucket count (power-of-two) in one rewrite,
     preserve content, and report the resize; a table under target is
-    untouched.  (Manifest mode measures only LIVE snapshot files, so
-    superseded commit files don't trigger phantom resizes.)"""
+    untouched.  (Only LIVE snapshot files are measured, so superseded
+    commit files don't trigger phantom resizes.)"""
     t = _t(spark, tmp_table_dir, num_buckets=2, commit_protocol=protocol)
     t.upsert(_b(spark, [(k, 1, k, "x" * 64) for k in range(200)]))
     before = t.content_checksum()
@@ -157,16 +156,45 @@ def test_auto_rebucket_requires_the_maintenance_cadence(spark, tmp_table_dir):
         )
 
 
-@pytest.mark.parametrize("protocol", ["direct", "manifest"])
+@pytest.mark.parametrize("protocol", ["manifest"])
 def test_rebucket_growth_replaces_every_old_dir(spark, tmp_table_dir, protocol):
-    """The stale-dir hazard: growing to a much larger count with few
+    """The stale-bucket hazard: growing to a much larger count with few
     keys leaves some OLD bucket ids with no rows under the new
-    assignment — dynamic overwrite would keep those dirs' stale copies
-    (caught as 405/400 rows in the streaming test before the fix).
-    Five keys into 64 buckets makes the skip near-certain."""
+    assignment — a rewrite that replaced only the buckets it wrote
+    would keep those buckets' stale copies (caught as 405/400 rows in
+    the streaming test once).  Five keys into 64 buckets makes the skip
+    near-certain."""
     t = _t(spark, tmp_table_dir, commit_protocol=protocol)
     t.upsert(_b(spark, [(k, 1, k, f"v-{k}") for k in range(5)]))
     t.rebucket(64)
     state = t.read()
     assert state.count() == 5
     assert state.groupBy("pkey").count().filter("count > 1").count() == 0
+
+
+def test_removed_commit_protocol_is_rejected(spark, tmp_table_dir):
+    """'manifest' is the only commit protocol left; any other value,
+    the removed in-place 'direct' one included, fails at construction."""
+    for bad in ("direct", "bogus"):
+        with pytest.raises(ValueError, match="'direct' protocol was removed"):
+            _t(spark, tmp_table_dir, commit_protocol=bad)
+
+
+def test_in_place_layout_is_rejected_on_open(spark, tmp_table_dir):
+    """A table root an older build wrote in place (properties sidecar
+    plus ``__qss_bucket=*`` partition directories, no manifest) must
+    fail on open rather than read as empty: its first commit would
+    publish a snapshot that drops every existing row."""
+    import json
+    import re
+
+    root = os.path.join(tmp_table_dir, "t")
+    bucket_dir = os.path.join(root, "__qss_bucket=0")
+    os.makedirs(bucket_dir)
+    with open(os.path.join(root, "_qss_table.json"), "w") as f:
+        json.dump({"keys": ["pkey"], "num_buckets": 4, "zone_map_cols": []}, f)
+    _b(spark, [(1, 1, 1, "old")]).toPandas().to_parquet(
+        os.path.join(bucket_dir, "part-0.parquet")
+    )
+    with pytest.raises(ValueError, match=re.escape(f"KeyedTable at {root} holds")):
+        _t(spark, tmp_table_dir)

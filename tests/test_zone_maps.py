@@ -43,9 +43,7 @@ def mk(spark, root, layout, name="t"):
         num_buckets=8,
         zone_map_cols=ZCOLS,
     )
-    if layout == "manifest":
-        return KeyedTable(spark, path, commit_protocol="manifest", **kw)
-    return KeyedTable(spark, path, **kw)  # direct
+    return KeyedTable(spark, path, commit_protocol=layout, **kw)
 
 
 OLD = [(i, datetime(2024, 1, 1), i, f"p{i}") for i in range(32)]
@@ -88,7 +86,7 @@ def test_incremental_read_skips_untouched_buckets(spark, tmp_table_dir, layout):
     assert t.read_range("modified_date").count() == t.read().count()
 
 
-@pytest.mark.parametrize("layout", ["direct", "manifest"])
+@pytest.mark.parametrize("layout", ["manifest"])
 def test_lookup_point_reads_every_layout(spark, tmp_table_dir, layout):
     t = mk(spark, tmp_table_dir, layout)
     t.upsert(df(spark, OLD))
@@ -103,9 +101,8 @@ def test_lookup_point_reads_every_layout(spark, tmp_table_dir, layout):
     }
     assert with_dead == {(1, "p1b"), (2, "p2")}
 
-    if layout != "direct":
-        # effectiveness: a 2-key lookup opens fewer files than the scan
-        assert _files(t.lookup([1, 2], active_only=False)) < _files(t.read())
+    # effectiveness: a 2-key lookup opens fewer files than the scan
+    assert _files(t.lookup([1, 2], active_only=False)) < _files(t.read())
 
 
 def test_zones_ride_commits_and_carry_forward(spark, tmp_table_dir):
