@@ -27,11 +27,12 @@ data); at 100 TB with ~100k buckets of ~1 GB this is a few MB of JSON —
 the same order as a Delta checkpoint — and listing is one read of
 ``_qss_manifest/`` (no recursive data-dir listing).  Concurrency: the
 atomic no-overwrite rename arbitrates racing publishes, and
-:meth:`ManifestLog.commit` resolves a lost race OPTIMISTICALLY when the
-writers' bucket sets are disjoint (re-read the winner's snapshot,
-re-point untouched buckets, retry — the Delta disjoint-AddFile rebase);
-overlapping-bucket races still fail loudly, since the loser's MERGE
-resolved against a bucket state that no longer exists.  The reference
+:meth:`ManifestLog.commit_bounded` resolves a lost race OPTIMISTICALLY
+when no bucket the loser touched changed since its base (re-target the
+next version; a delta carries the winner's other buckets by
+construction — the Delta disjoint-AddFile rebase); overlapping-bucket
+races still fail loudly, since the loser's MERGE resolved against a
+bucket state that no longer exists.  The reference
 gets the equivalent from Postgres row locks (upsert.rs:287).
 """
 
@@ -240,23 +241,24 @@ class ManifestLog:
     r9 verdict's "manifest metadata scale plan").  The log is therefore
     segmented the way Delta's is:
 
-    - a DECLARED commit publishes a **delta document** — just its
-      replaced bucket ids, its added files and their stats/zones —
-      O(commit), not O(table);
-    - every ``checkpoint_interval``-th version (and every undeclared
-      commit, e.g. ``restore``) publishes a **full document** (the
+    - a DECLARED commit (:meth:`commit_bounded`) publishes a **delta
+      document** — just its replaced bucket ids, its added files and
+      their stats/zones — O(commit), not O(table);
+    - every ``checkpoint_interval``-th version, a table's first
+      version, and every ``restore`` publish a **full document** (the
       checkpoint), bounding reconstruction chains to
-      ``checkpoint_interval - 1`` deltas;
+      ``checkpoint_interval - 1`` deltas.  One builder restates a
+      chain as a full document (:meth:`_checkpoint`), for cadence
+      checkpoints, restores and vacuum's collapse alike;
     - readers reconstruct a snapshot by walking back to the nearest
       full document and replaying deltas forward, with a small
       per-instance cache of resolved snapshots (documents are
       immutable once published, so caching by version is sound).
 
-    Before writing a delta the committer REPLAYS it against the base
-    snapshot and falls back to a full document on any disagreement
-    with the target state — the reader's apply function is the single
-    source of truth, so segmentation can never change what a snapshot
-    means.  Measured at 10^4 files (tests/test_manifest_scale.py):
+    The reader's apply function (:meth:`_apply_delta`) is the single
+    source of truth for what a delta means: stats and zone coverage are
+    recomputed from what the chain actually carries, never copied from
+    the writer.  Measured at 10^4 files (tests/test_manifest_scale.py):
     per-commit manifest bytes drop from O(MB) to O(KB) and commit
     latency stays flat with file count; the residual O(files) costs —
     checkpoint writes (amortized 1/interval), cold reconstruction, and
@@ -983,11 +985,10 @@ class ManifestLog:
     @staticmethod
     def _apply_delta(snapshot: tuple, raw: dict) -> tuple:
         """Apply one DELTA document to a resolved snapshot — the single
-        apply function both the reader (reconstruction) and the writer
-        (pre-publish replay check) use.  Metadata keeps the COVERAGE
-        invariant: any surviving bucket/file without an entry means
-        publish-None (honest scan fallback), exactly as the eager
-        carry-forward computed it."""
+        apply function both the reader (reconstruction) and the
+        checkpoint builder's driver replay use.  Metadata keeps the
+        COVERAGE invariant: any surviving bucket/file without an entry
+        means publish-None (honest scan fallback)."""
         mapping, stats, zones = snapshot
         d = raw["delta"]
         replaced = {int(b) for b in d.get("replaced", [])}
@@ -1258,26 +1259,16 @@ class ManifestLog:
 
         return {"op": str(op), "committed_at": int(time.time())}
 
-    def _try_publish(
-        self,
-        mapping: dict[int, list[str]],
-        stats: dict[int, list[int]] | None,
-        version: int,
-        zones: dict[int, dict[str, list]] | None = None,
-        delta: dict | None = None,
-        op: str | None = None,
-    ) -> bool:
-        """Atomically publish one snapshot attempt at ``version``:
-        write-temp + atomic put-if-absent, so the snapshot either fully
-        exists or not at all, and a racing writer FAILS instead of
-        clobbering (the commit arbiter, same role as Delta's log store).
+    def _put_if_absent(self, body: bytes, version: int) -> bool:
+        return put_if_absent(*self._hfs(), self.dir, f"v{version}.json", body)
 
-        ``delta``: publish a DELTA document carrying only this commit's
-        changes instead of the full snapshot (``mapping``/``stats``/
-        ``zones`` still describe the full target state for the caller's
-        bookkeeping; the written bytes are O(commit)).  Only
-        :meth:`commit` passes it, after replaying it against the base
-        snapshot and confirming it reproduces the target exactly.
+    def _try_publish(self, body: bytes, version: int, cp_name: str | None) -> bool:
+        """Atomically publish one document at ``version``: write-temp +
+        atomic put-if-absent, so the snapshot either fully exists or not
+        at all, and a racing writer FAILS instead of clobbering (the
+        commit arbiter, same role as Delta's log store).  A lost
+        attempt's checkpoint directory ``cp_name`` is reclaimed at once
+        (vacuum would get it eventually).
 
         The put-if-absent primitive is scheme-dependent, exactly as in
         Delta's LogStore implementations: on a LOCAL filesystem the
@@ -1289,48 +1280,43 @@ class ManifestLog:
         atomic-exclusive (EEXIST).  On HDFS-like stores,
         ``rename`` is atomic-no-overwrite by contract and is used
         as-is."""
-        fs, Path = self._hfs()
-        fs.mkdirs(Path(self.dir))
-        if delta is not None:
-            doc = {"version": version, "delta": delta, **self._op_fields(op)}
-            if delta.get("zones"):
-                doc["zone_tz"] = "UTC"
-            body = json.dumps(doc).encode("utf-8")
-            return self._put_if_absent(body, version)
-        body, cp_name = self._full_body(mapping, stats, zones, version, op=op)
-        ok = self._put_if_absent(body, version)
-        if not ok and cp_name is not None:
-            # lost the publish race: reclaim this attempt's checkpoint
-            # directory immediately (vacuum would get it eventually)
+        if self._put_if_absent(body, version):
+            return True
+        if cp_name is not None:
+            fs, Path = self._hfs()
             fs.delete(Path(os.path.join(self.dir, cp_name)), True)
-        return ok
+        return False
 
-    def _full_body(
-        self, mapping, stats, zones, version: int, op: str | None = None
-    ) -> tuple[bytes, str | None]:
-        """The JSON body of a FULL document at ``version`` — inline
-        below ``parquet_checkpoint_threshold`` snapshot files, a
-        pointer to a freshly written parquet checkpoint at/above it.
-        Returns ``(body, checkpoint_dir_name_or_None)``; the parquet
-        directory is written BEFORE the pointer publishes, so a
-        published pointer always resolves (a crash in between leaves
-        an orphan directory for vacuum, never a dangling pointer)."""
+    def _publish_undeclared(
+        self, body: bytes, version: int, cp_name: str | None, what: str
+    ) -> int:
+        """Publish a FULL document that carries no transaction
+        declaration: with no touched buckets to check, a lost race
+        raises (the single-writer contract)."""
+        if self._try_publish(body, version, cp_name):
+            return version
+        raise ConcurrentCommitError(
+            f"concurrent commit detected: v{version} already exists in "
+            f"{self.dir} ({what} carries no transaction declaration, so "
+            f"the single-writer contract applies)"
+        )
+
+    def _full_doc(
+        self, mapping, stats, zones, version: int
+    ) -> tuple[dict, str | None]:
+        """A FULL document at ``version`` — an inline JSON body below
+        ``parquet_checkpoint_threshold`` snapshot files, a pointer to a
+        freshly written parquet checkpoint at/above it.  Returns ``(doc,
+        checkpoint_dir_name_or_None)``; the parquet directory is written
+        BEFORE the pointer publishes, so a published pointer always
+        resolves (a crash in between leaves an orphan directory for
+        vacuum, never a dangling pointer)."""
         nfiles = sum(len(fl) for fl in mapping.values())
         if nfiles >= self.parquet_checkpoint_threshold:
             name, fields = self._write_parquet_checkpoint(
                 mapping, stats, zones, version
             )
-            doc = {"version": version, **fields, **self._op_fields(op)}
-            return json.dumps(doc).encode("utf-8"), name
-        body = self._full_doc_body(mapping, stats, zones, version)
-        if op is not None:
-            doc = json.loads(body.decode("utf-8"))
-            doc.update(self._op_fields(op))
-            body = json.dumps(doc).encode("utf-8")
-        return body, None
-
-    @staticmethod
-    def _full_doc_body(mapping, stats, zones, version: int) -> bytes:
+            return {"version": version, **fields}, name
         doc = {
             "version": version,
             "buckets": {str(b): f for b, f in sorted(mapping.items())},
@@ -1347,214 +1333,75 @@ class ManifestLog:
             # publish; readers refuse unmarked (pre-normalization)
             # zones rather than risk tz-drift mis-pruning
             doc["zone_tz"] = "UTC"
-        return json.dumps(doc).encode("utf-8")
+        return doc, None
 
-    def _build_delta(self, mapping, stats, zones, touched: set) -> dict:
-        """Delta document for a declared commit: the touched bucket ids
-        plus the target entries, stats and zones of the ones that still
-        have files — O(commit) bytes."""
-        added = {b: mapping[b] for b in touched if b in mapping}
-        d = {
-            "replaced": sorted(int(b) for b in touched),
-            "added": {str(b): list(fl) for b, fl in sorted(added.items())},
-        }
-        if stats is None:
-            d["stats_lost"] = True
-        else:
-            d["stats"] = {
-                str(b): list(stats[b]) for b in sorted(added) if b in stats
-            }
-        if zones is None:
-            d["zones_lost"] = True
-        else:
-            zpaths = sorted(p for fl in added.values() for p in fl)
-            d["zones"] = {
-                p: {c: list(mm) for c, mm in sorted(zones[p].items())}
-                for p in zpaths
-                if p in zones
-            }
-        return d
-
-    @staticmethod
-    def _same_state(a: tuple, b: tuple) -> bool:
-        """Order-insensitive equality of two resolved snapshots — the
-        pre-publish replay check gating every delta write."""
-
-        def canon(snap):
-            m, s, z = snap
-            return (
-                {int(b): sorted(fl) for b, fl in m.items()},
-                None if s is None else {int(b): list(v) for b, v in s.items()},
-                None
-                if z is None
-                else {
-                    p: {c: list(mm) for c, mm in cols.items()}
-                    for p, cols in z.items()
-                },
-            )
-
-        return canon(a) == canon(b)
-
-    def _publish_attempt(
-        self, mapping, stats, zones, version, touched, base_version,
-        op: str | None = None,
-    ) -> bool:
-        """One publish attempt: a DELTA document when the commit is
-        declared, based on the immediately preceding version, off the
-        checkpoint cadence, AND the replayed delta reproduces the
-        target state exactly; a FULL document (checkpoint) otherwise.
-        The fallback is always safe — segmentation is a pure layout
-        choice."""
-        if (
-            touched is not None
-            and base_version is not None
-            and version == base_version + 1
-            and self.checkpoint_interval > 1
-            and version % self.checkpoint_interval != 0
-        ):
-            try:
-                base = self._snapshot(base_version)
-            except FileNotFoundError:
-                base = None
-            if base is not None:
-                delta = self._build_delta(mapping, stats, zones, set(touched))
-                applied = self._apply_delta(
-                    base, {"delta": delta, "zone_tz": "UTC"}
-                )
-                if self._same_state(applied, (mapping, stats, zones)):
-                    return self._try_publish(
-                        mapping, stats, version, zones=zones, delta=delta,
-                        op=op,
-                    )
-        return self._try_publish(mapping, stats, version, zones=zones, op=op)
-
-    def _put_if_absent(self, body: bytes, version: int) -> bool:
-        return put_if_absent(*self._hfs(), self.dir, f"v{version}.json", body)
+    def _checkpoint(
+        self, head: dict | None, deltas: list[dict], version: int, extra: dict
+    ) -> tuple[bytes, str | None]:
+        """The one checkpoint builder: the FULL document restating the
+        snapshot ``head`` + ``deltas`` (oldest-first) at ``version``,
+        plus the ``extra`` provenance fields — for cadence checkpoints,
+        a log's first version, restores and vacuum's collapse alike.
+        ``head`` is a full document, ``None`` for the empty snapshot.
+        On a parquet-pointer head the checkpoint is built DISTRIBUTEDLY
+        (:meth:`_write_checkpoint_from_chain`: the snapshot never
+        materializes on the driver).  On an inline head, or when the
+        shapes don't reconcile, the chain replays on the driver and
+        :meth:`_full_doc` picks inline JSON or parquet by the replayed
+        file count — so an inline table that reaches the threshold gets
+        its first parquet checkpoint here too.  Returns ``(body,
+        checkpoint_dir_name_or_None)``."""
+        built = None
+        if head is not None and "checkpoint_parquet" in head:
+            built = self._write_checkpoint_from_chain(head, deltas, version)
+        if built is None:
+            snap = self._resolve_full(head) if head is not None else ({}, {}, {})
+            for raw in deltas:
+                snap = self._apply_delta(snap, raw)
+            built = self._full_doc(*snap, version)
+        doc, cp_name = built
+        doc.update(extra)
+        return json.dumps(doc).encode("utf-8"), cp_name
 
     def commit(
         self,
         mapping: dict[int, list[str]],
         stats: dict[int, list[int]] | None = None,
-        touched: set[int] | None = None,
-        base_version: int | None = None,
-        max_retries: int = 5,
-        zones: dict[int, dict[str, list]] | None = None,
+        zones: dict[str, dict[str, list]] | None = None,
         op: str | None = None,
     ) -> int:
-        """Publish ``mapping`` as the next snapshot.  ``stats``
-        (per-bucket ``[rows, active_rows]``) and ``zones`` (per-bucket
-        column min/max) ride in the same atomic publish, so metadata
-        counts and data-skipping bounds can never disagree with the
-        snapshot they describe.
-
-        **Optimistic concurrency** (the files-based stand-in for the
-        Postgres row locks the reference gets for free, upsert.rs:287):
-        when the caller declares its transaction — ``touched`` (the
-        bucket ids this commit replaces or writes) and ``base_version``
-        (the snapshot its carried-forward entries came from; ``None``
-        for a table-creating commit) — a lost rename race is resolved
-        the way Delta resolves disjoint AddFile conflicts: re-read the
-        winner's snapshot, and if the buckets that changed since
-        ``base_version`` are DISJOINT from ``touched``, re-point the
-        untouched buckets at the winner's entries and retry; on any
-        overlap raise ``ConcurrentCommitError`` loudly (two writers
-        merged the same bucket — one of them resolved MERGE semantics
-        against a stale bucket state, and no file-level rebase can fix
-        that).  Without the declaration, any lost race raises — the
-        conservative single-writer contract.
-
-        A declared commit publishes at ``base_version + 1`` — NOT at
-        ``latest + 1``: ``mapping`` was derived from the base snapshot,
-        so if another writer advanced the log since, targeting latest+1
-        would land the STALE carried-forward entries at a fresh version
-        with no collision at all (a silent lost update, caught by the
-        threaded-writers test).  Deriving the target from the same
-        version the mapping came from forces every interleaving through
-        the put-if-absent collision and from there through the conflict
-        check."""
-        if touched is not None:
-            version = (base_version or 0) + 1
-        else:
-            version = (self.latest_version() or 0) + 1
-        if self._publish_attempt(
-            mapping, stats, zones, version, touched, base_version, op=op
-        ):
-            return version
-        if touched is None:
-            raise ConcurrentCommitError(
-                f"concurrent commit detected: v{version} already exists in "
-                f"{self.dir} (commit carried no transaction declaration, so "
-                f"the single-writer contract applies)"
-            )
-        base_map = self.read(base_version) if base_version is not None else {}
-        touched = set(touched)
-        for _ in range(max_retries):
-            cur_v = self.latest_version()
-            cur_map = self.read(cur_v)
-            changed = {
-                b
-                for b in set(base_map) | set(cur_map)
-                if sorted(base_map.get(b, [])) != sorted(cur_map.get(b, []))
-            }
-            overlap = changed & touched
-            if overlap:
-                raise ConcurrentCommitError(
-                    f"concurrent commit conflict on buckets {sorted(overlap)}: "
-                    f"another writer replaced them between v{base_version} and "
-                    f"v{cur_v}; this commit's merge resolved against stale "
-                    f"bucket state and must be re-run, not re-pointed"
-                )
-            # disjoint: our touched entries over the winner's snapshot
-            merged_map = {b: f for b, f in cur_map.items() if b not in touched}
-            for b in touched:
-                if b in mapping:
-                    merged_map[b] = mapping[b]
-            def _rebase_meta(ours, winners):
-                """Per-bucket metadata rebase after a lost disjoint
-                race: winner's entries for untouched buckets, ours for
-                touched ones, COVERAGE invariant (None when either side
-                lost it)."""
-                if winners is None or ours is None:
-                    return None  # either side lost coverage — honest fallback
-                merged = {b: s for b, s in winners.items() if b not in touched}
-                for b in touched:
-                    if b in merged_map:
-                        if b not in ours:
-                            return None
-                        merged[b] = ours[b]
-                if any(b not in merged for b in merged_map):
-                    return None  # COVERAGE invariant (count_fast / skipping)
-                return merged
-
-            def _rebase_zones(ours, winners):
-                """Zones are PATH-keyed: take each merged bucket's file
-                entries from whichever side owns that bucket after the
-                rebase (ours for touched, winner's otherwise).  Same
-                coverage invariant, at file grain."""
-                if winners is None or ours is None:
-                    return None
-                merged = {}
-                for b, files in merged_map.items():
-                    side = ours if b in touched else winners
-                    for path in files:
-                        if path not in side:
-                            return None
-                        merged[path] = side[path]
-                return merged
-
-            merged_stats = _rebase_meta(stats, self.read_stats(cur_v))
-            merged_zones = _rebase_zones(zones, self.read_zones(cur_v))
-            if self._publish_attempt(
-                merged_map, merged_stats, merged_zones, cur_v + 1, touched,
-                cur_v, op=op,
-            ):
-                return cur_v + 1
-        raise ConcurrentCommitError(
-            f"lost the publish race {max_retries} times in a row in "
-            f"{self.dir}; giving up"
+        """Publish ``mapping`` as a FULL document at the next version —
+        the undeclared publish, for callers that seed a log with a
+        whole snapshot (table writes declare their buckets through
+        :meth:`commit_bounded`).  ``stats`` (per-bucket ``[rows,
+        active_rows]``) and ``zones`` (per-file column min/max) ride in
+        the same atomic publish, so metadata counts and data-skipping
+        bounds can never disagree with the snapshot they describe.  A
+        lost publish race raises ``ConcurrentCommitError``."""
+        fs, Path = self._hfs()
+        fs.mkdirs(Path(self.dir))
+        version = (self.latest_version() or 0) + 1
+        doc, cp_name = self._full_doc(mapping, stats, zones, version)
+        doc.update(self._op_fields(op))
+        return self._publish_undeclared(
+            json.dumps(doc).encode("utf-8"), version, cp_name, "commit"
         )
 
-    # ------------------------------------------------ bounded commits
+    def restore(self, version: int, op: str | None = None) -> int:
+        """Republish ``version``'s snapshot as a FULL document at the
+        next version — the RESTORE commit, restated by
+        :meth:`_checkpoint` from ``version``'s own chain (distributedly
+        on the pointer layout).  Raises ``FileNotFoundError`` for a
+        version the log does not hold; a lost publish race raises
+        (restore is an undeclared maintenance commit)."""
+        head, deltas = self._chain_to_checkpoint(version)
+        new_version = (self.latest_version() or 0) + 1
+        body, cp_name = self._checkpoint(
+            head, deltas, new_version, self._op_fields(op)
+        )
+        return self._publish_undeclared(body, new_version, cp_name, "restore")
+
+    # ---------------------------------------------- declared commits
 
     @staticmethod
     def _delta_doc_bounded(touched, new_files, new_stats, new_zones) -> dict:
@@ -1644,7 +1491,7 @@ class ManifestLog:
 
     def _write_checkpoint_from_chain(
         self, head, delta_raws, version: int
-    ) -> tuple[bytes, str] | None:
+    ) -> tuple[dict, str] | None:
         """Build + write the parquet checkpoint for ``version``
         DISTRIBUTEDLY: (base checkpoint rows minus buckets the chain
         touched) UNION O(chain) new rows — the Delta incremental-
@@ -1653,8 +1500,8 @@ class ManifestLog:
         recomputed from the WRITTEN rows with one aggregation, so
         coverage regained by a full rewrite (compaction) is recognized
         and partial coverage is never claimed.  Returns ``(pointer
-        body, cp_dir_name)`` or ``None`` when the shapes don't
-        reconcile (callers fall back to the materialized path)."""
+        doc, cp_dir_name)``, or ``None`` when the shapes don't
+        reconcile (:meth:`_checkpoint` then replays on the driver)."""
         import pyarrow as pa
 
         from pyspark.sql import functions as F
@@ -1818,55 +1665,22 @@ class ManifestLog:
         }
         if has_zones:
             fields["zone_tz"] = "UTC"
-        doc = {"version": version, **fields}
-        return json.dumps(doc).encode("utf-8"), name
+        return {"version": version, **fields}, name
 
-    def _chain_pointer_body(
-        self, version: int, new_version: int
-    ) -> tuple[bytes, str] | None:
-        """FULL pointer document restating ``version``'s snapshot at
-        ``new_version``, built DISTRIBUTEDLY from ``version``'s own
-        chain (base checkpoint rows + O(chain) deltas) — the snapshot
-        is never materialized on the driver.  ``None`` when ``version``
-        resolves to an inline/legacy head (small tables — the
-        materialized path is bounded by the parquet threshold there by
-        construction) or the shapes don't reconcile."""
-        try:
-            head, deltas = self._chain_to_checkpoint(version)
-        except FileNotFoundError:
-            return None
-        if "checkpoint_parquet" not in head:
-            return None
-        return self._write_checkpoint_from_chain(head, deltas, new_version)
+    def _bucket_lists(self, buckets, version: int | None) -> dict[int, list[str]]:
+        """File lists of ``buckets`` at ``version`` (``None`` = the empty
+        snapshot): a bucket-pushdown fetch on a parquet-pointer
+        snapshot, the resolved mapping on an inline or cached one."""
+        if version is None:
+            return {}
+        sub = self.bucket_mapping_distributed(buckets, version)
+        if sub is None:
+            mapping = self._snapshot(version)[0]
+            sub = {b: mapping[b] for b in buckets if b in mapping}
+        return sub
 
-    def restore_bounded(self, version: int, op: str | None = None) -> int | None:
-        """Republish ``version``'s snapshot as the next commit WITHOUT
-        materializing it (the r11 verdict's "restore still materializes
-        snapshots driver-side" seam): the restored checkpoint is built
-        distributedly by :meth:`_chain_pointer_body`.  ``None`` when
-        the target resolves to an inline head — callers fall back to
-        the materialized :meth:`commit`, bounded by the parquet
-        threshold there.  A lost publish race raises (restore is an
-        undeclared maintenance commit — same single-writer contract as
-        the materialized path)."""
-        new_version = (self.latest_version() or 0) + 1
-        built = self._chain_pointer_body(version, new_version)
-        if built is None:
-            return None
-        body, cp_name = built
-        if op is not None:
-            doc = json.loads(body.decode("utf-8"))
-            doc.update(self._op_fields(op))
-            body = json.dumps(doc).encode("utf-8")
-        if self._put_if_absent(body, new_version):
-            return new_version
-        fs, Path = self._hfs()
-        fs.delete(Path(os.path.join(self.dir, cp_name)), True)
-        raise ConcurrentCommitError(
-            f"concurrent commit detected: v{new_version} already exists in "
-            f"{self.dir} (restore carries no transaction declaration, so "
-            f"the single-writer contract applies)"
-        )
+    # a lost race means another writer landed; give up after this many
+    _PUBLISH_ATTEMPTS = 6
 
     def commit_bounded(
         self,
@@ -1874,179 +1688,83 @@ class ManifestLog:
         new_files: dict[int, list[str]],
         new_stats: dict[int, list[int]] | None,
         new_zones: dict[str, dict] | None,
-        base_version: int,
-        max_retries: int = 5,
+        base_version: int | None,
         op: str | None = None,
-    ) -> int | None:
-        """O(commit) commit for pointer-layout (big) tables — the
-        carried-forward mapping is NEVER materialized on the driver
-        (the r10 verdict's "commits carry the full bucket->files
-        mapping driver-side" seam):
+    ) -> int:
+        """Publish a DECLARED commit — every table write (upsert, soft
+        and hard delete, compact, rebucket, replica repair) — without
+        materializing the carried-forward mapping on the driver.
+        ``touched`` holds every bucket the commit replaces or writes,
+        ``new_files``/``new_stats``/``new_zones`` its own output, and
+        ``base_version`` the snapshot its merge read (``None`` = the
+        empty snapshot, a table's first write).
 
         - off the checkpoint cadence, publish the DELTA document built
           from commit-local info (:meth:`_delta_doc_bounded`);
-        - at cadence, publish a parquet checkpoint built DISTRIBUTEDLY
-          from the base checkpoint rows and the chain's deltas
-          (:meth:`_write_checkpoint_from_chain`);
-        - a lost publish race is conflict-checked against the
-          intervening DELTA documents' declared bucket sets — O(race
-          window), no snapshot reads; disjoint buckets re-target the
-          next version (delta semantics carry the winner's untouched
-          buckets by construction); an overlapped bucket whose
-          declared files equal its base state re-targets too (one
-          bounded fetch), and only a real divergence raises
-          ``ConcurrentCommitError``;
-        - on an INLINE base layout the fast path declines — except the
-          SEED CROSSING: at cadence, when the raw head + chain put the
-          table at/above ``parquet_checkpoint_threshold``, the first
-          parquet checkpoint is built here from the raw documents
-          (r11 verdict ask #2) so the transition never resolves a
-          snapshot.
+        - at cadence, and for a log's first version, publish the FULL
+          document :meth:`_checkpoint` restates from the base's chain
+          plus this delta;
+        - on a lost publish race (**optimistic concurrency**, the
+          files-based stand-in for the Postgres row locks the reference
+          gets, upsert.rs:287), compare each touched bucket's file list
+          at ``base_version`` with its list at the latest version.  If
+          none changed, re-target ``latest + 1``: the delta carries the
+          winner's buckets by construction, and :meth:`_apply_delta`
+          recomputes stats and zone coverage.  Otherwise raise
+          ``ConcurrentCommitError`` — this commit's merge resolved
+          against a bucket state that no longer exists.
 
-        Returns the published version, or ``None`` when the fast path
-        doesn't apply (inline/legacy base layout, an undeclared
-        full-document commit in the race window, or an unreconcilable
-        checkpoint shape) — callers fall back to the materialized
-        :meth:`commit`, which remains the semantics of record."""
+        The first attempt targets ``base_version + 1``, NOT ``latest +
+        1``: the commit was derived from the base, so a writer that
+        advanced the log since forces a put-if-absent collision and
+        from there the conflict check (targeting latest+1 would
+        silently drop its update to a touched bucket).  Returns the
+        published version."""
         touched = {int(b) for b in touched}
         new_files = {int(b): list(fl) for b, fl in new_files.items()}
         delta = self._delta_doc_bounded(touched, new_files, new_stats, new_zones)
-        version = int(base_version) + 1
-        for _ in range(max_retries + 1):
-            try:
-                head, prior = self._chain_to_checkpoint(version - 1)
-            except FileNotFoundError:
-                return None
+        if base_version is None:
+            fs, Path = self._hfs()
+            fs.mkdirs(Path(self.dir))
+        version = (base_version or 0) + 1
+        base_lists = None
+        for _ in range(self._PUBLISH_ATTEMPTS):
             ours = {"version": version, "delta": delta, **self._op_fields(op)}
             if delta.get("zones"):
                 ours["zone_tz"] = "UTC"
-            at_cadence = (
-                self.checkpoint_interval <= 1
-                or version % self.checkpoint_interval == 0
-            )
-            if "checkpoint_parquet" not in head:
-                # inline layout: the materialized path is the semantics
-                # of record below the parquet threshold — EXCEPT the
-                # seed crossing (r11 verdict ask #2): at cadence, when
-                # the inline head (bounded by the threshold by
-                # construction) + O(chain) raw deltas put the table at
-                # or above the threshold, build the FIRST parquet
-                # checkpoint here from the raw documents — no
-                # snapshot resolution, no re-derived carry-forward
-                if "buckets" not in head or not at_cadence:
-                    return None
-                # upper bound first: head files + everything the chain
-                # could add — below the threshold means no crossing is
-                # possible, skip the replay entirely (small tables pay
-                # nothing for this branch)
-                upper = sum(
-                    len(fl) for fl in head["buckets"].values()
-                ) + sum(
-                    len(fl)
-                    for raw in prior + [ours]
-                    for fl in raw["delta"].get("added", {}).values()
+            if version == 1 or version % self.checkpoint_interval == 0:
+                head, prior = (
+                    self._chain_to_checkpoint(version - 1)
+                    if version > 1
+                    else (None, [])
                 )
-                if upper < self.parquet_checkpoint_threshold:
-                    return None
-                snap = self._full_parts(head)
-                for raw in prior + [ours]:
-                    snap = self._apply_delta(snap, raw)
-                m2, s2, z2 = snap
-                nfiles = sum(len(fl) for fl in m2.values())
-                if nfiles < self.parquet_checkpoint_threshold:
-                    return None
-                cp_name, fields = self._write_parquet_checkpoint(
-                    m2, s2, z2, version
-                )
-                doc = {"version": version, **fields, **self._op_fields(op)}
-                ok = self._put_if_absent(
-                    json.dumps(doc).encode("utf-8"), version
-                )
-            elif not at_cadence:
-                cp_name = None
-                ok = self._put_if_absent(
-                    json.dumps(ours).encode("utf-8"), version
+                body, cp_name = self._checkpoint(
+                    head, prior + [ours], version, self._op_fields(op)
                 )
             else:
-                built = self._write_checkpoint_from_chain(
-                    head, prior + [ours], version
-                )
-                if built is None:
-                    return None
-                body, cp_name = built
-                if op is not None:
-                    doc = json.loads(body.decode("utf-8"))
-                    doc.update(self._op_fields(op))
-                    body = json.dumps(doc).encode("utf-8")
-                ok = self._put_if_absent(body, version)
-            if ok:
+                body, cp_name = json.dumps(ours).encode("utf-8"), None
+            if self._try_publish(body, version, cp_name):
                 return version
-            if cp_name is not None:
-                fs, Path = self._hfs()
-                fs.delete(Path(os.path.join(self.dir, cp_name)), True)
-            # lost the race: O(window) conflict check over delta docs
             cur_v = self.latest_version()
-            if cur_v is None or cur_v < version:
-                return None  # log shape changed under us — fall back
-            declared: dict[int, list[str]] = {}
-            undeclared = False
-            for v in range(version, cur_v + 1):
-                try:
-                    raw = self._read_doc(v)
-                except FileNotFoundError:
-                    return None
-                if "delta" not in raw:
-                    undeclared = True
-                    break
-                d = raw["delta"]
-                for b in d.get("replaced", []):
-                    declared[int(b)] = []
-                for b, fl in d.get("added", {}).items():
-                    declared[int(b)] = list(fl)
-            if undeclared:
-                return None  # full-doc commit in the window: rebase via commit()
-            overlap = set(declared) & touched
-            if overlap:
-                # a winner may have DECLARED a bucket yet left its file
-                # list identical to the base state (an empty-bucket
-                # replace, a rebase restating carried files): compare
-                # the window's final declared lists against the base
-                # buckets — one bounded fetch, only on the race path
-                # (ADVICE r11: the materialized commit() compares
-                # actual file lists; this mirrors it without a
-                # snapshot read)
-                if int(base_version) in self._snap_cache:
-                    # base already materialized (read-only view): the
-                    # comparison is free
-                    base_map = self._snap_cache[int(base_version)][0]
-                    base_sub = {
-                        b: list(base_map.get(b, [])) for b in overlap
-                    }
-                else:
-                    base_sub = self.bucket_mapping_distributed(
-                        sorted(overlap), int(base_version)
-                    )
-                really = (
-                    set(overlap)
-                    if base_sub is None  # inline base: strict contract
-                    else {
-                        b
-                        for b in overlap
-                        if sorted(declared[b]) != sorted(base_sub.get(b, []))
-                    }
+            if base_lists is None:
+                base_lists = self._bucket_lists(touched, base_version)
+            cur_lists = self._bucket_lists(touched, cur_v)
+            changed = sorted(
+                b
+                for b in touched
+                if sorted(base_lists.get(b, [])) != sorted(cur_lists.get(b, []))
+            )
+            if changed:
+                raise ConcurrentCommitError(
+                    f"concurrent commit conflict on buckets {changed}: "
+                    f"another writer replaced them between v{base_version} "
+                    f"and v{cur_v}; this commit's merge resolved against "
+                    f"stale bucket state and must be re-run, not re-pointed"
                 )
-                if really:
-                    raise ConcurrentCommitError(
-                        f"concurrent commit conflict on buckets "
-                        f"{sorted(really)}: another writer replaced them "
-                        f"between v{base_version} and v{cur_v}; this "
-                        f"commit's merge resolved against stale bucket "
-                        f"state and must be re-run, not re-pointed"
-                    )
             version = cur_v + 1
         raise ConcurrentCommitError(
-            f"lost the publish race {max_retries + 1} times in a row in "
-            f"{self.dir}; giving up"
+            f"lost the publish race {self._PUBLISH_ATTEMPTS} times in a row "
+            f"in {self.dir}; giving up"
         )
 
     # --------------------------------------------------------- staging
@@ -2367,24 +2085,15 @@ class ManifestLog:
             v0 = keep[0]
             raw0 = self._read_doc(v0)
             if "delta" in raw0:
-                # pointer-layout chains collapse DISTRIBUTEDLY (base
-                # checkpoint rows + O(chain) deltas — r11 verdict ask
-                # #2); inline chains materialize, bounded by the
-                # parquet threshold by construction
-                built = self._chain_pointer_body(v0, v0)
-                if built is not None:
-                    body, _cp = built
-                else:
-                    m0, s0, z0 = self._snapshot(v0)
-                    body, _cp = self._full_body(m0, s0, z0, v0)
-                if "op" in raw0 or "committed_at" in raw0:
-                    # the collapse is a LAYOUT rewrite: keep the
-                    # original commit's provenance, not the collapse's
-                    doc0 = json.loads(body.decode("utf-8"))
-                    for k in ("op", "committed_at"):
-                        if k in raw0:
-                            doc0[k] = raw0[k]
-                    body = json.dumps(doc0).encode("utf-8")
+                # the collapse is a LAYOUT rewrite: keep the original
+                # commit's provenance, not the collapse's
+                head, deltas = self._chain_to_checkpoint(v0)
+                body, _cp = self._checkpoint(
+                    head,
+                    deltas,
+                    v0,
+                    {k: raw0[k] for k in ("op", "committed_at") if k in raw0},
+                )
                 fs0, Path = self._hfs()
                 final = self._doc_path(v0)
                 tmp = Path(

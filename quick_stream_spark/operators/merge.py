@@ -76,39 +76,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return p.getFileSystem(hconf), p, jvm
 
 
-def carry_forward_meta(prev, carried, replaced_buckets):
-    """Carry per-bucket commit metadata (stats) forward into
-    the next snapshot under the COVERAGE invariant: if any
-    carried-forward bucket lacks an entry (pre-metadata manifest, or a
-    partial dict), return ``None`` — publish no metadata rather than a
-    subset readers would trust."""
-    prev = prev or {}
-    if any(b not in prev for b in carried):
-        return None
-    out = dict(prev)
-    for b in replaced_buckets:
-        out.pop(b, None)
-    return out
-
-
-def carry_forward_zones(prev, mapping, new_files):
-    """File-grain twin of :func:`carry_forward_meta` for zone maps
-    (path-keyed): keep the entry of every carried bucket's every file;
-    entries for files that left the snapshot drop out naturally.  Same
-    COVERAGE invariant — any carried file without bounds means publish
-    no zones (readers scan instead of wrongly skipping)."""
-    prev = prev or {}
-    out = {}
-    for b, files in mapping.items():
-        if b in new_files:
-            continue  # the fresh per-file compute covers these
-        for path in files:
-            if path not in prev:
-                return None
-            out[path] = prev[path]
-    return out
-
-
 def compute_commit_meta(
     spark,
     commit_dir: str,
@@ -533,9 +500,8 @@ class KeyedTable:
         if self.key_bloom_bits and new_files:
             self._write_kbloom_sidecars(commit_dir, df.schema)
         # fresh per-commit metadata, bounded by the commit, never the
-        # table (shared by both commit layouts below): from the write
-        # job's Observation when armed, else one footer-weight
-        # aggregation over the commit's files
+        # table: from the write job's Observation when armed, else one
+        # footer-weight aggregation over the commit's files
         new_stats, new_zones = (None, {})
         if new_files:
             row = None
@@ -563,70 +529,16 @@ class KeyedTable:
                     table_path=self.path,
                 )
         self._write_schema_sidecar(df.schema)
-        touched = set(replaced_buckets) | set(new_files)
-        # bounded path first (pointer-layout / big tables): publishes a
-        # delta (or a distributedly-built checkpoint at cadence) from
-        # commit-LOCAL metadata only — the carried-forward mapping is
-        # never materialized on the driver, so commit cost follows the
-        # COMMIT, not the table (the r10 "commits carry the full
-        # mapping driver-side" seam).  None = fast path doesn't apply
-        # (inline/small layout, undeclared doc in a race window):
-        # take the materialized path below, the semantics of record.
-        if base_version is not None:
-            v = self._log.commit_bounded(
-                touched,
-                new_files,
-                new_stats,
-                new_zones if self.zone_map_cols else None,
-                base_version,
-                op=op,
-            )
-            if v is not None:
-                self._exists_cache = True
-                return
-        # {} = no snapshot; stats None = pre-stats.  The view is read-
-        # only: the mapping is copied, the metadata carry-forward builds
-        # new dicts
-        base_map, prev_stats, prev_zones = (
-            self._log.snapshot_view(base_version)
-            if base_version is not None
-            else ({}, {}, {})
-        )
-        mapping = {b: list(fl) for b, fl in base_map.items()}
-        for b in replaced_buckets:
-            mapping.pop(b, None)
-        for b, fl in new_files.items():
-            mapping[b] = fl
-        carried = [b for b in mapping if b not in new_files]
-        # COVERAGE is the invariant, not "a stats key existed": a
-        # carried-forward bucket with no stats entry (pre-stats
-        # manifest, or a partial dict an old engine published) would
-        # make count_fast() silently sum a subset — commit without
-        # stats (honest scan fallback) until every carried bucket is
-        # covered (e.g. after a compaction replaces all buckets).
-        # Zone maps hold the same invariant independently: a gap means
-        # publish no zones (readers scan instead of skipping wrongly).
-        stats = carry_forward_meta(prev_stats, carried, replaced_buckets)
-        zones = (
-            carry_forward_zones(prev_zones, mapping, new_files)
-            if self.zone_map_cols
-            else None
-        )
-        if new_files and (stats is not None or zones is not None):
-            if stats is not None:
-                stats.update(new_stats or {})
-            if zones is not None:
-                zones.update(new_zones)
-        # declare the transaction: replaced or newly-written buckets are
-        # "touched"; a lost publish race re-points the rest at the
-        # winner's entries when disjoint, raises ConcurrentCommitError
-        # when overlapping (commitlog.ManifestLog.commit)
-        self._log.commit(
-            mapping,
-            stats=stats,
-            touched=set(replaced_buckets) | set(new_files),
-            base_version=base_version,
-            zones=zones,
+        # the declared commit: replaced or newly-written buckets are
+        # "touched"; the publish never materializes the carried-forward
+        # mapping, and a lost race re-targets when no touched bucket
+        # changed since base_version, else raises ConcurrentCommitError
+        self._log.commit_bounded(
+            set(replaced_buckets) | set(new_files),
+            new_files,
+            new_stats,
+            new_zones if self.zone_map_cols else None,
+            base_version,
             op=op,
         )
         self._exists_cache = True
@@ -952,22 +864,7 @@ class KeyedTable:
         copied or deleted (the republished files are still protected
         from vacuum because the newest manifest references them).
         Returns the new snapshot version."""
-        log = self._log
-        # pointer-layout (big) tables: the restored checkpoint is built
-        # distributedly from the target's own chain — the snapshot
-        # never materializes on the driver (r11 verdict ask #2); None =
-        # inline head, take the materialized path below (bounded by the
-        # parquet threshold by construction)
-        v = log.restore_bounded(version, op="restore")
-        if v is not None:
-            return v
-        mapping = log.read(version)  # raises on unknown version
-        return log.commit(
-            mapping,
-            stats=log.read_stats(version),
-            zones=log.read_zones(version),
-            op="restore",
-        )
+        return self._log.restore(version, op="restore")
 
     def read_changes(self, from_version: int, to_version: int) -> DataFrame:
         """Change data feed between two snapshots — the Delta-CDF

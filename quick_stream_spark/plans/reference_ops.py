@@ -210,9 +210,9 @@ def r_upsert_endstate_pointer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r_upsert_endstate replayed on the POINTER layout (bounded
     O(commit) commits: ``manifest_parquet_threshold=0``, checkpoint
     cadence 3) with four sequential batches, so the paths a long-lived
-    big table actually runs — delta documents, the seed parquet-
-    checkpoint crossing inside ``commit_bounded``, and a cadence
-    checkpoint — are exercised AND timed in BENCH, not only in unit
+    big table actually runs — delta documents, the first version's
+    parquet checkpoint, and a cadence checkpoint restated from the
+    chain — are exercised AND timed in BENCH, not only in unit
     timings (r12 verdict ask #4).  Batch-wins semantics: the winner per
     key is the row from the highest batch index (later batch
     unconditionally overwrites — lib.rs:111), then latest ``ts``,
@@ -636,11 +636,11 @@ def r_maintenance_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     way ``r_pruning_diagnostics`` pins pruning.
 
     The table runs on the POINTER layout (``manifest_parquet_threshold
-    =0``, cadence 3), so the paths this round's predecessors
-    distributed — ``restore_bounded``'s chain-built checkpoint, the
-    seed checkpoint inside ``commit_bounded``, and vacuum's
-    spool + ANTI JOIN reclaim (commitlog.py) — are exactly the code
-    under check, not the inline-JSON small-table path:
+    =0``, cadence 3), so the distributed paths — the chain-built
+    checkpoint ``ManifestLog.restore`` and vacuum's collapse share with
+    every cadence checkpoint, and vacuum's spool + ANTI JOIN reclaim
+    (commitlog.py) — are exactly the code under check, not the
+    inline-JSON small-table path:
 
     - **restore** must round-trip the pre-corruption end state
       exactly (symmetric ``exceptAll`` empty both ways), be pure

@@ -33,9 +33,9 @@ _SLOW_TEST_NAMES = {
     "test_merge_half_never_resolves_snapshot",
     "test_cdc_reads_on_pointer_layout",
     "test_vacuum_is_distributed_on_pointer_layout",
-    "test_bounded_layout_equals_inline_twin",
+    "test_both_layouts_equal_the_model",
     "test_rebucket_on_pointer_layout",
-    "test_restore_bounded_equals_materialized_restore",
+    "test_restore_equals_the_model_on_both_layouts",
     "test_parquet_checkpoint_full_table_contract",
     "test_parquet_checkpoint_threshold_crossing_mid_history",
     "test_vacuum_collapses_oldest_kept_delta",
@@ -93,27 +93,23 @@ _SLOW_TEST_NAMES = {
     "test_restore_is_distributed_on_pointer_layout",
     "test_composite_key_lookup_prunes_on_leading_key",
     "test_stream_soft_delete_pointer_layout",
-    "test_overlap_race_with_identical_files_re_targets",
     "test_auto_compaction_bounds_streaming_file_growth",
     "test_replayed_batches_cannot_shrink_the_distinct_reservoir",
     "test_writer_reader_process_tz_drift_stays_exact",
     "test_pairs_within_and_across_batches",
     "test_vacuum_retains_referenced_files",
     "test_replicator_resumes_across_restart",
-    "test_disjoint_race_on_parquet_pointer_layout",
     "test_lag_cycle_accumulation_under_real_trigger",
     "test_cdc_catchup_opens_only_delta_files",
     "test_tz_aware_bound_matches_scan_exactly",
     "test_zone_maps_are_crash_atomic_with_their_snapshot",
     "test_zorder_compaction_prunes_orthogonal_dimensions",
     "test_end_state_is_chunking_independent",
-    "test_bounded_disjoint_race_on_delta_layout",
     "test_delete_paths_skip_cosmetic_bucket_repartition",
     "test_manifest_scale_envelope_at_10k_files",
     # third measurement pass (plans/r15/default_tier_timing3.log)
     "test_cross_protocol_manifest_replica",
     "test_retried_batch_is_idempotent",
-    "test_bounded_overlap_race_raises",
     "test_distinct_bitmap_merges_and_is_replay_safe",
     "test_accumulates_across_batches_and_admits_new_groups",
 }

@@ -1,14 +1,16 @@
-"""Bounded (O(commit)) commits on the parquet-pointer layout
-(operators/commitlog.py ``ManifestLog.commit_bounded``): commits on big
-tables never materialize the carried-forward bucket->files mapping on
+"""Declared commits (operators/commitlog.py ``ManifestLog.commit_bounded``),
+the one publish path of every table write on both manifest layouts:
+commits never materialize the carried-forward bucket->files mapping on
 the driver — deltas publish from commit-local metadata, cadence
-checkpoints are built DISTRIBUTEDLY from (base checkpoint rows minus
-touched buckets) UNION the chain's rows, and OCC races are conflict-
-checked against the intervening DELTA documents' declared bucket sets.
+checkpoints are restated by one builder (DISTRIBUTEDLY from the base
+checkpoint rows minus touched buckets UNION the chain's rows on the
+parquet-pointer layout, by a driver replay of the chain on the inline
+one), and a lost OCC race compares the touched buckets' file lists at
+the base and the latest version.
 
-The materialized ``commit()`` path stays the semantics of record; the
-twin tests here pin that both layouts resolve to byte-identical
-snapshots for the same commit sequence.
+The reference is tests/manifest_model.py, a pure-Python dict replay of
+the declared commits: the model tests here pin that both layouts
+resolve every version to the model's snapshot.
 """
 
 import glob
@@ -17,8 +19,12 @@ from datetime import datetime
 
 import pytest
 
-from quick_stream_spark.operators.commitlog import ManifestLog
+from quick_stream_spark.operators.commitlog import (
+    ConcurrentCommitError,
+    ManifestLog,
+)
 from quick_stream_spark.operators.merge import KeyedTable
+from tests.manifest_model import ModelRecorder
 
 SCHEMA = "pkey long, modified_date timestamp, arrival long, payload string"
 
@@ -63,10 +69,12 @@ def _run_sequence(spark, t):
     t.compact()                                                      # v7
 
 
-def test_bounded_layout_equals_inline_twin(spark, tmp_table_dir):
-    """Same sequence on the inline layout (materialized commits, the
-    semantics of record) and the pointer layout (bounded commits):
-    every version's rows, stats and zones agree."""
+def test_both_layouts_equal_the_model(spark, tmp_table_dir, monkeypatch):
+    """Same sequence on the inline layout and the pointer layout: every
+    version of each log resolves to the reference model's (mapping,
+    stats, zones), and both tables read the same rows at every
+    version."""
+    rec = ModelRecorder(monkeypatch)
     inline = mk(spark, tmp_table_dir, "inline",
                 manifest_parquet_threshold=10**9)
     pointer = mk(spark, tmp_table_dir, "pointer")
@@ -76,35 +84,19 @@ def test_bounded_layout_equals_inline_twin(spark, tmp_table_dir):
     vs_i = inline.snapshot_versions()
     vs_p = pointer.snapshot_versions()
     assert vs_i == vs_p and len(vs_i) == 7
-    log_p = pointer._log
-    log_i = inline._log
-    # the pointer table's non-cadence commits are DELTA documents; its
-    # cadence commits are parquet pointers (never inline JSON bodies)
-    for v in vs_p:
-        raw = log_p._read_doc(v)
-        if v % 3 == 0 or v == 1:
-            assert "checkpoint_parquet" in raw or v == 1
-        if "delta" not in raw:
-            assert "checkpoint_parquet" in raw
+    # both layouts publish deltas off the cadence; their full documents
+    # are inline JSON bodies and parquet pointers respectively
+    for log, full_key in ((inline._log, "buckets"),
+                          (pointer._log, "checkpoint_parquet")):
+        for v in vs_p:
+            raw = log._read_doc(v)
+            if v % 3 == 0 or v == 1:
+                assert full_key in raw, (v, raw)
+            else:
+                assert "delta" in raw, (v, raw)
+        rec.check(log)
     for v in vs_i:
         assert _state(inline, version=v) == _state(pointer, version=v)
-        si, sp = log_i.read_stats(v), log_p.read_stats(v)
-        assert si == sp
-        zi, zp = log_i.read_zones(v), log_p.read_zones(v)
-        # zones are path-keyed (paths differ per table); compare the
-        # per-bucket multiset of bounds instead
-        def bounds_multiset(log, z, v):
-            m = log.read(v)
-            out = {}
-            for b, fl in m.items():
-                out[int(b)] = sorted(
-                    str(sorted((z or {}).get(p, {}).items())) for p in fl
-                )
-            return out
-        if zi is None or zp is None:
-            assert zi is None and zp is None
-        else:
-            assert bounds_multiset(log_i, zi, v) == bounds_multiset(log_p, zp, v)
     assert inline.count_fast() == pointer.count_fast() == 10
 
 
@@ -159,8 +151,8 @@ def test_bounded_commit_never_resolves_snapshot(spark, tmp_table_dir, monkeypatc
 def test_bounded_disjoint_race_on_delta_layout(spark, tmp_table_dir, monkeypatch):
     """Two bounded writers racing DISJOINT buckets on the delta layout
     (interval high enough that both publishes are deltas): the loser
-    re-targets the next version from the delta documents' declared
-    bucket sets alone — both rows land, no materialized fallback."""
+    finds its touched bucket unchanged since its base and re-targets
+    the next version — both rows land."""
     def mk_t(name="t"):
         return mk(spark, tmp_table_dir, name,
                   manifest_checkpoint_interval=64)
@@ -201,9 +193,7 @@ def test_bounded_disjoint_race_on_delta_layout(spark, tmp_table_dir, monkeypatch
 def test_bounded_overlap_race_raises(spark, tmp_table_dir, monkeypatch):
     """Two bounded writers racing the SAME bucket: the loser must raise
     ``ConcurrentCommitError`` (its merge resolved against stale bucket
-    state) — detected from the winner's DELTA document alone."""
-    from quick_stream_spark.operators.commitlog import ConcurrentCommitError
-
+    state): the bucket's file list changed since the loser's base."""
     def mk_t():
         return mk(spark, tmp_table_dir, "t",
                   manifest_checkpoint_interval=64)
@@ -294,17 +284,27 @@ def test_cadence_checkpoint_with_uncovered_file_stays_lost(spark, tmp_table_dir)
     assert log.read(v2) == {0: ["f0b"], 1: ["f1"]}
 
 
-def test_bounded_fallback_on_inline_layout(spark, tmp_table_dir):
-    """commit_bounded declines (returns None) on an inline-JSON base —
-    small tables keep the materialized path and its pre-publish replay
-    gate."""
+def test_inline_base_publishes_a_delta(spark, tmp_table_dir):
+    """An inline-JSON base takes the same declared path as a pointer
+    base: off the cadence the commit publishes a DELTA document, and the
+    carried bucket keeps its files and stats."""
     log = ManifestLog(
         spark, os.path.join(tmp_table_dir, "t"),
         checkpoint_interval=4, parquet_checkpoint_threshold=10**9,
     )
-    v1 = log.commit({0: ["f0"]}, stats={0: [1, 1]})
-    assert log.commit_bounded({0}, {0: ["f0b"]}, {0: [1, 1]}, None, v1) is None
-    assert log.latest_version() == v1  # nothing published
+    v1 = log.commit({0: ["f0"], 1: ["f1"]}, stats={0: [1, 1], 1: [2, 1]})
+    assert "buckets" in log._read_doc(v1)
+    v2 = log.commit_bounded({0}, {0: ["f0b"]}, {0: [3, 3]}, None, v1)
+    assert v2 == 2
+    raw = log._read_doc(v2)
+    assert raw["delta"]["replaced"] == [0]
+    assert raw["delta"]["added"] == {"0": ["f0b"]}
+    cold = ManifestLog(
+        spark, log.table_path,
+        checkpoint_interval=4, parquet_checkpoint_threshold=10**9,
+    )
+    assert cold.read(v2) == {0: ["f0b"], 1: ["f1"]}
+    assert cold.read_stats(v2) == {0: [3, 3], 1: [2, 1]}
 
 
 def test_bounded_commit_empties_bucket(spark, tmp_table_dir):
@@ -415,14 +415,18 @@ _seq = st.lists(_op, min_size=2, max_size=5)
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(ops=_seq)
-def test_property_bounded_layout_equals_inline(spark, tmp_path_factory, ops):
-    """Property net replacing the pre-publish replay gate on the
-    bounded path: for RANDOM sequences of upsert / soft-delete /
-    hard-delete / compact / restore, the pointer-layout table (bounded O(commit)
-    commits, distributed cadence checkpoints at interval 2 — every
-    other commit crosses the checkpoint builder) resolves to the exact
-    same rows, stats, and per-version states as the inline-layout twin
-    driven by the materialized commit path."""
+def test_property_both_layouts_equal_the_model(spark, tmp_path_factory, ops):
+    """Property net over the one commit path: for RANDOM sequences of
+    upsert / soft-delete / hard-delete / compact / restore, every
+    version of the inline-layout table and of the pointer-layout table
+    (cadence checkpoints at interval 2 — every other commit crosses the
+    checkpoint builder) resolves to the reference model's (mapping,
+    stats, zones), and the two tables read the same rows."""
+    with pytest.MonkeyPatch.context() as mp:
+        _property_sequence(spark, tmp_path_factory, ModelRecorder(mp), ops)
+
+
+def _property_sequence(spark, tmp_path_factory, rec, ops):
     from datetime import timedelta
 
     work = tmp_path_factory.mktemp("bprop")
@@ -461,9 +465,9 @@ def test_property_bounded_layout_equals_inline(spark, tmp_path_factory, ops):
             elif op == "hard":
                 t.hard_delete(b)
             elif op == "restore" and t.exists():
-                # same deterministic earlier target on both twins:
+                # same deterministic earlier target on both tables:
                 # pointer restores ride the distributed chain builder,
-                # inline restores the materialized path
+                # inline restores the driver replay
                 vs = t.snapshot_versions()
                 t.restore(vs[len(records) % len(vs)])
             elif op == "compact" and t.exists():
@@ -474,12 +478,10 @@ def test_property_bounded_layout_equals_inline(spark, tmp_path_factory, ops):
         return
     vs_i, vs_p = inline.snapshot_versions(), pointer.snapshot_versions()
     assert vs_i == vs_p
-    li, lp = inline._log, pointer._log
+    rec.check(inline._log)
+    rec.check(pointer._log)
     for v in vs_i:
         assert _state(inline, version=v) == _state(pointer, version=v)
-        assert li.read_stats(v) == lp.read_stats(v)
-        zi, zp = li.read_zones(v), lp.read_zones(v)
-        assert (zi is None) == (zp is None)
 
 
 def test_history_describes_every_commit(spark, tmp_table_dir):
@@ -562,19 +564,23 @@ def test_restore_is_distributed_on_pointer_layout(spark, tmp_table_dir, monkeypa
     assert reader.count_fast() == reader.read().count()
 
 
-def test_restore_bounded_equals_materialized_restore(spark, tmp_table_dir):
-    """Twin pin: the distributed restore and the materialized restore
-    (inline layout) land identical states, stats and history ops for
-    the same sequence."""
+def test_restore_equals_the_model_on_both_layouts(
+    spark, tmp_table_dir, monkeypatch
+):
+    """RESTORE on both layouts (the distributed chain build on the
+    pointer layout, the driver replay on the inline one) lands the
+    reference model's snapshot, the same rows, and a "restore" history
+    op."""
+    rec = ModelRecorder(monkeypatch)
     ti = mk(spark, tmp_table_dir, "ri", manifest_parquet_threshold=10**9)
     tp = mk(spark, tmp_table_dir, "rp")
     _run_sequence(spark, ti)
     _run_sequence(spark, tp)
     vi, vp = ti.restore(3), tp.restore(3)
     assert vi == vp == 8
-    assert _state(ti) == _state(tp)
-    li, lp = ti._log, tp._log
-    assert li.read_stats(vi) == lp.read_stats(vp)
+    rec.check(ti._log)
+    rec.check(tp._log)
+    assert _state(ti) == _state(tp) == _state(tp, version=3)
     hi = {r.version: r.op for r in ti.history().collect()}
     hp = {r.version: r.op for r in tp.history().collect()}
     assert hi[8] == hp[8] == "restore"
@@ -582,12 +588,13 @@ def test_restore_bounded_equals_materialized_restore(spark, tmp_table_dir):
 
 def test_seed_checkpoint_on_first_crossing_is_bounded(spark, tmp_table_dir, monkeypatch):
     """First parquet-threshold crossing of an INLINE table (r11 verdict
-    ask #2): the seed checkpoint is built inside ``commit_bounded``
-    from the raw head document + O(chain) deltas — no ``_snapshot`` /
-    ``_load_parquet_checkpoint`` call (parsing the inline head itself
-    is inherent: it is a driver-side JSON bounded by the threshold by
-    construction), and subsequent commits ride the bounded pointer
-    path."""
+    ask #2): the cadence checkpoint's driver replay of the raw head
+    document + O(chain) deltas reaches the threshold, so the one
+    checkpoint builder writes the first parquet checkpoint — no
+    ``_snapshot`` / ``_load_parquet_checkpoint`` call (parsing the
+    inline head itself is inherent: it is a driver-side JSON bounded by
+    the threshold by construction), and subsequent commits ride the
+    pointer layout."""
     t = mk(spark, tmp_table_dir, "ts", manifest_parquet_threshold=5)
     t.upsert(df(spark, SEED))                                      # v1 inline
     t.upsert(df(spark, [(1, datetime(2024, 3, 1), 20, "a2")]))     # v2 delta
@@ -620,7 +627,7 @@ def test_seed_checkpoint_on_first_crossing_is_bounded(spark, tmp_table_dir, monk
     monkeypatch.setattr(ManifestLog, "commit_bounded", cb_spy)
     t.compact(target_files_per_bucket=2)  # v3 (cadence): crosses threshold
     t.upsert(df(spark, [(2, datetime(2024, 3, 2), 21, "b2")]))     # v4 delta
-    assert results == [3, 4], results  # seed + bounded delta, no fallback
+    assert results == [3, 4], results  # seed checkpoint + delta
     assert calls == [], f"seed crossing materialized a snapshot: {calls}"
     raw3 = log._read_doc(3)
     assert "checkpoint_parquet" in raw3 and raw3.get("op") == "compact"
@@ -635,11 +642,11 @@ def test_seed_checkpoint_on_first_crossing_is_bounded(spark, tmp_table_dir, monk
 def test_overlap_race_with_identical_files_re_targets(spark, tmp_table_dir, monkeypatch):
     """A racing winner that DECLARED a bucket but left its file list
     identical to the base state (delta restating the same files) is
-    not a real conflict: the loser compares declared lists against the
-    base buckets (one bounded fetch) and re-targets instead of raising
-    (ADVICE r11 on commit_bounded's stricter-than-commit() check)."""
+    not a real conflict: the loser compares the touched buckets' lists
+    at its base and at the latest version and re-targets instead of
+    raising."""
     t = mk(spark, tmp_table_dir, "t")
-    _run_sequence(spark, t)  # pointer layout, 7 versions
+    t.upsert(df(spark, SEED))  # pointer layout, v1
     log = t._log
     base_v = log.latest_version()
     bucket_of_1 = next(
@@ -678,6 +685,41 @@ def test_overlap_race_with_identical_files_re_targets(spark, tmp_table_dir, monk
     assert {r.pkey: r.payload for r in reader.read().collect()}[1] == "a-post"
     rlog = reader._log
     assert rlog.latest_version() == base_v + 2  # winner + re-targeted loser
+
+
+@pytest.mark.parametrize("threshold", [10**9, 0], ids=["inline", "pointer"])
+def test_lost_race_over_a_checkpoint_window(spark, tmp_table_dir, threshold):
+    """A lost race whose window holds a FULL document (the winner's
+    cadence checkpoint): a loser whose bucket the winner did not touch
+    re-targets the next version and both commits land, with stats and
+    zones carried through the checkpoint; a loser whose bucket the
+    winner replaced raises ``ConcurrentCommitError``."""
+    log = ManifestLog(
+        spark, os.path.join(tmp_table_dir, "t"),
+        checkpoint_interval=2, parquet_checkpoint_threshold=threshold,
+    )
+    z = {"ts": ["2024-01-01T00:00:00", "2024-01-31T00:00:00"]}
+    base = log.commit(
+        {0: ["f0"], 1: ["f1"]}, stats={0: [1, 1], 1: [2, 2]},
+        zones={"f0": z, "f1": z},
+    )
+    # the winner replaces bucket 1; v2 is a cadence checkpoint
+    assert log.commit_bounded({1}, {1: ["f1b"]}, {1: [3, 3]}, {"f1b": z}, base) == 2
+    assert "delta" not in log._read_doc(2)
+    # disjoint loser from the same base: re-targets v3 (a delta)
+    assert log.commit_bounded({0}, {0: ["f0b"]}, {0: [4, 4]}, {"f0b": z}, base) == 3
+    assert "delta" in log._read_doc(3)
+    cold = ManifestLog(
+        spark, log.table_path,
+        checkpoint_interval=2, parquet_checkpoint_threshold=threshold,
+    )
+    assert cold.read(3) == {0: ["f0b"], 1: ["f1b"]}
+    assert cold.read_stats(3) == {0: [4, 4], 1: [3, 3]}
+    assert cold.read_zones(3) == {"f0b": z, "f1b": z}
+    # overlapping loser from the same base: bucket 1 changed since
+    with pytest.raises(ConcurrentCommitError, match=r"conflict on buckets \[1\]"):
+        log.commit_bounded({1}, {1: ["f1c"]}, {1: [5, 5]}, {"f1c": z}, base)
+    assert log.versions() == [1, 2, 3]
 
 
 def test_history_row_count_deltas(spark, tmp_table_dir):
@@ -936,9 +978,9 @@ def test_rebucket_on_pointer_layout(spark, tmp_table_dir):
 
 def test_cdc_reads_on_pointer_layout(spark, tmp_table_dir):
     """The CDC surface composed with bounded commits: `read_changes`
-    over a delta-document range answers exactly the inline twin's
-    change set (the semantics of record — a collapsed endpoint diff
-    tagged with the `to` version), and a `ChangeReplicator` follows a
+    over a delta-document range answers exactly the inline-layout
+    table's change set (a collapsed endpoint diff tagged with the `to`
+    version), and a `ChangeReplicator` follows a
     pointer-layout source to convergence commit-by-commit, across the
     cadence checkpoint and a compaction no-op delta."""
     from quick_stream_spark.operators.replicate import ChangeReplicator

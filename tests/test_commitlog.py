@@ -169,23 +169,23 @@ def _race(spark, tmp_table_dir, monkeypatch, other_batch):
     t = _mk_occ(spark, tmp_table_dir)
     t.upsert(df(spark, _OCC_SEED))
 
-    real_try = ManifestLog._try_publish
+    real_put = ManifestLog._put_if_absent
     state = {"injected": False}
 
-    def racing(self, mapping, stats, version, **kw):
+    def racing(self, body, version):
         if not state["injected"]:
             state["injected"] = True
             other = _mk_occ(spark, tmp_table_dir)
             other.upsert(df(spark, other_batch))
-        return real_try(self, mapping, stats, version, **kw)
+        return real_put(self, body, version)
 
-    monkeypatch.setattr(ManifestLog, "_try_publish", racing)
+    monkeypatch.setattr(ManifestLog, "_put_if_absent", racing)
     err = None
     try:
         t.upsert(df(spark, [(1, datetime(2024, 3, 1), 10, "a-A")]))
     except Exception as exc:  # noqa: BLE001
         err = exc
-    monkeypatch.setattr(ManifestLog, "_try_publish", real_try)
+    monkeypatch.setattr(ManifestLog, "_put_if_absent", real_put)
     return t, err
 
 
@@ -456,9 +456,8 @@ def test_disjoint_race_on_parquet_pointer_layout(
     buckets = _bucket_of(t)
     other_key = next(k for k, b in buckets.items() if b != buckets[1])
 
-    # inject at the publish PRIMITIVE (_put_if_absent) — the point both
-    # commit layouts (materialized _try_publish and the r11 bounded
-    # path) funnel through, so the race fires regardless of layout
+    # inject at the publish PRIMITIVE (_put_if_absent) — the point every
+    # publish funnels through, delta or checkpoint alike
     real_put = ManifestLog._put_if_absent
     state = {"injected": False}
 

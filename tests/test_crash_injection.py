@@ -54,15 +54,15 @@ def test_crash_between_data_write_and_manifest_publish(spark, tmp_table_dir, mon
     pre_checksum = t.content_checksum()
     pre_versions = t.snapshot_versions()
 
-    real_commit = ManifestLog.commit
+    real_commit = ManifestLog.commit_bounded
 
-    def crash(self, mapping, stats=None, **kw):
+    def crash(self, *a, **kw):
         raise _InjectedCrash("injected: process died before manifest publish")
 
-    monkeypatch.setattr(ManifestLog, "commit", crash)
+    monkeypatch.setattr(ManifestLog, "commit_bounded", crash)
     with pytest.raises(_InjectedCrash):
         t.upsert(_batch(spark, [(2, 2, 4, "b2"), (4, 2, 5, "d1")]))
-    monkeypatch.setattr(ManifestLog, "commit", real_commit)
+    monkeypatch.setattr(ManifestLog, "commit_bounded", real_commit)
 
     # a separate reader instance (no shared caches with the writer)
     reader = _table(spark, tmp_table_dir)
@@ -123,15 +123,15 @@ def test_double_crash_then_retry_still_converges(spark, tmp_table_dir, monkeypat
     t = _table(spark, tmp_table_dir)
     t.upsert(_batch(spark, [(1, 1, 1, "a1"), (2, 1, 2, "b1")]))
 
-    def crash(self, mapping, stats=None, **kw):
+    def crash(self, *a, **kw):
         raise _InjectedCrash("injected")
 
-    real_commit = ManifestLog.commit
+    real_commit = ManifestLog.commit_bounded
     for _ in range(2):
-        monkeypatch.setattr(ManifestLog, "commit", crash)
+        monkeypatch.setattr(ManifestLog, "commit_bounded", crash)
         with pytest.raises(_InjectedCrash):
             t.upsert(_batch(spark, [(1, 3, 9, "a3")]))
-        monkeypatch.setattr(ManifestLog, "commit", real_commit)
+        monkeypatch.setattr(ManifestLog, "commit_bounded", real_commit)
 
     retry = _table(spark, tmp_table_dir)
     retry.upsert(_batch(spark, [(1, 3, 9, "a3")]))
@@ -163,19 +163,19 @@ def test_crash_during_streaming_merge_then_resume(spark, tmp_table_dir, monkeypa
         buffer_size=1,  # one delivery file per micro-batch
     )
 
-    real_commit = ManifestLog.commit
+    real_commit = ManifestLog.commit_bounded
     calls = {"n": 0}
 
-    def crash_on_second(self, mapping, stats=None, **kw):
+    def crash_on_second(self, *a, **kw):
         calls["n"] += 1
         if calls["n"] == 2:
             raise _InjectedCrash("injected mid-stream")
-        return real_commit(self, mapping, stats=stats, **kw)
+        return real_commit(self, *a, **kw)
 
-    monkeypatch.setattr(ManifestLog, "commit", crash_on_second)
+    monkeypatch.setattr(ManifestLog, "commit_bounded", crash_on_second)
     with pytest.raises(Exception):  # StreamingQueryException wrapping the crash
         _run_stream(spark, t, src, batches[0].schema, cfg)
-    monkeypatch.setattr(ManifestLog, "commit", real_commit)
+    monkeypatch.setattr(ManifestLog, "commit_bounded", real_commit)
 
     # mid-crash visibility: only batch 1 landed
     reader = _table(spark, tmp_table_dir)
@@ -388,15 +388,15 @@ def test_matview_publish_crash_then_epoch_retry_does_not_double_count(
 
     view.apply_batch(b([("a", 1.0), ("b", 2.0)]), 0)
 
-    real_commit = ManifestLog.commit
+    real_commit = ManifestLog.commit_bounded
 
-    def crash(self, mapping, stats=None, **kw):
+    def crash(self, *a, **kw):
         raise _InjectedCrash("injected")
 
-    monkeypatch.setattr(ManifestLog, "commit", crash)
+    monkeypatch.setattr(ManifestLog, "commit_bounded", crash)
     with pytest.raises(_InjectedCrash):
         view.apply_batch(b([("a", 10.0), ("c", 5.0)]), 1)
-    monkeypatch.setattr(ManifestLog, "commit", real_commit)
+    monkeypatch.setattr(ManifestLog, "commit_bounded", real_commit)
 
     # crashed attempt invisible
     assert {r.g: (r.n, r.sum_value) for r in view.read().collect()} == {
@@ -438,15 +438,15 @@ def test_zone_maps_are_crash_atomic_with_their_snapshot(
     z_before = log.read_zones()
     cut = datetime(2024, 1, 10)
 
-    real_commit = ManifestLog.commit
+    real_commit = ManifestLog.commit_bounded
 
-    def crash(self, mapping, stats=None, **kw):
+    def crash(self, *a, **kw):
         raise _InjectedCrash("injected before zone-bearing publish")
 
-    monkeypatch.setattr(ManifestLog, "commit", crash)
+    monkeypatch.setattr(ManifestLog, "commit_bounded", crash)
     with pytest.raises(_InjectedCrash):
         t.upsert(_batch(spark, [(2, 20, 3, "b2")]), newer_wins=True)
-    monkeypatch.setattr(ManifestLog, "commit", real_commit)
+    monkeypatch.setattr(ManifestLog, "commit_bounded", real_commit)
 
     # readers: pre-merge zones, pre-merge pruning, pre-merge answers
     assert log.read_zones() == z_before
@@ -506,3 +506,67 @@ def test_applied_watermark_survives_crash_before_rename(
     # re-publishing the current watermark (a retried apply) is a no-op
     progress.write_applied(spark, path, 4)
     assert progress.read_applied(spark, path) == 4
+
+
+def test_crash_after_cadence_checkpoint_write_before_pointer_publish(
+    spark, tmp_table_dir, monkeypatch
+):
+    """The checkpoint builder writes a cadence checkpoint's parquet
+    directory BEFORE the pointer document publishes.  Kill the writer
+    between the two: readers stay on the previous version, a retry
+    lands the checkpoint, and vacuum reclaims the orphan ``cp-v*``
+    directory."""
+    import glob
+
+    def table():
+        return KeyedTable(
+            spark,
+            os.path.join(tmp_table_dir, "cp"),
+            keys=("pkey",),
+            version_col="modified_date",
+            arrival_col="arrival",
+            num_buckets=4,
+            commit_protocol="manifest",
+            manifest_checkpoint_interval=2,
+            manifest_parquet_threshold=0,
+        )
+
+    t = table()
+    t.upsert(_batch(spark, [(1, 1, 1, "a1"), (2, 1, 2, "b1")]))  # v1
+    log = t._log
+
+    def cp_dirs():
+        return {
+            os.path.basename(p) for p in glob.glob(os.path.join(log.dir, "cp-*"))
+        }
+
+    before = cp_dirs()
+    real_put = ManifestLog._put_if_absent
+
+    def crash(self, body, version):
+        raise _InjectedCrash("injected: process died before pointer publish")
+
+    monkeypatch.setattr(ManifestLog, "_put_if_absent", crash)
+    with pytest.raises(_InjectedCrash):
+        t.upsert(_batch(spark, [(2, 2, 3, "b2")]))  # v2: cadence
+    monkeypatch.setattr(ManifestLog, "_put_if_absent", real_put)
+    orphans = cp_dirs() - before
+    assert len(orphans) == 1 and next(iter(orphans)).startswith("cp-v2-")
+
+    reader = table()
+    assert reader.snapshot_versions() == [1]
+    assert {r.pkey: r.payload for r in reader.read().collect()} == {1: "a1", 2: "b1"}
+    assert reader.count_fast() == 2
+
+    retry = table()
+    retry.upsert(_batch(spark, [(2, 2, 3, "b2")]))
+    assert retry.snapshot_versions() == [1, 2]
+    assert "checkpoint_parquet" in retry._log._read_doc(2)
+    end = {1: "a1", 2: "b2"}
+    assert {r.pkey: r.payload for r in retry.read().collect()} == end
+
+    retry.vacuum(keep_versions=1)
+    live = {retry._log._read_doc(2)["checkpoint_parquet"]}
+    assert cp_dirs() == live and not orphans & live
+    assert {r.pkey: r.payload for r in table().read().collect()} == end
+    assert table().count_fast() == 2

@@ -79,16 +79,21 @@ def test_manifest_scale_envelope_at_10k_files(spark, tmp_table_dir):
         s = log.read_stats(base)
         z = log.read_zones(base)
         touched = {(2 * i) % N_BUCKETS, (2 * i + 1) % N_BUCKETS}
+        new_files, new_zones = {}, {}
         for b in touched:
             for p in m[b]:
                 z.pop(p, None)
             newp = f"_qss_commits/cinc{i:03d}/__qss_bucket={b}/part-0.parquet"
-            m[b] = [newp]
+            m[b] = new_files[b] = [newp]
             s[b] = [10, 9]
-            z[newp] = {"ts": ["2024-02-01T00:00:00", "2024-02-01T23:59:59"],
-                       "uid": [0, 99]}
+            z[newp] = new_zones[newp] = {
+                "ts": ["2024-02-01T00:00:00", "2024-02-01T23:59:59"],
+                "uid": [0, 99],
+            }
         t0 = time.monotonic()
-        v = log.commit(m, stats=s, touched=touched, base_version=base, zones=z)
+        v = log.commit_bounded(
+            touched, new_files, {b: s[b] for b in touched}, new_zones, base
+        )
         wall = time.monotonic() - t0
         raw = log._read_doc(v)
         if v % log.checkpoint_interval == 0:
@@ -163,9 +168,10 @@ def test_checkpoint_cadence_bounds_chains(spark, tmp_table_dir):
     v = log.commit(mapping, stats={0: [1, 1]})
     for i in range(1, 9):
         base = log.latest_version()
-        m = log.read(base)
-        m[0] = [f"_qss_commits/c{i}/__qss_bucket=0/p.parquet"]
-        v = log.commit(m, stats={0: [1, 1]}, touched={0}, base_version=base)
+        v = log.commit_bounded(
+            {0}, {0: [f"_qss_commits/c{i}/__qss_bucket=0/p.parquet"]},
+            {0: [1, 1]}, None, base,
+        )
     kinds = ["full" if "buckets" in log._read_doc(x) else "delta"
              for x in log.versions()]
     # v1 full (creating), v4 and v8 full (cadence), rest deltas
@@ -174,10 +180,10 @@ def test_checkpoint_cadence_bounds_chains(spark, tmp_table_dir):
 
     legacy = ManifestLog(spark, os.path.join(tmp_table_dir, "b"), checkpoint_interval=1)
     legacy.commit(mapping, stats={0: [1, 1]})
-    base = legacy.latest_version()
-    m = legacy.read(base)
-    m[0] = ["_qss_commits/c9/__qss_bucket=0/p.parquet"]
-    legacy.commit(m, stats={0: [1, 1]}, touched={0}, base_version=base)
+    legacy.commit_bounded(
+        {0}, {0: ["_qss_commits/c9/__qss_bucket=0/p.parquet"]},
+        {0: [1, 1]}, None, legacy.latest_version(),
+    )
     assert all("buckets" in legacy._read_doc(x) for x in legacy.versions())
 
 
@@ -285,7 +291,7 @@ def test_delta_commit_cost_independent_of_table_size(spark, tmp_table_dir):
         s[0] = [10, 9]
         z[newp] = {"ts": ["2024-02-01T00:00:00", "2024-02-01T23:59:59"],
                    "uid": [0, 99]}
-        v = log.commit(m, stats=s, touched={0}, base_version=base, zones=z)
+        v = log.commit_bounded({0}, {0: [newp]}, {0: s[0]}, {newp: z[newp]}, base)
         delta = os.path.getsize(os.path.join(log.dir, f"v{v}.json"))
         n_files = sum(len(fl) for fl in m.values())
         sizes[label] = (n_files, ckpt, delta)
@@ -455,7 +461,7 @@ def test_parquet_checkpoint_envelope_at_100k_files(spark, tmp_table_dir):
     s[0] = [10, 9]
     z[newp] = {"ts": ["2024-02-01T00:00:00", "2024-02-01T23:59:59"],
                "uid": [0, 99]}
-    v2 = log.commit(m, stats=s, touched={0}, base_version=base, zones=z)
+    v2 = log.commit_bounded({0}, {0: [newp]}, {0: s[0]}, {newp: z[newp]}, base)
     assert "delta" in log._read_doc(v2)
 
     # planning OFF the driver's critical path: a fresh instance prunes

@@ -209,19 +209,16 @@ def test_occ_disjoint_race_rebases_zones(spark, tmp_table_dir):
         zones={"f0": {"c": [0, 9]}, "f1": {"c": [10, 19]}},
     )
     # writer A wins bucket 0 (replaces f0 with f0b)
-    log.commit(
-        {0: ["f0b"], 1: ["f1"]}, stats={0: [2, 2], 1: [1, 1]},
-        zones={"f0b": {"c": [0, 99]}, "f1": {"c": [10, 19]}},
-        touched={0}, base_version=base_v,
+    log.commit_bounded(
+        {0}, {0: ["f0b"]}, {0: [2, 2]}, {"f0b": {"c": [0, 99]}}, base_v
     )
     # writer B raced on bucket 1 from the same base and lost the rename
-    log.commit(
-        {0: ["f0"], 1: ["f1b"]}, stats={0: [1, 1], 1: [3, 3]},
-        zones={"f0": {"c": [0, 9]}, "f1b": {"c": [10, 500]}},
-        touched={1}, base_version=base_v,
+    log.commit_bounded(
+        {1}, {1: ["f1b"]}, {1: [3, 3]}, {"f1b": {"c": [10, 500]}}, base_v
     )
     final = log.read_zones()
     assert final == {"f0b": {"c": [0, 99]}, "f1b": {"c": [10, 500]}}
+    assert log.read_stats() == {0: [2, 2], 1: [3, 3]}
 
 
 def test_zone_value_and_overlap_semantics():
