@@ -1727,9 +1727,10 @@ class ManifestLog:
             fs, Path = self._hfs()
             fs.mkdirs(Path(self.dir))
         version = (base_version or 0) + 1
+        provenance = self._op_fields(op)
         base_lists = None
         for _ in range(self._PUBLISH_ATTEMPTS):
-            ours = {"version": version, "delta": delta, **self._op_fields(op)}
+            ours = {"version": version, "delta": delta, **provenance}
             if delta.get("zones"):
                 ours["zone_tz"] = "UTC"
             if version == 1 or version % self.checkpoint_interval == 0:
@@ -1739,7 +1740,7 @@ class ManifestLog:
                     else (None, [])
                 )
                 body, cp_name = self._checkpoint(
-                    head, prior + [ours], version, self._op_fields(op)
+                    head, prior + [ours], version, provenance
                 )
             else:
                 body, cp_name = json.dumps(ours).encode("utf-8"), None
